@@ -1,7 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry(spark)    — flagship CDC replay on a deterministic synthetic changelog
-                  (engine path: normalize -> salted LWW -> manifest MERGE),
+                  (engine path: normalize -> LWW, window or ordkey as
+                  apply_batch's _resolve_lww_mode picks -> manifest MERGE),
                   returning per-repo final-state stats + content checksums.
 queries()       — one entry per implemented operator from SURVEY.md §2
                   (catalog: vuln_datasync_spark/plans/queries.py).

@@ -5,7 +5,11 @@ import json
 from pyspark.sql import functions as F
 
 from vuln_datasync_spark import cli
-from vuln_datasync_spark.datagen import generate_changelog_pandas, write_changelog
+from vuln_datasync_spark.datagen import (
+    generate_changelog_pandas,
+    generate_changelog_spark,
+    write_changelog,
+)
 from vuln_datasync_spark.sinks.manifest_table import ManifestTable
 from vuln_datasync_spark.streaming.pipeline import apply_batch
 
@@ -49,6 +53,11 @@ def test_cli_synth_and_stream(spark, tmp_path, capsys, monkeypatch):
     ) == 0
     t = ManifestTable(spark, tbl)
     assert t.read().count() > 0
+
+    # distinct key indices are distinct keys: the log is not capped at the
+    # 3000 combinations of the modular repo/path parts
+    ev = generate_changelog_spark(spark, 12000, n_keys=12000)
+    assert ev.select("repo", "path").distinct().count() > 3000
 
 
 def test_expire_tombstones_and_snapshots(spark, tmp_path):

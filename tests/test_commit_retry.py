@@ -1,9 +1,11 @@
 """Optimistic-commit retry on merge: a losing writer must re-merge
 against the winner's snapshot (no lost update), stay exactly-once when
 the racing writer committed the SAME epoch, clean up its orphaned
-attempt files, and still raise when retries are exhausted."""
+attempt files, and still raise when retries are exhausted. Maintenance
+rewrites do not retry, but a lost race must leave no orphan files."""
 
 import glob
+import json
 import os
 
 import pytest
@@ -129,3 +131,48 @@ def test_retries_exhausted_raises(spark, tmp_path):
     with pytest.raises(CommitConflict):
         a.merge(winners, "wA", 0, max_commit_retries=1)
     assert counter["n"] == 2  # initial attempt + one retry
+
+
+def _deletes(seqs):
+    """Tombstones for the keys ``_rows(seqs)`` inserted, sequenced later."""
+    return [
+        (100 + s, "delete", f"r{s % 5}", f"f{s}.py", f"d{s}", None, None, None, None)
+        for s in seqs
+    ]
+
+
+_MAINTENANCE = {
+    "expire_tombstones": ("cow", lambda t: t.expire_tombstones(below_seq=10**9)),
+    "compact_logs": ("mor", lambda t: t.compact_logs()),
+    "rebucket": ("cow", lambda t: t.rebucket(8)),
+    "cluster": ("cow", lambda t: t.cluster(sort_by=["commit_seq"])),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_MAINTENANCE))
+def test_maintenance_conflict_leaves_no_orphan_snapshot(spark, tmp_path, op):
+    merge_mode, run = _MAINTENANCE[op]
+    root = str(tmp_path / "t")
+    a = ManifestTable.create(spark, root, n_buckets=4, merge_mode=merge_mode)
+    _apply(spark, a, _rows(range(1, 11)), "base", 0)
+    # tombstones to expire; on the mor table these land as log files
+    _apply(spark, a, _deletes(range(1, 4)), "base", 1)
+    b = ManifestTable(spark, root)
+
+    state = _inject_racer(
+        a, lambda: _apply(spark, b, _rows(range(501, 504)), "wB", 0)
+    )
+    with pytest.raises(CommitConflict):
+        run(a)
+    assert state["done"]
+
+    referenced = set()
+    for mp in glob.glob(os.path.join(root, "_manifests", "*.json")):
+        with open(mp) as f:
+            m = json.load(f)
+        for paths in list(m["files"].values()) + list(m["logs"].values()):
+            referenced.update(p.split(os.sep)[1] for p in paths)
+    on_disk = {
+        os.path.basename(d) for d in glob.glob(os.path.join(root, "data", "snap-*"))
+    }
+    assert on_disk and on_disk <= referenced

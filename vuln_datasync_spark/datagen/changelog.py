@@ -240,11 +240,13 @@ def generate_changelog_spark(
     ext = F.element_at(
         F.array(*[F.lit(e) for e in EXTS]), (F.col("key_idx") % 6 + 1).cast("int")
     )
+    # key_idx itself is in the path, so distinct indices are distinct
+    # (repo, path) keys; the modular parts only spread keys over dirs
     df = df.withColumn(
         "path",
         F.concat(
             F.lit("src/d"), (F.col("key_idx") % 50).cast("string"),
-            F.lit("/f"), (F.col("key_idx") % 1000).cast("string"),
+            F.lit("/f"), F.col("key_idx").cast("string"),
             F.lit("."), ext,
         ),
     )

@@ -122,16 +122,13 @@ def learn_bpe(
 
         # localCheckpoint per iteration: keeps the plan flat (no k-deep
         # UDF lineage) and the data is vocabulary-scale, not corpus-scale.
-        # The PREVIOUS generation's checkpoint blocks are released as soon
-        # as the new one is materialized (eager=True) — without the
-        # unpersist, up to n_merges cached generations pile up in the
-        # block manager until the ContextCleaner happens to run.
-        prev = words
+        # A superseded generation's checkpoint blocks stay in the block
+        # manager until the ContextCleaner collects its unreferenced RDD;
+        # DataFrame.rdd would build a new, never-persisted RDD, so there is
+        # no handle here that could release them earlier.
         words = words.mapInPandas(
             apply_one, schema="symbols array<string>, n long"
         ).localCheckpoint(eager=True)
-        prev.rdd.unpersist()  # every generation (incl. pre-loop) is
-        # a localCheckpoint, so prev always holds droppable blocks
     return merges
 
 

@@ -51,6 +51,16 @@ def set_job_pool(spark: SparkSession, pool: str) -> None:
     )
 
 
+def _default_heap() -> str:
+    """Driver heap when SPARK_GRAFT_DRIVER_MEM is unset: a quarter of
+    physical RAM, at least 1g and at most 16g. The heap is pre-touched
+    (-Xms = -Xmx), so a fixed size larger than the host kills the JVM at
+    start-up; larger heaps were also measured 2-3x slower on this workload
+    (GC young-gen scaling + page-zeroing)."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16, max(1, ram // 4 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "vuln_datasync_spark",
     master: str | None = None,
@@ -84,6 +94,7 @@ def get_spark(
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if local_dir is None and os.path.isdir("/dev/shm"):
         local_dir = "/dev/shm/spark-local"
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_heap()
 
     conf = {
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
@@ -117,10 +128,11 @@ def get_spark(
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.parquet.compression.codec": "zstd",
         "spark.ui.enabled": "false",
-        # NOT larger: oversized heaps measured 2-3x slower on this workload
-        # (GC young-gen scaling + page-zeroing); 16g comfortably fits the
-        # bench working set while keeping GC pauses short
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        # iterative operators (alias components, corpus prep) build plans
+        # whose rendered text -- produced for every AQE re-plan even with
+        # the UI off -- outgrows a small driver heap; keep it bounded
+        "spark.sql.maxPlanStringLength": "1m",
+        "spark.driver.memory": driver_mem,
         # This microVM serializes concurrent page faults catastrophically
         # (measured: fresh-page memcpy 112 GB/s at 4 workers -> 2 GB/s at
         # 16; steady-state after pre-fault scales to 733 GB/s at 32).
@@ -128,8 +140,7 @@ def get_spark(
         # out of query execution.
         "spark.driver.extraJavaOptions": os.environ.get(
             "SPARK_GRAFT_DRIVER_JAVA_OPTS",
-            f"-Xms{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '16g')} "
-            "-XX:+AlwaysPreTouch",
+            f"-Xms{driver_mem} -XX:+AlwaysPreTouch",
         ),
         # file-source streaming + dynamic partition overwrite defaults
         "spark.sql.sources.partitionOverwriteMode": "dynamic",

@@ -31,6 +31,18 @@ commit semantics the engine would get from ``MERGE INTO`` on Iceberg
   additive migration /root/reference/migrations/002_fix_nullable_summary
   .up.sql:1-6).
 
+One commit protocol serves every writer (merge, no-op epochs, ALTER,
+rollback and the maintenance rewrites). ``_write_snapshot`` writes the
+rewritten buckets under ``data/snap-<sid>/bucket=<b>/`` and reads back
+their stats. ``_commit_snapshot`` builds the next manifest from a base (the
+parent; the target for ``rollback``): the caller names the keys it changes,
+and every other key — files, MOR logs, stats, schema, schema log, applied
+epochs, bucket count — carries forward unchanged, so each manifest is
+complete as written. It then swaps the pointer against the expected parent.
+A commit that loses the race removes its own ``data/snap-<sid>/`` before
+re-raising ``CommitConflict``, so a failed attempt leaves no orphan files;
+only ``merge`` retries, the other writers surface the conflict.
+
 On a real cluster the file listing/IO below would go through the Hadoop
 FileSystem API; local-mode uses the posix filesystem directly.
 """
@@ -45,6 +57,7 @@ import re
 import shutil
 import time
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,6 +71,16 @@ logger = logging.getLogger("vuln_datasync_spark.manifest_table")
 class CommitConflict(RuntimeError):
     """Optimistic commit refused: the table's current snapshot moved
     between plan and pointer swap (another writer committed first)."""
+
+
+class _Snapshot(NamedTuple):
+    """What one ``_write_snapshot`` produced: the snapshot id, the new
+    files per bucket (manifest-relative, sorted) and their stats."""
+
+    sid: str
+    files: dict
+    bucket_meta: dict
+    file_meta: dict
 
 
 KEY_COLS = ("repo", "path")
@@ -202,14 +225,16 @@ class ManifestTable:
             )
         return cls(spark, root)
 
-    def _layout_meta(self, n_buckets: int) -> dict:
-        return {
+    def _write_layout(self, root: str, n_buckets: int) -> None:
+        """(Re)write the ``_table.json`` bootstrap at ``root``."""
+        layout = {
             "n_buckets": n_buckets,
             "key_cols": list(self.key_cols),
             "write_sort": list(self.write_sort),
             "target_file_rows": self.target_file_rows,
             "merge_mode": self.merge_mode,
         }
+        self._atomic_write(os.path.join(root, "_table.json"), json.dumps(layout))
 
     def _sync_layout(self, m: dict | None) -> None:
         """Adopt the bucket layout of a freshly read manifest. A rebucket
@@ -236,9 +261,34 @@ class ManifestTable:
         except FileNotFoundError:
             return None
 
+    @staticmethod
+    def _atomic_write(path: str, text: str) -> None:
+        """tmp + ``os.replace``: readers see the old or the new content,
+        never a partial write."""
+        with open(path + ".tmp", "w") as f:
+            f.write(text)
+        os.replace(path + ".tmp", path)
+
+    def _manifest_path(self, sid: str) -> str:
+        return os.path.join(self.root, "_manifests", f"{sid}.json")
+
+    @staticmethod
+    def _referenced(m: dict) -> list[str]:
+        """Every data file a manifest references: base files + MOR logs."""
+        return [
+            p
+            for paths in list(m.get("files", {}).values())
+            + list((m.get("logs") or {}).values())
+            for p in paths
+        ]
+
     def current_snapshot_id(self) -> str | None:
         if self.branch is not None:
             return self.refs()["branches"].get(self.branch)
+        return self._main_head()
+
+    def _main_head(self) -> str | None:
+        """The main ``_current`` pointer, whatever branch this handle is on."""
         try:
             with open(os.path.join(self.root, "_current")) as f:
                 return f.read().strip() or None
@@ -253,7 +303,7 @@ class ManifestTable:
         # tag / branch names resolve anywhere a sid goes (tags win on a
         # name collision — they are immutable, so the resolution is stable)
         sid = refs["tags"].get(sid) or refs["branches"].get(sid) or sid
-        return self._read_json(os.path.join(self.root, "_manifests", f"{sid}.json"))
+        return self._read_json(self._manifest_path(sid))
 
     @staticmethod
     def _to_millis(ts) -> int:
@@ -292,10 +342,7 @@ class ManifestTable:
         return r
 
     def _write_refs(self, refs: dict) -> None:
-        p = os.path.join(self.root, "_refs.json")
-        with open(p + ".tmp", "w") as f:
-            json.dump(refs, f)
-        os.replace(p + ".tmp", p)
+        self._atomic_write(os.path.join(self.root, "_refs.json"), json.dumps(refs))
 
     def tag(self, name: str, snapshot_id: str | None = None) -> str:
         """Pin a named, immutable ref to a snapshot (Iceberg tag analog).
@@ -310,9 +357,7 @@ class ManifestTable:
             raise ValueError("no snapshot to tag")
         refs = self.refs()
         sid = refs["tags"].get(sid, sid)
-        if self._read_json(
-            os.path.join(self.root, "_manifests", f"{sid}.json")
-        ) is None:
+        if self._read_json(self._manifest_path(sid)) is None:
             raise ValueError(f"unknown snapshot {sid!r}")
         refs["tags"][name] = sid
         self._write_refs(refs)
@@ -341,9 +386,7 @@ class ManifestTable:
         sid = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
         if sid is not None:
             sid = refs["tags"].get(sid, sid)
-            if self._read_json(
-                os.path.join(self.root, "_manifests", f"{sid}.json")
-            ) is None:
+            if self._read_json(self._manifest_path(sid)) is None:
                 raise ValueError(f"unknown snapshot {sid!r}")
         refs["branches"][name] = sid
         self._write_refs(refs)
@@ -380,37 +423,21 @@ class ManifestTable:
         head = self.refs()["branches"].get(name)
         if head is None:
             raise ValueError(f"branch {name!r} missing or empty")
-        cur = None
-        try:
-            with open(os.path.join(self.root, "_current")) as f:
-                cur = f.read().strip() or None
-        except FileNotFoundError:
-            pass
+        cur = self._main_head()
         if cur is not None:
             # ancestor walk over the branch head's parent chain
-            m = self._read_json(
-                os.path.join(self.root, "_manifests", f"{head}.json")
-            )
+            m = self._read_json(self._manifest_path(head))
             chain = set()
             while m is not None:
                 chain.add(m["snapshot_id"])
                 p = m.get("parent")
-                m = (
-                    self._read_json(
-                        os.path.join(self.root, "_manifests", f"{p}.json")
-                    )
-                    if p
-                    else None
-                )
+                m = self._read_json(self._manifest_path(p)) if p else None
             if cur not in chain:
                 raise CommitConflict(
                     f"main advanced past branch {name!r}'s fork point "
                     f"(current {cur} not an ancestor of head {head})"
                 )
-        curp = os.path.join(self.root, "_current")
-        with open(curp + ".tmp", "w") as f:
-            f.write(head)
-        os.replace(curp + ".tmp", curp)
+        self._atomic_write(os.path.join(self.root, "_current"), head)
         return head
 
     def snapshots(self) -> list[dict]:
@@ -450,35 +477,15 @@ class ManifestTable:
     def _alter_commit(self, new_schema_json, log_entry, file_meta):
         parent = self.current_snapshot_id()
         parent_m = self.manifest(parent)
-        sid = f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
-        lineage = {
-            "snapshot_id": sid,
-            "checkpoint_id": f"alter:{log_entry['op']}",
-            "batch_id": 0,
-            "seq_start": None,
-            "seq_end": None,
-            "rows_applied": 0,
-            "buckets": {},
-            "committed_at": time.strftime(
-                "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-            ),
-        }
-        manifest = {
-            "snapshot_id": sid,
-            "n_buckets": self.n_buckets,
-            "parent": parent,
-            "epoch": f"alter:{sid}",
-            "applied_epochs": sorted(parent_m["applied_epochs"]),
-            "schema": new_schema_json,
-            "files": dict(parent_m["files"]),
-            "bucket_meta": dict(parent_m.get("bucket_meta", {})),
-            "file_meta": file_meta,
-            "schema_log": list(parent_m.get("schema_log", []))
+        sid = self._new_snapshot_id()
+        self._commit_snapshot(
+            parent_m, parent, sid, f"alter:{sid}",
+            lineage=self._lineage(sid, f"alter:{log_entry['op']}"),
+            schema=new_schema_json,
+            file_meta=file_meta,
+            schema_log=list(parent_m.get("schema_log", []))
             + [{**log_entry, "at": int(sid.split("-", 1)[0])}],
-            "lineage": lineage,
-        }
-        self._commit(manifest, expected_parent=parent)
-        self._append_lineage(lineage)
+        )
         return sid
 
     def rename_column(self, old: str, new: str) -> str:
@@ -646,15 +653,6 @@ class ManifestTable:
         if buckets is not None:
             out &= set(buckets)
         return sorted(out)
-
-    @staticmethod
-    def _drop_logs(manifest: dict, buckets) -> dict:
-        """Parent log map minus entries for just-rewritten buckets (their
-        log rows are folded into the new base files)."""
-        logs = dict(manifest.get("logs") or {})
-        for b in buckets:
-            logs.pop(str(b), None)
-        return logs
 
     @classmethod
     def _file_overlaps(cls, meta: dict | None, enc_filters: dict) -> bool:
@@ -940,47 +938,20 @@ class ManifestTable:
         The bucket layout (modulus) also reverts if a ``rebucket``
         happened in between; the next merge's ``_sync_layout`` picks it
         up. Returns the new snapshot id."""
-        r = self.refs()
-        snapshot_id = (
-            r["tags"].get(snapshot_id)
-            or r["branches"].get(snapshot_id)
-            or snapshot_id
-        )
-        target = self.manifest(snapshot_id)
+        target = self.manifest(snapshot_id)  # resolves tag / branch names
         if target is None:
             raise ValueError(f"unknown snapshot {snapshot_id!r}")
+        snapshot_id = target["snapshot_id"]
         parent = self.current_snapshot_id()
         if parent == snapshot_id:
             return parent
-        sid = f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
-        lineage = {
-            "snapshot_id": sid,
-            "checkpoint_id": f"rollback:{snapshot_id}",
-            "batch_id": 0,
-            "seq_start": None,
-            "seq_end": None,
-            "rows_applied": 0,
-            "buckets": {},
-            "committed_at": time.strftime(
-                "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-            ),
-        }
-        manifest = {
-            "snapshot_id": sid,
-            "n_buckets": target.get("n_buckets", self.n_buckets),
-            "parent": parent,
-            "epoch": f"rollback:{snapshot_id}:{sid}",
-            "applied_epochs": sorted(target["applied_epochs"]),
-            "schema": target["schema"],
-            "files": dict(target["files"]),
-            "logs": dict(target.get("logs") or {}),
-            "bucket_meta": dict(target.get("bucket_meta", {})),
-            "file_meta": dict(target.get("file_meta", {})),
-            "schema_log": list(target.get("schema_log", [])),
-            "lineage": lineage,
-        }
-        self._commit(manifest, expected_parent=parent)
-        self._append_lineage(lineage)
+        sid = self._new_snapshot_id()
+        # the TARGET is the base: its file set, logs, stats, schema log and
+        # applied epochs all come back; only the parent link is current
+        manifest = self._commit_snapshot(
+            target, parent, sid, f"rollback:{snapshot_id}:{sid}",
+            lineage=self._lineage(sid, f"rollback:{snapshot_id}"),
+        )
         self.n_buckets = manifest["n_buckets"]
         return sid
 
@@ -1015,37 +986,23 @@ class ManifestTable:
             raise ValueError(f"destination already a table: {dest_root}")
         os.makedirs(os.path.join(dest_root, "_manifests"), exist_ok=True)
         os.makedirs(os.path.join(dest_root, "data"), exist_ok=True)
-        with open(os.path.join(dest_root, "_table.json"), "w") as f:
-            json.dump(
-                self._layout_meta(m.get("n_buckets", self.n_buckets)), f
-            )
-        n_copied = 0
-        for paths in list(m["files"].values()) + list(
-            (m.get("logs") or {}).values()
-        ):
-            for rel in paths:
-                src = os.path.join(self.root, rel)
-                dst = os.path.join(dest_root, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                shutil.copy2(src, dst)
-                n_copied += 1
+        self._write_layout(dest_root, m.get("n_buckets", self.n_buckets))
+        rels = self._referenced(m)
+        for rel in rels:
+            dst = os.path.join(dest_root, rel)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            shutil.copy2(os.path.join(self.root, rel), dst)
         root_m = dict(m)
         root_m["parent"] = None
         root_m["lineage"] = {
             **m.get("lineage", {}),
             "checkpoint_id": f"clone:{self.root}:{m['snapshot_id']}",
         }
-        with open(
-            os.path.join(
-                dest_root, "_manifests", f"{m['snapshot_id']}.json"
-            ),
-            "w",
-        ) as f:
-            json.dump(root_m, f)
-        cur = os.path.join(dest_root, "_current")
-        with open(cur + ".tmp", "w") as f:
-            f.write(m["snapshot_id"])
-        os.replace(cur + ".tmp", cur)
+        self._atomic_write(
+            os.path.join(dest_root, "_manifests", f"{m['snapshot_id']}.json"),
+            json.dumps(root_m),
+        )
+        self._atomic_write(os.path.join(dest_root, "_current"), m["snapshot_id"])
         if include_lineage and os.path.isdir(
             os.path.join(self.root, "_lineage")
         ):
@@ -1058,7 +1015,7 @@ class ManifestTable:
             self.root,
             m["snapshot_id"],
             dest_root,
-            n_copied,
+            len(rels),
         )
         return ManifestTable(self.spark, dest_root)
 
@@ -1364,7 +1321,13 @@ class ManifestTable:
             seq_range = seq_range()
         affected = sorted(bstats)
         if not affected:
-            return self._commit_noop(parent, parent_m, epoch_key, seq_range)
+            # empty batch: a metadata-only commit that records the epoch
+            sid = self._new_snapshot_id()
+            return self._commit_snapshot(
+                parent_m, parent, sid, epoch_key,
+                lineage=self._lineage(sid, checkpoint_id, batch_id, seq_range),
+                applied_epochs=sorted(applied | {epoch_key}),
+            )["lineage"]
 
         # schema reconciliation (column-add / widen) BEFORE the merge
         batch_schema = T.StructType(
@@ -1427,40 +1390,25 @@ class ManifestTable:
                     key_cols=self.key_cols,
                 )
         merged = merged.withColumn("_bucket", self.bucket_expr())
-
-        sid = f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
-        snap_rel = os.path.join("data", f"snap-{sid}")
-        snap_dir = os.path.join(self.root, snap_rel)
-        self._write_bucketed(
-            merged, snap_dir, len(affected),
-            self.write_sort, self.target_file_rows,
+        snap = self._write_snapshot(
+            merged, len(affected), self.write_sort, self.target_file_rows
         )
-
-        new_files: dict[str, list[str]] = {}
-        for bdir in glob.glob(os.path.join(snap_dir, "bucket=*")):
-            b = bdir.rsplit("=", 1)[1]
-            new_files[b] = [
-                os.path.join(snap_rel, os.path.basename(bdir), os.path.basename(p))
-                for p in glob.glob(os.path.join(bdir, "*.parquet"))
-            ]
-        files = dict(parent_m["files"]) if parent_m else {}
-        logs = dict(parent_m.get("logs") or {}) if parent_m else {}
-        new_bm, new_fm = self._write_stats(snap_dir)
 
         # per-bucket tombstone stats: read back ONLY the files just written
         # (column-pruned to is_deleted+commit_seq — a few KB per bucket),
         # carry untouched buckets' stats forward. expire_tombstones selects
         # buckets from these stats instead of scanning the whole table.
-        bucket_meta = dict(parent_m.get("bucket_meta", {})) if parent_m else {}
         if mor_write:
             # base files untouched; the new files are per-bucket log deltas
-            for b, ps in new_files.items():
+            logs = dict(parent_m.get("logs") or {})
+            for b, ps in snap.files.items():
                 logs[b] = list(logs.get(b, ())) + ps
             # tombstone stats become an additive UPPER bound (a log
             # tombstone may shadow a base one): still safe for triggering
             # expiry, which rewrites with the exact predicate. Buckets
             # with no prior entry stay unknown -> expiry's scan fallback.
-            for b, nm in new_bm.items():
+            bucket_meta = dict(parent_m.get("bucket_meta", {}))
+            for b, nm in snap.bucket_meta.items():
                 old = bucket_meta.get(b)
                 if old is not None:
                     tseqs = [
@@ -1473,77 +1421,26 @@ class ManifestTable:
                         + nm["n_tombstones"],
                         "min_tomb_seq": min(tseqs) if tseqs else None,
                     }
+            changes = {
+                "logs": logs,
+                "bucket_meta": bucket_meta,
+                "file_meta": self._carry_file_meta(
+                    parent_m, parent_m["files"], snap.file_meta, logs
+                ),
+            }
         else:
-            for b in affected:
-                files.pop(str(b), None)
-                bucket_meta.pop(str(b), None)
-                # COW rewrite folds any outstanding log rows (the target
-                # read resolves them) — their files drop out of the manifest
-                logs.pop(str(b), None)
-            files.update(new_files)
-            bucket_meta.update(new_bm)
-
-        lineage = {
-            "snapshot_id": sid,
-            "checkpoint_id": checkpoint_id,
-            "batch_id": batch_id,
-            "seq_start": seq_range[0] if seq_range else None,
-            "seq_end": seq_range[1] if seq_range else None,
-            "rows_applied": int(sum(bstats.values())),
-            "buckets": {str(b): int(n) for b, n in bstats.items()},
-            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        manifest = {
-            "snapshot_id": sid,
-            "n_buckets": self.n_buckets,
-            "parent": parent,
-            "epoch": epoch_key,
-            "applied_epochs": sorted(applied | {epoch_key}),
-            "schema": new_schema.jsonValue(),
-            "files": files,
-            "logs": logs,
-            "bucket_meta": bucket_meta,
-            "file_meta": self._carry_file_meta(parent_m, files, new_fm, logs),
-            "lineage": lineage,
-        }
-        try:
-            self._commit(manifest, expected_parent=parent)
-        except CommitConflict:
-            # this attempt's data files are unreachable from any manifest —
-            # drop them now instead of waiting for expire_snapshots' sweep
-            shutil.rmtree(snap_dir, ignore_errors=True)
-            raise
-        self._append_lineage(lineage)
-        return lineage
-
-    def _write_bucketed(
-        self,
-        df: DataFrame,
-        snap_dir: str,
-        n_parts: int,
-        sort_by: tuple[str, ...] = (),
-        target_rows: int | None = None,
-    ) -> None:
-        """One bucket-partitioned snapshot write. ``sort_by`` (usually
-        the table's ``write_sort``) orders rows within each bucket so
-        split files carry disjoint zone ranges; columns not present in
-        this frame are skipped (pre-schema-evolution batches)."""
-        out = df.repartition(n_parts, "_bucket")
-        sort_cols = [c for c in sort_by if c in df.columns]
-        if sort_cols:
-            out = out.sortWithinPartitions("_bucket", *sort_cols)
-            # helper sort keys (e.g. the z-order interleave) are not
-            # table columns; dropping is a projection, order-preserving
-            helpers = [c for c in sort_cols if c.startswith("_z")]
-            if helpers:
-                out = out.drop(*helpers)
-        w = (
-            out.withColumnRenamed("_bucket", "bucket")
-            .write.partitionBy("bucket")
-        )
-        if target_rows:
-            w = w.option("maxRecordsPerFile", int(target_rows))
-        w.parquet(snap_dir)
+            # COW rewrite folds any outstanding log rows (the target read
+            # resolves them) — their files drop out of the manifest
+            changes = self._replace_buckets(parent_m, snap, affected)
+        return self._commit_snapshot(
+            parent_m, parent, snap.sid, epoch_key,
+            lineage=self._lineage(
+                snap.sid, checkpoint_id, batch_id, seq_range, bstats
+            ),
+            applied_epochs=sorted(applied | {epoch_key}),
+            schema=new_schema.jsonValue(),
+            **changes,
+        )["lineage"]
 
     @staticmethod
     def _derived_epoch(prefix: str, *parts) -> str:
@@ -1814,11 +1711,7 @@ class ManifestTable:
         return bucket_meta, file_meta
 
     def _carry_file_meta(
-        self,
-        parent_m: dict | None,
-        files: dict,
-        new_meta: dict,
-        logs: dict | None = None,
+        self, parent_m: dict | None, files: dict, new_meta: dict, logs: dict
     ) -> dict:
         """file_meta for a new manifest: fresh stats for just-written
         files, parent stats carried forward for files still referenced
@@ -1826,70 +1719,159 @@ class ManifestTable:
         pruning read() still applies inside logged buckets)."""
         old = dict(parent_m.get("file_meta", {})) if parent_m else {}
         old.update(new_meta)
-        live = {p for paths in files.values() for p in paths}
-        if logs:
-            live |= {p for paths in logs.values() for p in paths}
+        live = set(self._referenced({"files": files, "logs": logs}))
         return {p: meta for p, meta in old.items() if p in live}
 
-    def _commit_noop(self, parent, parent_m, epoch_key, seq_range):
-        sid = f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
-        lineage = {
+    # ---------- the snapshot-commit protocol ----------
+
+    @staticmethod
+    def _new_snapshot_id() -> str:
+        """``<millis:013d>-<uuid8>``; the millis prefix is the write era
+        ``_file_era`` parses out of every data path."""
+        return f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
+
+    def _write_snapshot(
+        self,
+        df: DataFrame,
+        n_parts: int,
+        sort_by: tuple[str, ...],
+        target_rows: int | None,
+    ) -> _Snapshot:
+        """Write ``df`` (carrying a ``_bucket`` column) as a new snapshot
+        under ``data/snap-<sid>/bucket=<b>/``, list its files per bucket
+        and read back their stats in one scan.
+
+        ``sort_by`` (usually the table's ``write_sort``) orders rows
+        within each bucket so split files carry disjoint zone ranges;
+        columns not present in this frame are skipped (pre-schema-
+        evolution batches). ``target_rows`` caps rows per file."""
+        sid = self._new_snapshot_id()
+        snap_rel = os.path.join("data", f"snap-{sid}")
+        snap_dir = os.path.join(self.root, snap_rel)
+        out = df.repartition(n_parts, "_bucket")
+        sort_cols = [c for c in sort_by if c in df.columns]
+        if sort_cols:
+            out = out.sortWithinPartitions("_bucket", *sort_cols)
+            # helper sort keys (e.g. the z-order interleave) are not
+            # table columns; dropping is a projection, order-preserving
+            helpers = [c for c in sort_cols if c.startswith("_z")]
+            if helpers:
+                out = out.drop(*helpers)
+        w = (
+            out.withColumnRenamed("_bucket", "bucket")
+            .write.partitionBy("bucket")
+        )
+        if target_rows:
+            w = w.option("maxRecordsPerFile", int(target_rows))
+        w.parquet(snap_dir)
+        files = {}
+        for bdir in sorted(glob.glob(os.path.join(snap_dir, "bucket=*"))):
+            files[bdir.rsplit("=", 1)[1]] = sorted(
+                os.path.join(snap_rel, os.path.basename(bdir), os.path.basename(p))
+                for p in glob.glob(os.path.join(bdir, "*.parquet"))
+            )
+        bucket_meta, file_meta = self._write_stats(snap_dir)
+        return _Snapshot(sid, files, bucket_meta, file_meta)
+
+    def _replace_buckets(
+        self, base: dict | None, snap: _Snapshot, buckets
+    ) -> dict:
+        """Manifest changes for a copy-on-write rewrite of ``buckets``:
+        their base files, MOR logs and tombstone stats give way to the
+        snapshot's; every other bucket carries forward by reference."""
+        base = base or {}
+        files = dict(base.get("files", {}))
+        logs = dict(base.get("logs") or {})
+        bucket_meta = dict(base.get("bucket_meta", {}))
+        for b in map(str, buckets):
+            files.pop(b, None)
+            logs.pop(b, None)
+            bucket_meta.pop(b, None)
+        files.update(snap.files)
+        bucket_meta.update(snap.bucket_meta)
+        return {
+            "files": files,
+            "logs": logs,
+            "bucket_meta": bucket_meta,
+            "file_meta": self._carry_file_meta(
+                base, files, snap.file_meta, logs
+            ),
+        }
+
+    @staticmethod
+    def _lineage(
+        sid: str,
+        checkpoint_id: str,
+        batch_id: int = 0,
+        seq_range=None,
+        buckets: dict | None = None,
+    ) -> dict:
+        """The lineage record of one commit; ``buckets`` maps bucket ->
+        rows applied (empty for metadata-only commits)."""
+        buckets = buckets or {}
+        return {
             "snapshot_id": sid,
-            "checkpoint_id": epoch_key.rsplit(":", 1)[0],
-            "batch_id": int(epoch_key.rsplit(":", 1)[1]),
+            "checkpoint_id": checkpoint_id,
+            "batch_id": batch_id,
             "seq_start": seq_range[0] if seq_range else None,
             "seq_end": seq_range[1] if seq_range else None,
-            "rows_applied": 0,
-            "buckets": {},
+            "rows_applied": int(sum(buckets.values())),
+            "buckets": {str(b): int(n) for b, n in buckets.items()},
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
+
+    def _commit_snapshot(
+        self,
+        base: dict | None,
+        parent: str | None,
+        sid: str,
+        epoch: str,
+        lineage: dict | None = None,
+        **changes,
+    ) -> dict:
+        """Commit snapshot ``sid`` as the successor of ``parent``.
+
+        The manifest starts from ``base`` (the parent's manifest; the
+        target's for ``rollback``; None for a first commit) and applies
+        ``changes`` — any of files, logs, bucket_meta, file_meta, schema,
+        schema_log, applied_epochs, n_buckets; every key not named
+        carries forward. On ``CommitConflict`` this attempt's
+        ``data/snap-<sid>/`` is removed before re-raising (its files are
+        unreachable from any manifest). ``lineage``, when given, is
+        stored in the manifest and appended to ``_lineage/``."""
+        b = base or {}
         manifest = {
             "snapshot_id": sid,
-            "n_buckets": self.n_buckets,
+            "n_buckets": b.get("n_buckets") or self.n_buckets,
             "parent": parent,
-            "epoch": epoch_key,
-            "applied_epochs": sorted(
-                (set(parent_m["applied_epochs"]) if parent_m else set()) | {epoch_key}
-            ),
-            "schema": parent_m["schema"]
-            if parent_m
-            else T.StructType([]).jsonValue(),
-            "files": dict(parent_m["files"]) if parent_m else {},
-            "bucket_meta": dict(parent_m.get("bucket_meta", {}))
-            if parent_m
-            else {},
-            "file_meta": dict(parent_m.get("file_meta", {}))
-            if parent_m
-            else {},
+            "epoch": epoch,
+            "applied_epochs": sorted(b.get("applied_epochs", [])),
+            "schema": b.get("schema") or T.StructType([]).jsonValue(),
+            "files": dict(b.get("files", {})),
+            "logs": dict(b.get("logs") or {}),
+            "bucket_meta": dict(b.get("bucket_meta", {})),
+            "file_meta": dict(b.get("file_meta", {})),
+            "schema_log": list(b.get("schema_log", [])),
             "lineage": lineage,
         }
-        self._commit(manifest, expected_parent=parent)
-        self._append_lineage(lineage)
-        return lineage
+        manifest.update(changes)
+        try:
+            self._commit(manifest, expected_parent=parent)
+        except CommitConflict:
+            shutil.rmtree(
+                os.path.join(self.root, "data", f"snap-{sid}"),
+                ignore_errors=True,
+            )
+            raise
+        if lineage is not None:
+            self._append_lineage(lineage)
+        return manifest
 
     def _commit(self, manifest: dict, expected_parent: str | None):
         if self.current_snapshot_id() != expected_parent:
             raise CommitConflict("concurrent commit detected (parent moved)")
-        if "schema_log" not in manifest or "logs" not in manifest:
-            pm = (
-                self.manifest(manifest.get("parent"))
-                if manifest.get("parent")
-                else None
-            )
-            # every commit carries the column rename/drop history forward
-            # (rollback overrides this with the TARGET's log explicitly)
-            if "schema_log" not in manifest:
-                manifest["schema_log"] = pm.get("schema_log", []) if pm else []
-            # same for MOR log files: a metadata-only commit (alter,
-            # noop) must not orphan outstanding deltas. Bucket-rewrite
-            # paths set "logs" explicitly (dropping rewritten buckets).
-            if "logs" not in manifest:
-                manifest["logs"] = dict(pm.get("logs") or {}) if pm else {}
         sid = manifest["snapshot_id"]
-        mpath = os.path.join(self.root, "_manifests", f"{sid}.json")
-        with open(mpath + ".tmp", "w") as f:
-            json.dump(manifest, f)
-        os.replace(mpath + ".tmp", mpath)
+        self._atomic_write(self._manifest_path(sid), json.dumps(manifest))
         if self.branch is not None:
             # branch commit: move the branch ref, never `_current`
             refs = self.refs()
@@ -1900,10 +1882,8 @@ class ManifestTable:
             refs["branches"][self.branch] = sid
             self._write_refs(refs)  # atomic (tmp + replace)
             return
-        cur = os.path.join(self.root, "_current")
-        with open(cur + ".tmp", "w") as f:
-            f.write(sid)
-        os.replace(cur + ".tmp", cur)  # atomic pointer swap
+        # atomic pointer swap
+        self._atomic_write(os.path.join(self.root, "_current"), sid)
 
     def _append_lineage(self, lineage: dict):
         """Per-micro-batch lineage parquet (FIXTURES.md §4; reference analog:
@@ -2113,10 +2093,9 @@ class ManifestTable:
                 "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
             ),
         }
-        out = os.path.join(fdir, f"{consumer_id}.json")
-        with open(out + ".tmp", "w") as f:
-            json.dump(rec, f)
-        os.replace(out + ".tmp", out)
+        self._atomic_write(
+            os.path.join(fdir, f"{consumer_id}.json"), json.dumps(rec)
+        )
         return rec
 
     def read_exports(self) -> DataFrame:
@@ -2239,46 +2218,17 @@ class ManifestTable:
             )
             .withColumn("_bucket", self.bucket_expr())
         )
-        sid = f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
-        snap_rel = os.path.join("data", f"snap-{sid}")
-        snap_dir = os.path.join(self.root, snap_rel)
-        self._write_bucketed(
-            kept, snap_dir, len(affected),
-            self.write_sort, self.target_file_rows,
+        snap = self._write_snapshot(
+            kept, len(affected), self.write_sort, self.target_file_rows
         )
-        new_files: dict[str, list[str]] = {b: [] for b in map(str, affected)}
-        for bdir in glob.glob(os.path.join(snap_dir, "bucket=*")):
-            b = bdir.rsplit("=", 1)[1]
-            new_files[b] = [
-                os.path.join(snap_rel, os.path.basename(bdir), os.path.basename(p))
-                for p in glob.glob(os.path.join(bdir, "*.parquet"))
-            ]
-        files = dict(m["files"])
-        for b in affected:
-            files.pop(str(b), None)
-        files.update({b: ps for b, ps in new_files.items() if ps})
-        logs = self._drop_logs(m, affected)  # rewrite folds MOR deltas
-        bucket_meta = dict(m.get("bucket_meta", {}))
-        for b in affected:
-            # rewritten: tombstones with seq >= below_seq survive the purge
-            bucket_meta.pop(str(b), None)
-        new_bm, new_fm = self._write_stats(snap_dir)
-        bucket_meta.update(new_bm)
-        manifest = {
-            "snapshot_id": sid,
-            "n_buckets": self.n_buckets,
-            "parent": m["snapshot_id"],
-            "epoch": f"maintenance:expire_tombstones:{sid}",
-            "applied_epochs": m["applied_epochs"],
-            "schema": m["schema"],
-            "files": files,
-            "logs": logs,
-            "bucket_meta": bucket_meta,
-            "file_meta": self._carry_file_meta(m, files, new_fm, logs),
-            "lineage": None,
-        }
-        self._commit(manifest, expected_parent=m["snapshot_id"])
-        return sid
+        # rewritten buckets' stats are re-read: tombstones with
+        # seq >= below_seq survive the purge
+        self._commit_snapshot(
+            m, m["snapshot_id"], snap.sid,
+            f"maintenance:expire_tombstones:{snap.sid}",
+            **self._replace_buckets(m, snap, affected),
+        )
+        return snap.sid
 
     def compact_logs(
         self, buckets: list[int] | None = None, min_logs: int = 1
@@ -2309,45 +2259,15 @@ class ManifestTable:
             return None
         merged = self.read(include_tombstones=True, buckets=affected)
         merged = merged.withColumn("_bucket", self.bucket_expr())
-        sid = f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
-        snap_rel = os.path.join("data", f"snap-{sid}")
-        snap_dir = os.path.join(self.root, snap_rel)
-        self._write_bucketed(
-            merged, snap_dir, len(affected),
-            self.write_sort, self.target_file_rows,
+        snap = self._write_snapshot(
+            merged, len(affected), self.write_sort, self.target_file_rows
         )
-        new_files: dict[str, list[str]] = {}
-        for bdir in glob.glob(os.path.join(snap_dir, "bucket=*")):
-            b = bdir.rsplit("=", 1)[1]
-            new_files[b] = sorted(
-                os.path.join(snap_rel, os.path.basename(bdir), os.path.basename(p))
-                for p in glob.glob(os.path.join(bdir, "*.parquet"))
-            )
-        files = dict(m["files"])
-        for b in affected:
-            files.pop(str(b), None)
-        files.update({b: ps for b, ps in new_files.items() if ps})
-        logs = self._drop_logs(m, affected)
-        bucket_meta = dict(m.get("bucket_meta", {}))
-        for b in affected:
-            bucket_meta.pop(str(b), None)
-        new_bm, new_fm = self._write_stats(snap_dir)
-        bucket_meta.update(new_bm)
-        manifest = {
-            "snapshot_id": sid,
-            "n_buckets": self.n_buckets,
-            "parent": m["snapshot_id"],
-            "epoch": f"maintenance:compact_logs:{sid}",
-            "applied_epochs": m["applied_epochs"],
-            "schema": m["schema"],
-            "files": files,
-            "logs": logs,
-            "bucket_meta": bucket_meta,
-            "file_meta": self._carry_file_meta(m, files, new_fm, logs),
-            "lineage": None,
-        }
-        self._commit(manifest, expected_parent=m["snapshot_id"])
-        return sid
+        self._commit_snapshot(
+            m, m["snapshot_id"], snap.sid,
+            f"maintenance:compact_logs:{snap.sid}",
+            **self._replace_buckets(m, snap, affected),
+        )
+        return snap.sid
 
     def rebucket(self, new_n_buckets: int) -> str:
         """Scale the key-space bucketing (the Iceberg rewrite-partitions
@@ -2368,13 +2288,7 @@ class ManifestTable:
             # a large backfill must still take effect — adopt the layout in
             # _table.json so the first load lands on the new bucket count
             self.n_buckets = new_n_buckets
-            tpath = os.path.join(self.root, "_table.json")
-            with open(tpath + ".tmp", "w") as f:
-                json.dump(
-                    self._layout_meta(new_n_buckets),
-                    f,
-                )
-            os.replace(tpath + ".tmp", tpath)
+            self._write_layout(self.root, new_n_buckets)
             return self.current_snapshot_id()
         full = self.read(include_tombstones=True)
         # NOTE: self.n_buckets is mutated only AFTER a successful commit —
@@ -2384,46 +2298,24 @@ class ManifestTable:
             F.xxhash64(*[F.col(c) for c in self.key_cols]),
             F.lit(new_n_buckets),
         ).cast("int")
-        sid = f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
-        snap_rel = os.path.join("data", f"snap-{sid}")
-        snap_dir = os.path.join(self.root, snap_rel)
-        self._write_bucketed(
-            full.withColumn("_bucket", new_bucket),
-            snap_dir, new_n_buckets,
+        snap = self._write_snapshot(
+            full.withColumn("_bucket", new_bucket), new_n_buckets,
             self.write_sort, self.target_file_rows,
         )
-        files: dict[str, list[str]] = {}
-        for bdir in glob.glob(os.path.join(snap_dir, "bucket=*")):
-            b = bdir.rsplit("=", 1)[1]
-            files[b] = [
-                os.path.join(snap_rel, os.path.basename(bdir), os.path.basename(p))
-                for p in glob.glob(os.path.join(bdir, "*.parquet"))
-            ]
-        new_bm, new_fm = self._write_stats(snap_dir)
-        manifest = {
-            "snapshot_id": sid,
-            "n_buckets": new_n_buckets,
-            "parent": m["snapshot_id"],
-            "epoch": f"maintenance:rebucket:{new_n_buckets}:{sid}",
-            "applied_epochs": m["applied_epochs"],
-            "schema": m["schema"],
-            "files": files,
-            "logs": {},  # full rewrite resolves every outstanding delta
-            "bucket_meta": new_bm,
-            "file_meta": new_fm,
-            "lineage": None,
-        }
-        self._commit(manifest, expected_parent=m["snapshot_id"])
+        self._commit_snapshot(
+            m, m["snapshot_id"], snap.sid,
+            f"maintenance:rebucket:{new_n_buckets}:{snap.sid}",
+            n_buckets=new_n_buckets,
+            files=snap.files,
+            logs={},  # full rewrite resolves every outstanding delta
+            bucket_meta=snap.bucket_meta,
+            file_meta=snap.file_meta,
+        )
         self.n_buckets = new_n_buckets
         # persist the new bucket count for bootstrap too (the committed
         # manifest above is authoritative; this swap is best-effort)
-        tpath = os.path.join(self.root, "_table.json")
-        with open(tpath + ".tmp", "w") as f:
-            json.dump(
-                self._layout_meta(new_n_buckets), f
-            )
-        os.replace(tpath + ".tmp", tpath)
-        return sid
+        self._write_layout(self.root, new_n_buckets)
+        return snap.sid
 
     def cluster(
         self,
@@ -2483,44 +2375,14 @@ class ManifestTable:
             )
             full = full.withColumn("_zkey", zexpr)
             sort_by = ("_zkey",)
-        sid = f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
-        snap_rel = os.path.join("data", f"snap-{sid}")
-        snap_dir = os.path.join(self.root, snap_rel)
-        self._write_bucketed(
-            full, snap_dir, len(affected), tuple(sort_by), target_file_rows
+        snap = self._write_snapshot(
+            full, len(affected), tuple(sort_by), target_file_rows
         )
-        new_files: dict[str, list[str]] = {}
-        for bdir in glob.glob(os.path.join(snap_dir, "bucket=*")):
-            b = bdir.rsplit("=", 1)[1]
-            new_files[b] = sorted(
-                os.path.join(snap_rel, os.path.basename(bdir), os.path.basename(p))
-                for p in glob.glob(os.path.join(bdir, "*.parquet"))
-            )
-        files = dict(m["files"])
-        for b in affected:
-            files.pop(str(b), None)
-        files.update(new_files)
-        logs = self._drop_logs(m, affected)  # rewrite folds MOR deltas
-        bucket_meta = dict(m.get("bucket_meta", {}))
-        for b in affected:
-            bucket_meta.pop(str(b), None)
-        new_bm, new_fm = self._write_stats(snap_dir)
-        bucket_meta.update(new_bm)
-        manifest = {
-            "snapshot_id": sid,
-            "n_buckets": self.n_buckets,
-            "parent": m["snapshot_id"],
-            "epoch": f"maintenance:cluster:{sid}",
-            "applied_epochs": m["applied_epochs"],
-            "schema": m["schema"],
-            "files": files,
-            "logs": logs,
-            "bucket_meta": bucket_meta,
-            "file_meta": self._carry_file_meta(m, files, new_fm, logs),
-            "lineage": None,
-        }
-        self._commit(manifest, expected_parent=m["snapshot_id"])
-        return sid
+        self._commit_snapshot(
+            m, m["snapshot_id"], snap.sid, f"maintenance:cluster:{snap.sid}",
+            **self._replace_buckets(m, snap, affected),
+        )
+        return snap.sid
 
     def maintain(
         self,
@@ -2695,19 +2557,12 @@ class ManifestTable:
             h for h in r["branches"].values() if h
         }
         for sid in pinned:
-            tm = self._read_json(
-                os.path.join(self.root, "_manifests", f"{sid}.json")
-            )
+            tm = self._read_json(self._manifest_path(sid))
             if tm is not None and sid not in {
                 m["snapshot_id"] for m in keep_m
             }:
                 keep_m = [tm] + keep_m
-        live: set[str] = set()
-        for m in keep_m:
-            for paths in list(m["files"].values()) + list(
-                (m.get("logs") or {}).values()
-            ):
-                live.update(paths)
+        live = {p for m in keep_m for p in self._referenced(m)}
         keep_ids = {m["snapshot_id"] for m in keep_m}
         # sweep EVERY manifest in the dir, not just the main chain:
         # branch intermediates and crashed-commit orphan manifests go too
@@ -2719,12 +2574,10 @@ class ManifestTable:
         # tag-pinned manifest — a tag must not rewrite history linkage)
         if chain_keep:
             chain_keep[0]["parent"] = None
-            p = os.path.join(
-                self.root, "_manifests", f"{chain_keep[0]['snapshot_id']}.json"
+            self._atomic_write(
+                self._manifest_path(chain_keep[0]["snapshot_id"]),
+                json.dumps(chain_keep[0]),
             )
-            with open(p + ".tmp", "w") as f:
-                json.dump(chain_keep[0], f)
-            os.replace(p + ".tmp", p)
         for f_ in glob.glob(os.path.join(self.root, "data", "snap-*", "bucket=*", "*.parquet")):
             rel = os.path.relpath(f_, self.root)
             if rel not in live:
@@ -2813,12 +2666,7 @@ class ManifestTable:
         if m is None:
             return out
         fm = m.get("file_meta", {})
-        all_rels = sorted(
-            p
-            for paths in list(m["files"].values())
-            + list((m.get("logs") or {}).values())
-            for p in paths
-        )
+        all_rels = sorted(self._referenced(m))
         out["files_checked"] = len(all_rels)
         for rel in all_rels:
             if not os.path.exists(os.path.join(self.root, rel)):
@@ -2833,9 +2681,7 @@ class ManifestTable:
                 out["broken_chain"].append(f"cycle at {pid}")
                 break
             seen.add(pid)
-            pm = self._read_json(
-                os.path.join(self.root, "_manifests", f"{pid}.json")
-            )
+            pm = self._read_json(self._manifest_path(pid))
             if pm is None:
                 out["broken_chain"].append(pid)
                 break
@@ -2907,10 +2753,7 @@ class ManifestTable:
         for mp in glob.glob(os.path.join(self.root, "_manifests", "*.json")):
             m = self._read_json(mp)
             if m:
-                for paths in list(m.get("files", {}).values()) + list(
-                    (m.get("logs") or {}).values()
-                ):
-                    live.update(paths)
+                live.update(self._referenced(m))
         cutoff = time.time() - older_than_seconds
         removed, kept_recent = [], 0
         for f_ in glob.glob(

@@ -4,7 +4,8 @@ Spark restatement of the reference's sync path (SURVEY.md §3.1):
 
     readStream(changelog)
       -> normalize_events (built-in exprs + Arrow pandas UDF lang-detect)
-      -> lww_resolve (salted two-phase / max_by partial-agg reduce)
+      -> lww_resolve (window or ordkey, chosen per batch by
+         _resolve_lww_mode from session width and input size)
       -> foreachBatch: ManifestTable.merge (epoch-tagged exactly-once commit)
       -> lineage row per micro-batch partition
 
