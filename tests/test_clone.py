@@ -99,3 +99,27 @@ def test_clone_at_tagged_snapshot(spark, tmp_path):
     old = src.clone_to(str(tmp_path / "old"), snapshot_id="epoch0")
     assert _state(old)[("r1", "a.py")][0] == "c1"
     assert _state(src)[("r1", "a.py")][0] == "c2"
+
+
+def test_clone_at_maintenance_snapshot(spark, tmp_path):
+    """A maintenance commit stores ``"lineage": null``; cloning at it must
+    still build the root lineage and carry the applied epochs."""
+    src = ManifestTable.create(spark, str(tmp_path / "src"), n_buckets=4)
+    rows = [
+        (1, "insert", "r1", "a.py", "c1", "python", "v1", None, 10),
+        (2, "insert", "r2", "b.go", "c2", "go", "v2", None, 20),
+    ]
+    _batch(spark, src, rows, 0)
+    sid = src.rebucket(2)
+    assert src.manifest(sid)["lineage"] is None
+
+    clone = src.clone_to(str(tmp_path / "bak"))
+    assert _state(clone) == _state(src)
+    assert clone.n_buckets == 2
+    assert clone.manifest()["lineage"]["checkpoint_id"].startswith("clone:")
+
+    from .test_change_feed import CHANGELOG_SCHEMA
+
+    assert apply_batch(
+        spark.createDataFrame(rows, CHANGELOG_SCHEMA), clone, "cf", 0
+    ) is None

@@ -6,7 +6,8 @@ pipeline:
 
     changelog (insert/update/delete events keyed by (repo, path))
         -> vectorized normalization (built-in exprs + Arrow pandas UDFs)
-        -> salted two-phase last-writer-wins resolution per key
+        -> last-writer-wins resolution per key (window or ordkey, picked
+           per batch by apply_batch's _resolve_lww_mode)
         -> MERGE into a snapshot-isolated keyed table (mini-Iceberg parquet
            sink with atomic manifest commits; real Iceberg behind import-try)
         -> per-micro-batch lineage records, exactly-once via epoch-tagged
@@ -20,6 +21,15 @@ Layout:
     sources/    changelog batch/stream sources
     streaming/  Structured Streaming pipeline + lineage
     plans/      query catalog (Spark impl + DuckDB oracle SQL pairs)
+
+Importing the package installs ``_zipguard`` (CPython < 3.13): Python
+workers import it when they unpickle a package UDF, and from then on a
+task's ``importlib.invalidate_caches()`` no longer re-reads an unchanged
+``pyspark.zip``.
 """
+
+from . import _zipguard
+
+_zipguard.install()
 
 __version__ = "0.1.0"

@@ -5,6 +5,19 @@ Everything stays JVM-side (built-in functions / whole-stage codegen) except
 language detection, which per input_hint runs through a vectorized
 pandas/Arrow UDF (zero per-row Python) — the analog of the reference's
 ecosystem inference (normalizer.go:313-336, gitlab/fetcher.go:291-311).
+
+A pandas UDF's fixed cost is per task, not per row. Every task of a
+Python worker starts with ``importlib.invalidate_caches()``, which on
+CPython < 3.13 re-reads the directory of ``pyspark.zip`` once per cached
+zipimporter: about 0.2-0.3 CPU s per task, so ~2.4 CPU s for one 8-task
+UDF stage however few rows it sees. The package's ``_zipguard`` (installed
+on import) skips that re-read while the archive is unchanged, but only in
+workers that import the package. Hence the rule for package UDFs: the
+body is a module-level function, wrapped with ``F.pandas_udf(fn, type)``
+rather than decorated. cloudpickle then ships it by reference
+(module + name) and the worker imports the package to resolve it; a
+decorated body is not reachable by its name and ships by value, leaving
+the worker unguarded.
 """
 
 from __future__ import annotations
@@ -44,8 +57,7 @@ _CONTENT_HINTS = [
 ]
 
 
-@F.pandas_udf(T.StringType())
-def detect_lang_udf(path: pd.Series, content: pd.Series) -> pd.Series:
+def _detect_lang(path: pd.Series, content: pd.Series) -> pd.Series:
     """Vectorized language detection: file extension first, then content
     sniffing, else 'text'. Arrow-batched; no per-row Python UDF.
     Null path+content (already-resolved rows, nulled JVM-side) -> null."""
@@ -68,6 +80,10 @@ def detect_lang_udf(path: pd.Series, content: pd.Series) -> pd.Series:
     lang = lang.fillna("text")
     lang[unresolved] = None
     return lang
+
+
+# module-level body, so the UDF pickles by reference (see module docstring)
+detect_lang_udf = F.pandas_udf(_detect_lang, T.StringType())
 
 
 # package-manager slug -> ecosystem (normalizer.go:313-336, the switch in

@@ -995,7 +995,7 @@ class ManifestTable:
         root_m = dict(m)
         root_m["parent"] = None
         root_m["lineage"] = {
-            **m.get("lineage", {}),
+            **(m.get("lineage") or {}),
             "checkpoint_id": f"clone:{self.root}:{m['snapshot_id']}",
         }
         self._atomic_write(

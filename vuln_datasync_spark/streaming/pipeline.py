@@ -44,12 +44,8 @@ logger = logging.getLogger("vuln_datasync_spark.streaming")
 # full-payload per-key sort contends for memory, while ordkey's shuffle
 # stays ∝ #keys). A real multi-executor cluster is always "wide", so any
 # substantial batch there takes the ordkey path — the 100 TB plan.
-AUTO_ORDKEY_MIN_INPUT_BYTES = int(
-    os.environ.get("VDS_AUTO_ORDKEY_MIN_INPUT_BYTES", str(128 * 1024 * 1024))
-)
-AUTO_ORDKEY_MIN_PARALLELISM = int(
-    os.environ.get("VDS_AUTO_ORDKEY_MIN_PARALLELISM", "16")
-)
+AUTO_ORDKEY_MIN_INPUT_BYTES = 128 * 1024 * 1024
+AUTO_ORDKEY_MIN_PARALLELISM = 16
 
 
 def _resolve_lww_mode(events: DataFrame, mode: str) -> str:
