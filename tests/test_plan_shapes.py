@@ -7,37 +7,11 @@ top-k stays TakeOrdered rather than a global sort)."""
 import pytest
 from pyspark.sql import functions as F
 
-from vuln_datasync_spark.plans.queries import QUERIES
-
 SF = "/root/testdata/sf0.001"
-_BY_NAME = {qd.name: qd for qd in QUERIES}
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_broadcast_dim_join_stays_broadcast(spark):
-    plan = _plan(_BY_NAME["j2_broadcast_dim_join"].spark_fn(spark, SF))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
-def test_point_lookup_filter_reaches_parquet_scan(spark):
-    import re
-
-    plan = _plan(_BY_NAME["j3_point_lookup_join"].spark_fn(spark, SF))
-    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-    # at least one scan carries a real pushed predicate
-    assert any(p.strip() for p in pushed), plan
-
-
-def test_pricing_summary_hash_aggregates_with_partial(spark):
-    plan = _plan(_BY_NAME["q1_tpch_pricing_summary"].spark_fn(spark, SF))
-    assert "HashAggregate" in plan
-    assert "SortAggregate" not in plan
-    # map-side combine: a partial aggregate must sit below the exchange
-    assert "partial_sum" in plan
 
 
 def test_map_only_ops_have_no_shuffle(spark):
@@ -75,46 +49,6 @@ def test_column_pruning_reaches_scan(spark):
     seg = plan[plan.index("ReadSchema"):].splitlines()[0]
     assert "doc_id" in seg and "text" in seg
     assert "lang" not in seg and "source" not in seg and "n_chars" not in seg
-
-
-def test_session_funnel_scd2_single_exchange(spark):
-    """sessionize/funnel/scd2 chain all their window expressions over
-    ONE partitioning: a second Exchange would mean the shared-window
-    construction regressed into per-step shuffles."""
-    for name in ("ev_sessionize", "ev_funnel", "cdc_scd2_history"):
-        plan = _plan(_BY_NAME[name].spark_fn(spark, SF))
-        assert plan.count("Exchange hashpartitioning") == 1, (name, plan)
-
-
-def test_interval_join_never_nested_loop(spark):
-    """The whole point of the bucketed rewrite: a hash join on the
-    bucket key, never BroadcastNestedLoop/Cartesian."""
-    plan = _plan(_BY_NAME["j9_interval_join"].spark_fn(spark, SF))
-    assert "BroadcastNestedLoop" not in plan
-    assert "Cartesian" not in plan
-    assert "HashJoin" in plan or "SortMergeJoin" in plan
-
-
-def test_kmv_candidate_shuffle_not_proportional_to_rows(spark):
-    """kmv_distinct's only wide edge is the candidate frame emitted by
-    mapInPandas: the exchange must sit ABOVE the Python stage (bytes
-    ∝ partitions*k), never below it on the raw hashed rows."""
-    plan = _plan(_BY_NAME["agg_kmv_distinct"].spark_fn(spark, SF))
-    # plan toString is physical-order: child plans print BELOW parents,
-    # so the mapInPandas line must appear after (deeper than) every
-    # Exchange line
-    lines = plan.splitlines()
-    py_depth = min(
-        i for i, l in enumerate(lines) if "MapInPandas" in l
-    )
-    for i, l in enumerate(lines):
-        if "Exchange" in l and "Reused" not in l:
-            assert i < py_depth, f"shuffle below mapInPandas:\n{plan}"
-
-
-def test_frequent_items_recount_is_semi_join(spark):
-    plan = _plan(_BY_NAME["agg_frequent_items"].spark_fn(spark, SF))
-    assert "LeftSemi" in plan, plan
 
 
 def test_mor_resolution_only_where_logs_exist(spark, tmp_path):

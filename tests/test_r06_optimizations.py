@@ -9,8 +9,6 @@ refactor cannot silently change results while chasing speed.
   direct per-lane expression over char_shingles.
 * lang-id projected form: the hit-count-projection path must equal the
   single-expression lang_id.
-* _fan: adaptive — repartitions a below-parallelism scan, leaves an
-  at-parallelism frame untouched.
 * decode_y4m: C420 with odd luma dims raises a clean ValueError.
 """
 
@@ -125,17 +123,6 @@ def test_lang_id_projected_form_matches_single_expression(spark):
     )
     direct = df.select("doc_id", lang_id("text").alias("pred"))
     assert sorted(projected.collect()) == sorted(direct.collect())
-
-
-def test_fan_is_adaptive(spark):
-    from vuln_datasync_spark.plans.queries import _fan
-
-    par = spark.sparkContext.defaultParallelism
-    narrow = spark.range(0, 100, 1, 1).toDF("id")
-    assert _fan(narrow).rdd.getNumPartitions() == par
-    wide = spark.range(0, 100, 1, par).toDF("id")
-    # already at parallelism: untouched (same plan object, no exchange)
-    assert _fan(wide) is wide
 
 
 def test_decode_y4m_rejects_odd_c420_dims():
