@@ -118,24 +118,6 @@ def test_bucketed_join_elides_both_exchanges(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS _psb_dims")
 
 
-def test_multimodal_real_decode_is_map_only(spark):
-    """planted_ppm_table -> resize -> extract_features is a pure map
-    pipeline: any Exchange means the media pipeline started shuffling
-    payload bytes — the exact thing the 100 TB design forbids before
-    the (tiny) feature output exists."""
-    from vuln_datasync_spark.operators.multimodal import (
-        extract_features,
-        planted_ppm_table,
-        resize_media,
-    )
-
-    d = spark.range(50).selectExpr("id as doc_id")
-    m = planted_ppm_table(d, "doc_id")
-    f = extract_features(resize_media(m, 5, 4, decode_stub=False),
-                         decode_stub=False)
-    assert "Exchange" not in _plan(f)
-
-
 def test_kmv_merge_estimate_input_is_sketch_sized(spark):
     """kmv_merge_estimate must plan over the exploded sketch arrays
     (segments*k rows), never re-scan source data: its plan contains no
@@ -167,19 +149,3 @@ def test_envelope_parse_is_map_only(spark):
         plan = _plan(parse(df))
         assert "Exchange" not in plan, plan
         assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
-
-
-def test_y4m_frame_sampling_no_shuffle_before_stats(spark):
-    """sample_frames_y4m decodes and reduces INSIDE the scan partition
-    (mapInPandas); the video bytes must never hit an Exchange."""
-    from vuln_datasync_spark.operators.multimodal import (
-        planted_y4m_table,
-        sample_frames_y4m,
-    )
-
-    d = spark.read.parquet(f"{SF}/documents.parquet").filter(
-        F.col("doc_id") < 50
-    )
-    plan = _plan(sample_frames_y4m(planted_y4m_table(d, "doc_id")))
-    assert "Exchange" not in plan, plan
-    assert "MapInPandas" in plan

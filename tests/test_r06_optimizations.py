@@ -9,7 +9,6 @@ refactor cannot silently change results while chasing speed.
   direct per-lane expression over char_shingles.
 * lang-id projected form: the hit-count-projection path must equal the
   single-expression lang_id.
-* decode_y4m: C420 with odd luma dims raises a clean ValueError.
 """
 
 import numpy as np
@@ -123,11 +122,3 @@ def test_lang_id_projected_form_matches_single_expression(spark):
     )
     direct = df.select("doc_id", lang_id("text").alias("pred"))
     assert sorted(projected.collect()) == sorted(direct.collect())
-
-
-def test_decode_y4m_rejects_odd_c420_dims():
-    from vuln_datasync_spark.operators.multimodal import decode_y4m
-
-    raw = b"YUV4MPEG2 W3 H2 F25:1 C420\n" + b"FRAME\n" + bytes(3 * 2 + 2 * 1)
-    with pytest.raises(ValueError, match="C420 requires even"):
-        decode_y4m(raw)

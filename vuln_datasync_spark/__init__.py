@@ -16,7 +16,7 @@ pipeline:
 Layout:
     datagen/    deterministic synthetic changelog + single-threaded oracle
     functions/  scalar/vectorized column functions (hashing, normalize, text)
-    operators/  LWW resolve, merge resolution, dedup, similarity, multimodal
+    operators/  LWW resolve, merge resolution, dedup, similarity
     sinks/      keyed MERGE sinks (manifest parquet, Iceberg), exports
     sources/    changelog batch/stream sources
     streaming/  Structured Streaming pipeline + lineage
