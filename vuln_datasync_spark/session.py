@@ -111,20 +111,15 @@ def get_spark(
         # partitions, serializing every window/aggregate above them. 64k
         # keeps small-input stages parallel; on production-scale shuffles
         # partitions sit far above either floor, so the knob is inert
-        # there (it bounds nothing from above). Override with
-        # VDS_AQE_MIN_PARTITION_SIZE.
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
-            "VDS_AQE_MIN_PARTITION_SIZE", "64k"
-        ),
+        # there (it bounds nothing from above).
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
         "spark.sql.session.timeZone": "UTC",
         # shuffle/spill codec: measured on the 4M-event replay at 1 and 4
         # cores — zstd beats the lz4 default ~5-8% at BOTH widths here
         # (smaller blocks relieve the host's memory-bandwidth wall), and
         # its better ratio is the canonical choice on network-bound
-        # clusters. Override with VDS_IO_CODEC.
-        "spark.io.compression.codec": os.environ.get(
-            "VDS_IO_CODEC", "zstd"
-        ),
+        # clusters.
+        "spark.io.compression.codec": "zstd",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.parquet.compression.codec": "zstd",
         "spark.ui.enabled": "false",
@@ -156,121 +151,5 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _warm_session(spark)
     return spark
 
-
-# Threshold below which a session skips the bring-up warm-up: narrow
-# sessions (tests, interactive local[4]) care about bring-up latency,
-# wide ones are throughput sessions where steady-state dominates.
-_WARM_MIN_SLOTS = 8
-
-
-def _warm_session(spark: SparkSession) -> None:
-    """One-time session bring-up: exercise the hot framework paths (hash
-    aggregate, window sort, shuffled + broadcast joins, top-k, Python
-    worker pool) on SYNTHETIC spark.range data so the JVM's JIT and
-    janino/codegen caches, and the Python worker pool, are warm before
-    the first real query. A fresh JVM otherwise charges 1-2s of
-    interpreter-mode execution and compiler time to whichever query runs
-    first — a bring-up cost, not that query's throughput (a long-running
-    cluster session pays it once at startup, exactly like this).
-
-    Never touches user tables or produces results — every op ends in a
-    noop sink over generated data. Opt out with VDS_SESSION_WARMUP=0."""
-    sc = spark.sparkContext
-    if getattr(sc, "_vds_warmed", False):
-        return
-    sc._vds_warmed = True  # set first: get_spark may be re-entered
-    if os.environ.get("VDS_SESSION_WARMUP", "1") != "1":
-        return
-    par = sc.defaultParallelism
-    if par < _WARM_MIN_SLOTS:
-        return
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    def _noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    sc.setJobDescription("session warm-up (synthetic)")
-    try:
-        r = spark.range(0, 500_000, 1, par).select(
-            F.col("id"),
-            (F.col("id") % 1000).alias("k"),
-            F.md5(F.col("id").cast("string")).alias("s"),
-        )
-        _noop(
-            r.groupBy("k").agg(
-                F.sum("id"), F.count("*"), F.min("s"), F.max("s")
-            )
-        )
-        w = W.partitionBy("k").orderBy(F.desc("id"))
-        _noop(
-            r.withColumn("rn", F.row_number().over(w)).filter(
-                F.col("rn") == 1
-            )
-        )
-        small = spark.range(0, 1000).select(
-            F.col("id").alias("k"), F.lit("x").alias("v")
-        )
-        _noop(r.join(small, "k"))
-        _noop(r.join(F.broadcast(small), "k"))
-        _noop(r.orderBy("s").limit(10))
-
-        # higher-order array functions (transform / array_distinct /
-        # array_min over md5) — the shingle/minhash family's eval path
-        sh = F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.lit(28)),
-                lambda i: F.substring(F.col("s"), i, 5),
-            )
-        )
-        _noop(
-            spark.range(0, 20_000, 1, par)
-            .select(F.md5(F.col("id").cast("string")).alias("s"))
-            .withColumn("sh", sh)
-            .select(
-                F.array_min(
-                    F.transform(
-                        F.col("sh"),
-                        lambda x: F.md5(F.concat(x, F.lit(":0"))),
-                    )
-                ).alias("m"),
-                F.posexplode(F.slice(F.col("sh"), 1, 2)),
-            )
-        )
-
-        # Pre-compile the engine's hottest operator codegen shape on
-        # synthetic rows: the k-lane minhash signature generates a large
-        # class whose janino compile (~1s) otherwise serializes EVERY
-        # task of the first real signature stage behind the compile lock
-        # (measured: 34s summed task time, 4.5s CPU — 87% lock wait).
-        # Identical expression shape -> codegen cache hit at query time.
-        from .operators.dedup import minhash_signature
-
-        synth_docs = spark.range(0, 64 * par, 1, par).select(
-            F.col("id").alias("doc_id"),
-            F.md5(F.col("id").cast("string")).alias("text"),
-        )
-        _noop(
-            minhash_signature(synth_docs, "text", 8).select(
-                F.col("doc_id").alias("_id"), "minhash"
-            )
-        )
-
-        def _wmap(batches):
-            for pdf in batches:
-                yield pdf
-
-        # spawns the full Python worker pool (one task per slot) so the
-        # first real Arrow/pandas query doesn't pay worker startup
-        py = spark.range(0, 16 * par, 1, par)
-        _noop(py.mapInPandas(_wmap, "id long"))
-    except Exception:  # warm-up must never break session bring-up
-        logger = __import__("logging").getLogger(
-            "vuln_datasync_spark.session"
-        )
-        logger.warning("session warm-up failed; continuing", exc_info=True)
-    finally:
-        sc.setJobDescription(None)
