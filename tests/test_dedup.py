@@ -1,44 +1,4 @@
-"""Edit-distance verification gate for near-dup candidate pairs."""
-
-def test_verify_pairs_editdist(spark):
-    from vuln_datasync_spark.operators.dedup import verify_pairs_editdist
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "the quick brown fox jumps over the lazy dogs"),  # +1
-            (3, "entirely different content with nothing shared"),
-            (4, "x"),
-            (5, "y"),
-        ],
-        "id long, text string",
-    )
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 3), (4, 5)], "id_a long, id_b long"
-    )
-    got = {
-        (r.id_a, r.id_b): (r.edit_dist, r.edit_ratio)
-        for r in verify_pairs_editdist(
-            docs=docs, pairs=pairs, text_col="text", id_col="id",
-            max_ratio=0.2,
-        ).collect()
-    }
-    # (1,2): dist 1 over 45 chars -> accepted; (1,3): rejected;
-    # (4,5): dist 1 over max(1,1)=1 -> ratio 1.0 rejected
-    assert set(got) == {(1, 2)}
-    assert got[(1, 2)][0] == 1 and abs(got[(1, 2)][1] - 1 / 45) < 1e-3
-
-    # max_chars prefix bounds the cost AND the comparison window
-    long_docs = spark.createDataFrame(
-        [(1, "a" * 50 + "X" * 50), (2, "a" * 50 + "Y" * 50)],
-        "id long, text string",
-    )
-    p = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    [r] = verify_pairs_editdist(
-        p, long_docs, "text", "id", max_ratio=1.0, max_chars=50
-    ).collect()
-    assert r.edit_dist == 0  # identical within the prefix
-
+"""KMV distinct-count CLI."""
 
 def test_cli_distinct(spark, tmp_path, capsys, monkeypatch):
     import json

