@@ -669,88 +669,6 @@ def cmd_compact_log(args) -> int:
     return 0
 
 
-def cmd_profile(args) -> int:
-    """ANALYZE-style per-column profile of the live table state: rows,
-    nulls, min/max, KMV ndv estimate. One scan; shuffles independent of
-    table size."""
-    from .operators.profiling import profile_columns
-    from .sinks.manifest_table import ManifestTable
-
-    spark = _spark(args)
-    table = ManifestTable(spark, args.table)
-    df = table.read(snapshot_id=args.snapshot)
-    cols = args.cols.split(",") if args.cols else [
-        f.name for f in df.schema.fields
-        if not f.name.startswith("_")
-    ]
-    rows = profile_columns(df, cols, k=args.k).orderBy("col_name").collect()
-    print(json.dumps([r.asDict() for r in rows], default=str))
-    return 0
-
-
-def cmd_distinct(args) -> int:
-    """Bounded-state distinct count of a column, optionally per group
-    (operators/sketch.py kmv_distinct — the reference's per-source
-    distinct-vuln dashboards, sql/vulnerabilities.sql:105-126, served
-    without a ∝-distinct-keys shuffle). With --sketch-out, persists the
-    mergeable per-group sketch rows instead, for later
-    kmv_merge_estimate calls over any union of segments."""
-    from .operators.sketch import kmv_distinct, kmv_sketch
-    from .sinks.manifest_table import ManifestTable
-
-    spark = _spark(args)
-    table = ManifestTable(spark, args.table)
-    df = table.read(snapshot_id=args.snapshot)
-    by = args.by.split(",") if args.by else []
-    if args.sketch_out:
-        kmv_sketch(df, by, args.col, k=args.k).write.mode(
-            "overwrite"
-        ).parquet(args.sketch_out)
-        print(json.dumps({"sketch": args.sketch_out, "k": args.k}))
-        return 0
-    if by:
-        rows = kmv_distinct(df, by, args.col, k=args.k).orderBy(*by).collect()
-        print(json.dumps([r.asDict() for r in rows], default=str))
-    else:
-        rows = kmv_distinct(df, [], args.col, k=args.k).collect()
-        est = rows[0]["est_distinct"] if rows else 0
-        print(json.dumps({"est_distinct": est}))
-    return 0
-
-
-def cmd_sync_agg(args) -> int:
-    """Advance a materialized per-dimension aggregate to the table's
-    current snapshot via the preimage change feed (O(delta) per sync)."""
-    from .pipelines.agg_sync import sync_agg
-    from .sinks.manifest_table import ManifestTable
-
-    spark = _spark(args)
-    table = ManifestTable(spark, args.table)
-    rec = sync_agg(
-        table,
-        args.state,
-        args.dims.split(","),
-        consumer_id=args.consumer,
-        sum_col=args.sum_col,
-        distinct_col=args.distinct_col,
-    )
-    print(json.dumps(rec or {"status": "current"}))
-    return 0
-
-
-def cmd_sync_scd2(args) -> int:
-    """Advance an SCD2 history dimension to the table's current
-    snapshot via the change feed (closed versions append-only)."""
-    from .pipelines.scd_sync import sync_scd2
-    from .sinks.manifest_table import ManifestTable
-
-    spark = _spark(args)
-    table = ManifestTable(spark, args.table)
-    rec = sync_scd2(table, args.state, consumer_id=args.consumer)
-    print(json.dumps(rec))
-    return 0
-
-
 def cmd_fsck(args) -> int:
     from .sinks.manifest_table import ManifestTable
 
@@ -1133,57 +1051,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     cl.add_argument("--n-files", type=int, default=None)
     cl.set_defaults(fn=cmd_compact_log)
-
-    pf = sub.add_parser(
-        "profile", help="per-column rows/nulls/min/max/ndv profile"
-    )
-    pf.add_argument("--table", required=True)
-    pf.add_argument("--cols", default=None, help="comma-separated; "
-                    "default: all non-internal columns")
-    pf.add_argument("--k", type=int, default=256)
-    pf.add_argument("--snapshot", default=None)
-    pf.set_defaults(fn=cmd_profile)
-
-    dc = sub.add_parser(
-        "distinct",
-        help="bounded-state distinct count (KMV), optionally per group",
-    )
-    dc.add_argument("--table", required=True)
-    dc.add_argument("--col", required=True)
-    dc.add_argument("--by", default=None, help="comma-separated group cols")
-    dc.add_argument("--k", type=int, default=256)
-    dc.add_argument("--snapshot", default=None)
-    dc.add_argument(
-        "--sketch-out",
-        default=None,
-        help="write mergeable per-group sketch rows here instead of "
-        "estimating (input to later union estimates)",
-    )
-    dc.set_defaults(fn=cmd_distinct)
-
-    sa = sub.add_parser(
-        "sync-agg", help="advance a materialized aggregate via the feed"
-    )
-    sa.add_argument("--table", required=True)
-    sa.add_argument("--state", required=True)
-    sa.add_argument("--dims", required=True, help="comma-separated columns")
-    sa.add_argument("--sum-col", default=None)
-    sa.add_argument(
-        "--distinct-col", default=None,
-        help="maintain exact COUNT(DISTINCT col) via a retractable "
-        "support table",
-    )
-    sa.add_argument("--consumer", default="agg")
-    sa.set_defaults(fn=cmd_sync_agg)
-
-    sd = sub.add_parser(
-        "sync-scd2",
-        help="advance an SCD2 history dimension via the change feed",
-    )
-    sd.add_argument("--table", required=True)
-    sd.add_argument("--state", required=True)
-    sd.add_argument("--consumer", default="scd2")
-    sd.set_defaults(fn=cmd_sync_scd2)
 
     g = sub.add_parser("synth", help="generate a synthetic changelog")
     g.add_argument("--events", type=int, default=100000)
