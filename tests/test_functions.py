@@ -1,44 +1,6 @@
-"""Unit tests for scalar/vectorized functions (SURVEY.md §2.9 / §2.5 M6-M8)."""
+"""Unit tests for scalar/vectorized functions (SURVEY.md §2.9)."""
 
-import hashlib
-
-from pyspark.sql import functions as F
-
-from vuln_datasync_spark.functions.hashing import vuln_id, vuln_id_is_valid
-from vuln_datasync_spark.functions.normalize import detect_lang_udf, summary_truncate
-
-
-def _vuln_id_oracle(source_id: str) -> str:
-    # the documented algorithm (reference id_generator.go:64-78): first two
-    # sha256 bytes -> 1000-9999, bytes 3-4 -> uppercase hex
-    h = hashlib.sha256(source_id.encode()).digest()
-    num = ((h[0] << 8) | h[1]) % 9000 + 1000
-    return f"VULN-{num}-{h[2]:02X}{h[3]:02X}"
-
-
-def test_vuln_id_bit_parity(spark):
-    ids = ["CVE-2024-1234", "GHSA-abcd-1234", "osv:GO-2023-0001", "x", "∆-unicode"]
-    df = spark.createDataFrame([(s,) for s in ids], ["sid"])
-    got = {
-        r["sid"]: r["vid"]
-        for r in df.select("sid", vuln_id("sid").alias("vid")).collect()
-    }
-    for s in ids:
-        assert got[s] == _vuln_id_oracle(s)
-
-
-def test_vuln_id_deterministic_and_valid(spark):
-    df = spark.range(100).select(
-        F.concat(F.lit("SRC-"), F.col("id").cast("string")).alias("sid")
-    )
-    out = df.select(
-        vuln_id("sid").alias("vid"), vuln_id_is_valid(vuln_id("sid")).alias("ok")
-    )
-    rows = out.collect()
-    assert all(r["ok"] for r in rows)
-    assert len({r["vid"] for r in rows}) == 100  # no collisions over 100 draws
-    again = {r["vid"] for r in out.collect()}
-    assert again == {r["vid"] for r in rows}
+from vuln_datasync_spark.functions.normalize import detect_lang_udf
 
 
 def test_detect_lang(spark):
@@ -54,16 +16,3 @@ def test_detect_lang(spark):
         for r in df.select(detect_lang_udf("path", "content")).collect()
     ]
     assert got == ["python", "go", "python", "text"]
-
-
-def test_summary_truncate(spark):
-    rows = [
-        ("short text.",),
-        ("First sentence here. And then a much longer tail " + "x" * 200,),
-        ("no sentence break at all " + "y" * 200,),
-    ]
-    df = spark.createDataFrame(rows, ["d"])
-    got = [r[0] for r in df.select(summary_truncate("d")).collect()]
-    assert got[0] == "short text."
-    assert got[1] == "First sentence here."
-    assert got[2].endswith("...") and len(got[2]) == 100

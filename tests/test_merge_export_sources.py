@@ -1,60 +1,9 @@
-"""Cross-source priority merge (M3/M4), export sink (S15), archive source
-(S4/S9), changelog sources (P9/S6)."""
-
-import io
-import json
-import zipfile
+"""Export sink (S15) and changelog sources (P9/S6)."""
 
 from pyspark.sql import functions as F
 
-from vuln_datasync_spark.operators.merge import (
-    map_merge_with_precedence,
-    priority_merge,
-)
 from vuln_datasync_spark.sinks.export import export_df
-from vuln_datasync_spark.sources.archive import read_zip_json
 from vuln_datasync_spark.sources.changelog import read_changelog_batch
-
-
-def test_priority_merge_semantics(spark):
-    rows = [
-        # key k1 in all three sources: osv wins, gitlab supplements
-        ("k1", "osv", "", "osv details", 10, ["CVE-1"]),
-        ("k1", "gitlab", "gl summary", "gl details", 11, ["CVE-1", "GHSA-x"]),
-        ("k1", "cve", "cve summary", "cve details", 12, ["CVE-1", "CVE-2"]),
-        # key k2 single source
-        ("k2", "cve", "only cve", "d", 5, ["CVE-9"]),
-    ]
-    df = spark.createDataFrame(
-        rows, "key string, source string, summary string, details string, "
-        "commit_seq long, aliases array<string>"
-    )
-    out = {
-        r["key"]: r
-        for r in priority_merge(
-            df, ["key"], ["summary", "details"], ["aliases"]
-        ).collect()
-    }
-    k1 = out["k1"]
-    # primary = osv; empty osv summary falls back to gitlab's (coalesce M4)
-    assert k1["summary"] == "gl summary"
-    assert k1["details"] == "osv details"
-    # dedup-union keeps primary-first order (A7)
-    assert k1["aliases"] == ["CVE-1", "GHSA-x"]
-    assert k1["sources"] == ["gitlab", "osv"]
-    assert k1["commit_seq"] == 11
-    assert out["k2"]["summary"] == "only cve" and out["k2"]["sources"] == ["cve"]
-
-
-def test_map_merge_precedence(spark):
-    df = spark.createDataFrame(
-        [({"a": "1", "b": None}, {"b": "2", "a": "X"})],
-        "p map<string,string>, s map<string,string>",
-    )
-    got = df.select(
-        map_merge_with_precedence(F.col("p"), F.col("s")).alias("m")
-    ).head()["m"]
-    assert got == {"a": "1", "b": "2"}  # primary overrides, secondary fills
 
 
 def test_export_json_and_csv(spark, tmp_path):
@@ -71,24 +20,6 @@ def test_export_json_and_csv(spark, tmp_path):
     assert "arr" in back2.columns
 
 
-def test_zip_json_source(spark, tmp_path):
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as zf:
-        zf.writestr("a/r1.json", json.dumps({"id": "A", "score": 1.5}))
-        zf.writestr("a/r2.json", json.dumps({"id": "B", "score": 2.0}))
-        zf.writestr("a/skip.txt", "not json")
-        zf.writestr("b/bad.json", "{broken")
-        zf.writestr("../evil.json", json.dumps({"id": "evil"}))
-    (tmp_path / "arch.zip").write_bytes(buf.getvalue())
-    df = read_zip_json(
-        spark, str(tmp_path), "id string, score double", member_glob="*.json"
-    )
-    rows = {r["member"]: r for r in df.collect()}
-    assert set(rows) == {"a/r1.json", "a/r2.json", "b/bad.json"}
-    assert rows["a/r1.json"]["id"] == "A" and rows["a/r2.json"]["score"] == 2.0
-    assert rows["b/bad.json"]["_corrupt"] is not None  # graceful skip
-
-
 def test_changelog_incremental_read(spark, tmp_path):
     from vuln_datasync_spark.datagen import generate_changelog_pandas, write_changelog
 
@@ -98,341 +29,6 @@ def test_changelog_incremental_read(spark, tmp_path):
     inc = read_changelog_batch(spark, str(tmp_path / "log"), since_seq=500)
     assert full.count() == len(ev)
     assert inc.agg(F.min("commit_seq")).first()[0] == 501
-
-
-def test_alias_overlap_match_priority_and_sanitation(spark):
-    from vuln_datasync_spark.operators.merge import alias_overlap_match
-
-    incoming = spark.createDataFrame(
-        [
-            (10, ["CVE-1", "VULN-1234-ABCD"], "osv", 5),
-            (11, ["GHSA-x"], "osv", 6),
-            (12, ["nothing-shared"], "cve", 7),
-        ],
-        "vuln_id long, aliases array<string>, source string, commit_seq long",
-    )
-    existing = spark.createDataFrame(
-        [
-            (20, ["CVE-1"], "cve", 1),        # matches 10 (only non-VULN alias)
-            (21, ["CVE-1"], "gitlab", 2),     # better priority -> wins for 10
-            (22, ["GHSA-x"], "gitlab", 3),
-            (23, ["GHSA-x"], "gitlab", 9),    # same priority, newer -> wins for 11
-            (24, ["VULN-1234-ABCD"], "osv", 4),  # only a VULN id: must never match
-        ],
-        "vuln_id long, aliases array<string>, source string, commit_seq long",
-    )
-    got = {
-        r["incoming_id"]: (r["matched_id"], r["matched_source"])
-        for r in alias_overlap_match(incoming, existing).collect()
-    }
-    assert got == {10: (21, "gitlab"), 11: (23, "gitlab")}  # 12: no match
-
-
-def test_merge_by_alias_overlap_end_to_end(spark):
-    from vuln_datasync_spark.operators.merge import merge_by_alias_overlap
-
-    incoming = spark.createDataFrame(
-        [(100, ["CVE-9"], "osv", 10, "", ["CVE-9", "EXTRA-1"])],
-        "vuln_id long, aliases array<string>, source string, commit_seq long,"
-        " details string, alias_payload array<string>",
-    ).select("vuln_id", "source", "commit_seq", "details",
-             F.col("alias_payload").alias("aliases"))
-    existing = spark.createDataFrame(
-        [
-            (200, ["CVE-9"], "gitlab", 3, "existing detail text"),
-            (201, ["OTHER"], "cve", 4, "unrelated"),
-        ],
-        "vuln_id long, aliases array<string>, source string, commit_seq long,"
-        " details string",
-    )
-    out = {
-        r["vuln_id"]: r
-        for r in merge_by_alias_overlap(
-            incoming, existing, scalar_cols=["details"], array_cols=["aliases"]
-        ).collect()
-    }
-    # incoming 100 merged INTO existing 200 (alias overlap on CVE-9):
-    # osv is primary but has empty details -> coalesce takes existing's
-    m = out[200]
-    assert m["details"] == "existing detail text"
-    assert sorted(m["aliases"]) == ["CVE-9", "EXTRA-1"]
-    assert m["sources"] == ["gitlab", "osv"]
-    assert m["commit_seq"] == 10
-    # unmatched existing record passes through under its own id
-    assert out[201]["details"] == "unrelated"
-    # no new-record row for 100 (it merged into 200)
-    assert 100 not in out
-
-
-def test_merge_by_alias_overlap_intra_batch(spark):
-    """Two incoming records sharing an alias with NO existing match must
-    merge into one record (keyed by the best-priority member); if any
-    group member matches existing, the whole group keys to it."""
-    from vuln_datasync_spark.operators.merge import merge_by_alias_overlap
-
-    incoming = spark.createDataFrame(
-        [
-            # group 1: osv + cve share CVE-7, nothing in existing
-            (300, ["CVE-7"], "cve", 1, "cve detail"),
-            (301, ["CVE-7", "GHSA-7"], "osv", 2, ""),
-            # group 2: two records share CVE-8; one also matches existing
-            (310, ["CVE-8"], "cve", 3, "from cve"),
-            (311, ["CVE-8", "OLD-1"], "osv", 4, "from osv"),
-        ],
-        "vuln_id long, aliases array<string>, source string, commit_seq long,"
-        " details string",
-    )
-    existing = spark.createDataFrame(
-        [(400, ["OLD-1"], "gitlab", 1, "stored detail")],
-        "vuln_id long, aliases array<string>, source string, commit_seq long,"
-        " details string",
-    )
-    out = {
-        r["vuln_id"]: r
-        for r in merge_by_alias_overlap(
-            incoming, existing, scalar_cols=["details"], array_cols=["aliases"]
-        ).collect()
-    }
-    # group 1 collapses to ONE record keyed by the osv member (301)
-    assert 300 not in out
-    g1 = out[301]
-    assert g1["details"] == "cve detail"  # osv primary empty -> coalesce
-    assert sorted(g1["sources"]) == ["cve", "osv"]
-    # group 2 merges into the EXISTING record 400 via member 311's alias
-    assert 310 not in out and 311 not in out
-    g2 = out[400]
-    assert g2["details"] == "from osv"  # osv outranks gitlab/cve
-    assert g2["commit_seq"] == 4
-
-
-def test_merge_alias_chain_transitive_closure(spark):
-    """A 4-record alias CHAIN (A~B via K1, B~C via K2, C~D via K3 — no
-    direct A~D alias) must collapse to ONE record, like the reference's
-    serial inserts (merger.go:74-105); fields fold across ALL members,
-    not just the top-2."""
-    from vuln_datasync_spark.operators.merge import merge_by_alias_overlap
-
-    incoming = spark.createDataFrame(
-        [
-            (1, ["K-1"], "osv", 1, "", ["A-only"]),
-            (2, ["K-1", "K-2"], "osv", 2, "", ["B-only"]),
-            (3, ["K-2", "K-3"], "osv", 3, "details from C", ["C-only"]),
-            (4, ["K-3"], "osv", 4, "details from D", ["D-only"]),
-        ],
-        "vuln_id long, aliases array<string>, source string, commit_seq "
-        "long, details string, refs array<string>",
-    )
-    existing = incoming.limit(0)
-    out = merge_by_alias_overlap(
-        incoming, existing, scalar_cols=["details"],
-        array_cols=["aliases", "refs"],
-    ).collect()
-    assert len(out) == 1
-    m = out[0]
-    # leader = best (priority, -ord, id): all osv, so newest commit_seq=4
-    assert m["vuln_id"] == 4
-    # first non-empty scalar in rank order (rank order: 4, 3, 2, 1)
-    assert m["details"] == "details from D"
-    # arrays union across ALL members in rank order
-    assert m["aliases"] == ["K-3", "K-2", "K-1"]
-    assert sorted(m["refs"]) == ["A-only", "B-only", "C-only", "D-only"]
-    assert m["sources"] == ["osv"]
-    assert m["commit_seq"] == 4
-
-
-def test_merge_alias_chain_through_existing(spark):
-    """A chain whose interior member matches an existing record keys the
-    WHOLE component to that existing record."""
-    from vuln_datasync_spark.operators.merge import merge_by_alias_overlap
-
-    incoming = spark.createDataFrame(
-        [
-            (1, ["K-1"], "cve", 1, "tail detail"),
-            (2, ["K-1", "K-2"], "cve", 2, ""),
-            (3, ["K-2", "STORED"], "cve", 3, ""),
-        ],
-        "vuln_id long, aliases array<string>, source string, commit_seq "
-        "long, details string",
-    )
-    existing = spark.createDataFrame(
-        [(900, ["STORED"], "gitlab", 0, "")],
-        "vuln_id long, aliases array<string>, source string, commit_seq "
-        "long, details string",
-    )
-    out = {
-        r["vuln_id"]: r
-        for r in merge_by_alias_overlap(
-            incoming, existing, scalar_cols=["details"],
-            array_cols=["aliases"],
-        ).collect()
-    }
-    assert set(out) == {900}
-    m = out[900]
-    # gitlab(2) outranks cve(3) but has empty details -> fold takes the
-    # best-ranked NON-EMPTY value, from record 1 at the chain's far end
-    assert m["details"] == "tail detail"
-    assert sorted(m["sources"]) == ["cve", "gitlab"]
-    assert set(m["aliases"]) == {"K-1", "K-2", "STORED"}
-
-
-def test_priority_merge_plan_has_no_collect_list(spark):
-    """Aggregation state must be O(1) per key — a hot alias group must
-    never buffer its whole payload (VERDICT r02 'what's wrong' #1)."""
-    df = spark.createDataFrame(
-        [(1, "osv", 1, "d", ["a"])],
-        "k long, source string, commit_seq long, details string, "
-        "aliases array<string>",
-    )
-    plan = priority_merge(
-        df, ["k"], ["details"], ["aliases"]
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "collect_list" not in plan
-
-
-def test_alias_components_matches_union_find_oracle(spark):
-    """Randomized graphs: label propagation must produce exactly the
-    connected components (and leaders) of a driver-side union-find over
-    shared aliases — multi-hop, star, and singleton shapes included."""
-    import random
-
-    from vuln_datasync_spark.operators.merge import (
-        SOURCE_PRIORITY,
-        alias_components,
-    )
-
-    for seed in (7, 21, 99):
-        rng = random.Random(seed)
-        n = 40
-        srcs = ["osv", "gitlab", "cve"]
-        recs = []
-        for i in range(n):
-            n_alias = rng.choice([0, 1, 1, 2, 3])
-            aliases = [f"AL-{rng.randrange(25)}" for _ in range(n_alias)]
-            recs.append(
-                (i, aliases, rng.choice(srcs), rng.randrange(100))
-            )
-        df = spark.createDataFrame(
-            recs,
-            "vuln_id long, aliases array<string>, source string, "
-            "commit_seq long",
-        )
-        got = {
-            r["vuln_id"]: r["_leader"]
-            for r in alias_components(df).collect()
-        }
-
-        # union-find oracle
-        parent = list(range(n))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        by_alias = {}
-        for i, aliases, _, _ in recs:
-            for a in aliases:
-                if a in by_alias:
-                    ra, rb = find(by_alias[a]), find(i)
-                    parent[ra] = rb
-                else:
-                    by_alias[a] = i
-        comp = {}
-        for i, _, src, ord_ in recs:
-            comp.setdefault(find(i), []).append(
-                (SOURCE_PRIORITY[src], -ord_, i)
-            )
-        want = {}
-        for members in comp.values():
-            leader = min(members)[2]
-            for _, _, i in members:
-                want[i] = leader
-        assert got == want, f"seed {seed}"
-
-
-def test_fold_merge_source_ords_and_tiebreak(spark):
-    from vuln_datasync_spark.operators.merge import fold_merge
-
-    df = spark.createDataFrame(
-        [
-            ("K1", "osv", 5, "osv old", 0),
-            ("K1", "osv", 9, "osv new", 1),
-            ("K1", "cve", 7, "cve text", 0),
-        ],
-        "k string, source string, commit_seq long, summary string, _inc int",
-    )
-    out = fold_merge(
-        df, ["k"], ["summary"], [], tiebreak_col="_inc",
-        with_source_ords=True,
-    ).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert r["summary"] == "osv new"  # priority osv, then newest ord
-    assert r["sources"] == ["cve", "osv"]
-    assert r["commit_seq"] == 9
-    # per-source max ord, duplicate source rows reduced
-    assert dict(r["source_ords"]) == {"osv": 9, "cve": 7}
-
-    # exact (priority, ord) tie resolves to the higher tiebreak value
-    tie = spark.createDataFrame(
-        [
-            ("K2", "osv", 5, "stored", 0),
-            ("K2", "osv", 5, "incoming", 1),
-        ],
-        "k string, source string, commit_seq long, summary string, _inc int",
-    )
-    r2 = fold_merge(
-        tie, ["k"], ["summary"], [], tiebreak_col="_inc",
-        with_source_ords=True,
-    ).collect()[0]
-    assert r2["summary"] == "incoming"
-    assert dict(r2["source_ords"]) == {"osv": 5}
-
-
-def test_fold_merge_source_ords_with_arrays(spark):
-    from vuln_datasync_spark.operators.merge import fold_merge
-
-    df = spark.createDataFrame(
-        [
-            ("K1", "osv", 3, "s", ["A", "B"]),
-            ("K1", "cve", 8, "", ["B", "C"]),
-        ],
-        "k string, source string, commit_seq long, summary string, "
-        "aliases array<string>",
-    )
-    r = fold_merge(
-        df, ["k"], ["summary"], ["aliases"], with_source_ords=True
-    ).collect()[0]
-    assert r["aliases"] == ["A", "B", "C"]
-    # the array explode duplicates rows; collect_set keeps the map exact
-    assert dict(r["source_ords"]) == {"osv": 3, "cve": 8}
-
-
-def test_alias_components_duplicate_ids_converge(spark, caplog):
-    """Duplicate ids (same vuln_id from two sources) with NO aliases must
-    not stall label propagation: one node per id, loop converges, no
-    'did not converge' warning."""
-    import logging
-
-    from vuln_datasync_spark.operators.merge import alias_components
-
-    df = spark.createDataFrame(
-        [
-            ("V-1", [], "osv", 5),
-            ("V-1", [], "cve", 9),
-            ("V-2", ["CVE-7"], "osv", 1),
-            ("V-3", ["CVE-7"], "cve", 2),
-        ],
-        "vuln_id string, aliases array<string>, source string, "
-        "commit_seq long",
-    )
-    with caplog.at_level(logging.INFO, logger="vuln_datasync_spark.merge"):
-        rows = alias_components(df, max_iters=4).collect()
-    assert not any("did not converge" in r.message for r in caplog.records)
-    got = {r["vuln_id"]: r["_leader"] for r in rows}
-    assert got == {"V-1": "V-1", "V-2": "V-2", "V-3": "V-2"}
-    assert len(rows) == 3  # one row per id, no fan-out duplicates
 
 
 def test_export_run_tracking(spark, tmp_path, capsys, monkeypatch):

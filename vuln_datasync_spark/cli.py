@@ -16,7 +16,6 @@ Subcommands:
   replay   batch-apply a whole changelog directory to the table
   stream   tail the changelog with Structured Streaming (availableNow or
            processingTime trigger), exactly-once, resumable
-  ingest-stream  advisory sync as a resumable micro-batch tail
   export   snapshot export to json/csv (optionally gzip)
   stats    table + lineage summary (reference /api/v1/stats analog)
   compact  expire old snapshots and drop aged tombstones
@@ -216,69 +215,6 @@ def cmd_compact(args) -> int:
         max_files=args.lineage_max_files
     )
     print(json.dumps(out))
-    return 0
-
-
-def cmd_ingest(args) -> int:
-    """Advisory sync run (reference handleSyncVulnerabilities analog):
-    normalize whichever sources were given, alias-merge, upsert."""
-    import os
-
-    from .pipelines import (
-        create_vuln_table,
-        gitlab_advisories_to_vulns,
-        ingest_advisories,
-    )
-    from .sinks.manifest_table import ManifestTable
-    from .sources.advisories import read_advisories
-    from .sources.cve import normalize_cve_records
-    from .sources.osv import normalize_osv_records
-
-    spark = _spark(args)
-    if os.path.exists(os.path.join(args.table, "_table.json")):
-        table = ManifestTable(spark, args.table)
-    else:
-        table = create_vuln_table(spark, args.table, n_buckets=args.buckets)
-    by_source = {}
-    if args.osv_json:
-        raw = spark.read.text(args.osv_json).withColumnRenamed("value", "raw")
-        by_source["osv"] = normalize_osv_records(raw, "raw")
-    if args.cve_json:
-        raw = spark.read.text(args.cve_json).withColumnRenamed("value", "raw")
-        by_source["cve"] = normalize_cve_records(raw, "raw")
-    if args.gitlab_tree:
-        by_source["gitlab"] = gitlab_advisories_to_vulns(
-            read_advisories(spark, args.gitlab_tree)
-        )
-    if not by_source:
-        print(json.dumps({"error": "no sources given"}))
-        return 2
-    lineage = ingest_advisories(table, by_source, run_seq=args.run_seq)
-    print(json.dumps(lineage))
-    return 0
-
-
-def cmd_ingest_stream(args) -> int:
-    """Advisory sync as a resumable Structured Streaming tail (reference
-    scheduled-sync loop -> availableNow drain; same checkpoint-resume
-    semantics as the CDC `stream` subcommand)."""
-    from .pipelines import run_advisory_stream
-
-    spark = _spark(args)
-    table = run_advisory_stream(
-        spark,
-        args.incoming,
-        args.table,
-        args.checkpoint,
-        max_files_per_trigger=args.max_files_per_trigger,
-    )
-    lineage = table.read_lineage()
-    print(json.dumps({
-        "rows": table.read().count(),
-        "batches_applied": lineage.select(
-            "checkpoint_id", "batch_id"
-        ).distinct().count(),
-    }))
     return 0
 
 
@@ -804,33 +740,6 @@ def build_parser() -> argparse.ArgumentParser:
     c.add_argument("--min-bucket-logs", type=int, default=1,
                    help="with --logs: only fold buckets with at least this many log files")
     c.set_defaults(fn=cmd_compact)
-
-    i = sub.add_parser(
-        "ingest", help="advisory sync run (osv/cve/gitlab -> vuln table)"
-    )
-    i.add_argument("--table", required=True)
-    i.add_argument("--buckets", type=int, default=16)
-    i.add_argument("--run-seq", type=int, required=True)
-    i.add_argument("--osv-json", default=None,
-                   help="path/glob of OSV records, one JSON per line")
-    i.add_argument("--cve-json", default=None,
-                   help="path/glob of CVE 5.x records, one JSON per line")
-    i.add_argument("--gitlab-tree", default=None,
-                   help="root of a GitLab advisory YAML tree")
-    i.set_defaults(fn=cmd_ingest)
-
-    istr = sub.add_parser(
-        "ingest-stream",
-        help="advisory sync as a resumable micro-batch tail over a drop "
-        "directory of canonical advisory parquet",
-    )
-    istr.add_argument("--table", required=True)
-    istr.add_argument("--incoming", required=True,
-                      help="directory of canonical advisory parquet "
-                      "(ADVISORY_STREAM_DDL schema)")
-    istr.add_argument("--checkpoint", required=True)
-    istr.add_argument("--max-files-per-trigger", type=int, default=None)
-    istr.set_defaults(fn=cmd_ingest_stream)
 
     sox = sub.add_parser(
         "sync-outbox",

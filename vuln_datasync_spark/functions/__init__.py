@@ -1,7 +1,2 @@
-from .hashing import content_sha256, vuln_id, vuln_id_is_valid  # noqa: F401
-from .normalize import (  # noqa: F401
-    detect_lang_udf,
-    ecosystem_from_slug,
-    normalize_events,
-    summary_truncate,
-)
+from .hashing import content_sha256  # noqa: F401
+from .normalize import detect_lang_udf, normalize_events  # noqa: F401

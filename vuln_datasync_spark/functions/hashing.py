@@ -1,14 +1,8 @@
-"""Hashing + deterministic ID functions — pure column expressions (JVM-side).
+"""Content hashing — a pure column expression (JVM-side).
 
-Reference parity:
-  * content hash: sha256 of the canonical content string
-    (/root/reference/internal/merger/normalizer.go:359-372) — engine
-    invariant per input_hint is sha256(content) row equality.
-  * deterministic ID: ``VULN-<4 digits>-<4 hex>`` derived from
-    sha256(source_id): digits = ((h[0]<<8)|h[1]) % 9000 + 1000, suffix =
-    uppercase hex of h[2],h[3]
-    (/root/reference/internal/utils/id_generator.go:64-78). Bit-exact here
-    via conv/substring on the sha2 hex string.
+Reference parity: sha256 of the canonical content string
+(/root/reference/internal/merger/normalizer.go:359-372) — engine invariant
+per input_hint is sha256(content) row equality.
 """
 
 from __future__ import annotations
@@ -16,36 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-VULN_ID_RE = "^VULN-[0-9]{4}-[0-9A-F]{4}$"
-
 
 def content_sha256(col: Column | str) -> Column:
     """Hex sha256 of a string column; null-safe (null -> null)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.when(c.isNotNull(), F.sha2(c, 256))
-
-
-def vuln_id(source_id: Column | str) -> Column:
-    """Deterministic VULN-DDDD-XXXX id, bit-parity with the reference
-    (id_generator.go:64-78): first 2 bytes -> 1000-9999, bytes 3-4 -> hex."""
-    c = F.col(source_id) if isinstance(source_id, str) else source_id
-    h = F.sha2(c, 256)  # lowercase hex
-    digits = (F.conv(F.substring(h, 1, 4), 16, 10).cast("long") % 9000) + 1000
-    suffix = F.upper(F.substring(h, 5, 4))
-    return F.concat_ws("-", F.lit("VULN"), digits.cast("string"), suffix)
-
-
-def vuln_id_is_valid(id_col: Column | str) -> Column:
-    """Structural validation of the 14-char VULN id
-    (/root/reference/internal/utils/id_generator.go:33-62)."""
-    c = F.col(id_col) if isinstance(id_col, str) else id_col
-    return (F.length(c) == 14) & c.rlike(VULN_ID_RE)
-
-
-def sanitize_aliases(aliases: Column | str) -> Column:
-    """P5: drop engine-generated VULN ids from an alias array so matching
-    only ever happens on original source ids — the higher-order-filter form
-    of /root/reference/internal/merger/merger.go:108-121
-    (filterValidAliases)."""
-    c = F.col(aliases) if isinstance(aliases, str) else aliases
-    return F.filter(c, lambda a: ~vuln_id_is_valid(a))

@@ -123,10 +123,6 @@ def get_spark(
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.parquet.compression.codec": "zstd",
         "spark.ui.enabled": "false",
-        # iterative operators (alias components, corpus prep) build plans
-        # whose rendered text -- produced for every AQE re-plan even with
-        # the UI off -- outgrows a small driver heap; keep it bounded
-        "spark.sql.maxPlanStringLength": "1m",
         "spark.driver.memory": driver_mem,
         # This microVM serializes concurrent page faults catastrophically
         # (measured: fresh-page memcpy 112 GB/s at 4 workers -> 2 GB/s at

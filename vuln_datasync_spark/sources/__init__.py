@@ -1,2 +1,1 @@
-from .archive import read_zip_json  # noqa: F401
 from .changelog import read_changelog_batch, read_changelog_stream  # noqa: F401
