@@ -15,12 +15,13 @@ pipeline:
 
 Layout:
     datagen/    deterministic synthetic changelog + single-threaded oracle
-    functions/  scalar/vectorized column functions (hashing, normalize, text)
-    operators/  LWW resolve, merge resolution, dedup, similarity
-    sinks/      keyed MERGE sinks (manifest parquet, Iceberg), exports
-    sources/    changelog batch/stream sources
-    streaming/  Structured Streaming pipeline + lineage
-    plans/      query catalog (Spark impl + DuckDB oracle SQL pairs)
+    functions/  column functions (content hash, validate/enrich normalize)
+    operators/  LWW resolve (full-row and partial-update), quality rules
+    sinks/      ManifestTable keyed MERGE sink, Bloom/Z-order layout, exports
+    sources/    changelog batch/stream sources, Debezium/Maxwell envelopes
+    streaming/  apply_batch / run_stream pipeline + lineage
+    plans/      CDC query catalog (Spark impl + DuckDB oracle SQL pairs)
+    cli.py      spark-submit subcommands over the same engine
 
 Importing the package installs ``_zipguard`` (CPython < 3.13): Python
 workers import it when they unpickle a package UDF, and from then on a
