@@ -33,9 +33,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def ensure_shipped(spark: SparkSession) -> None:
     """Ship this package to executors via addPyFile (idempotent per
     session). Python workers import pickled-by-reference module functions
-    (pandas UDFs, applyInPandasWithState) and do NOT inherit the driver's
-    sys.path — without this, UDF-bearing queries fail with
-    ModuleNotFoundError whenever the driver's cwd isn't the repo root.
+    (pandas UDFs) and do NOT inherit the driver's sys.path — without this,
+    UDF-bearing queries fail with ModuleNotFoundError whenever the
+    driver's cwd isn't the repo root.
     Equivalent to spark-submit --py-files."""
     sc = spark.sparkContext
     if getattr(sc, "_vds_pkg_shipped", False):
