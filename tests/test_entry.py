@@ -1,4 +1,4 @@
-"""Driver contract (__spark_entry__.py): entry() replays the flagship
+"""Entry-point contract (__spark_entry__.py): entry() replays the flagship
 changelog to the pandas oracle's final state, and queries() /
 oracle_sql() name the same CDC catalog entries."""
 

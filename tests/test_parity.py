@@ -1,5 +1,6 @@
-"""Catalog ↔ DuckDB oracle parity at sf0.001 — in-suite mirror of the
-driver's correctness gate."""
+"""Catalog ↔ DuckDB oracle parity at sf0.001: each catalog entry's Spark
+result must equal its oracle SQL's, compared column by column after
+sorting."""
 
 import math
 

@@ -1,7 +1,7 @@
 """Content hashing — a pure column expression (JVM-side).
 
 Reference parity: sha256 of the canonical content string
-(/root/reference/internal/merger/normalizer.go:359-372) — engine invariant
+(reference internal/merger/normalizer.go:359-372) — engine invariant
 per input_hint is sha256(content) row equality.
 """
 

@@ -1,5 +1,5 @@
 """Query catalog: the CDC engine's catalog entries as (Spark impl, DuckDB
-oracle SQL) pairs over the driver's testdata tables.
+oracle SQL) pairs over the testdata tables.
 
 Contract (driver, __spark_entry__.py): each Spark callable takes
 (spark, sf_dir) and returns a DataFrame whose column NAMES and VALUES match
