@@ -4,9 +4,7 @@ entry(spark)    — flagship CDC replay on a deterministic synthetic changelog
                   (engine path: normalize -> LWW, window or ordkey as
                   apply_batch's _resolve_lww_mode picks -> manifest MERGE),
                   returning per-repo final-state stats + content checksums.
-queries()       — the CDC engine's catalog entries: partial-update LWW,
-                  Debezium/Maxwell envelope parsing, the change feed, the
-                  metadata row count and the data-quality report
+queries()       — one entry per catalog operator, the CDC engine's among them
                   (catalog: vuln_datasync_spark/plans/queries.py).
 oracle_sql()    — matching DuckDB SQL for the driver's correctness gate.
 """
@@ -67,7 +65,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """The CDC engine's catalog entries, keyed by name."""
+    """One entry per catalog operator, keyed by name."""
     return query_map()
 
 

@@ -337,3 +337,39 @@ def test_cli_changes_feed(spark, tmp_path, capsys, monkeypatch):
     assert {(r["repo"], r["_change_type"]) for r in lines} == {
         ("r1", "update"), ("r2", "insert")
     }
+
+
+def test_cli_distinct_global_and_sketch(spark, tmp_path, capsys, monkeypatch):
+    """`distinct` without --by is the global path: count and sketch-out
+    must both work over the whole table (regression: empty group cols
+    used to crash the pandas groupby in kmv_candidates)."""
+    monkeypatch.setattr(cli, "_spark", lambda args: spark)
+    tbl = str(tmp_path / "dtbl")
+    rows = [
+        (i, "insert", f"r{i % 13}", f"p{i}.py", f"c{i}", "python",
+         f"v{i % 41}", None, None)
+        for i in range(1, 400)
+    ]
+    apply_batch(
+        spark.createDataFrame(rows, CHANGELOG_SCHEMA),
+        ManifestTable.create(spark, tbl, n_buckets=4), "c", 0,
+    )
+
+    assert cli.main(["distinct", "--table", tbl, "--col", "content"]) == 0
+    est = json.loads(capsys.readouterr().out.strip())
+    assert est["est_distinct"] == 41  # < k -> exact
+
+    sk = str(tmp_path / "sk")
+    assert cli.main(
+        ["distinct", "--table", tbl, "--col", "content", "--sketch-out", sk]
+    ) == 0
+    rec = json.loads(capsys.readouterr().out.strip())
+    assert rec["sketch"] == sk
+    [srow] = spark.read.parquet(sk).collect()
+    assert len(srow["hashes"]) == 41
+
+    assert cli.main(
+        ["distinct", "--table", tbl, "--col", "content", "--by", "repo"]
+    ) == 0
+    per = json.loads(capsys.readouterr().out.strip())
+    assert len(per) == 13 and all(r["est_distinct"] >= 1 for r in per)

@@ -103,6 +103,65 @@ def test_delete_where_range_scoped_scan(spark, tmp_path):
     assert table.read().count() == 40
 
 
+def test_delete_where_propagates_to_minhash_index(spark, tmp_path):
+    """A takedown via delete_where nulls the tombstone payload, but the
+    change feed's delete rows carry the OLD text (preimage side), so the
+    feed-driven dedup index still clears the right cells."""
+    from vuln_datasync_spark.operators.dedup_index import (
+        build_minhash_index,
+        dedup_against_index,
+    )
+    from vuln_datasync_spark.pipelines.index_sync import sync_minhash_index
+
+    D_SCHEMA = (
+        "doc_id long, commit_seq long, commit string, op string, text string"
+    )
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    table = ManifestTable.create(
+        spark, str(tmp_path / "t"), n_buckets=4, key_cols=("doc_id",)
+    )
+    docs = [
+        (i, i, f"c{i}", "insert",
+         " ".join(f"w{i}x{j} filler{i * 7 + j}" for j in range(20)))
+        for i in range(1, 6)
+        if i != 3
+    ] + [(3, 3, "c3", "insert", text)]
+    table.merge(spark.createDataFrame(docs, D_SCHEMA), "dwmi", 0)
+    idx = str(tmp_path / "idx")
+    assert sync_minhash_index(table, idx, "text")["bootstrap"] is True
+
+    probe = spark.createDataFrame(
+        [(999, text + " tail")], ["doc_id", "text"]
+    )
+    assert {
+        r["dup_id"]
+        for r in dedup_against_index(probe, "text", "doc_id", idx).collect()
+    } == {3}
+
+    rec = table.delete_where("doc_id = 3", checkpoint_id="takedown")
+    assert rec["rows_applied"] == 1
+    assert sync_minhash_index(table, idx, "text")["removed"]["deleted_ids"] == 1
+    assert (
+        dedup_against_index(probe, "text", "doc_id", idx)
+        .filter("dup_id = 3")
+        .count()
+        == 0
+    )
+    # index equals a fresh build over the post-takedown live table
+    fresh = str(tmp_path / "fresh")
+    build_minhash_index(table.read(), "text", "doc_id", fresh)
+
+    def rows(path):
+        return {
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in spark.read.parquet(path)
+            .select("id", "minhash", "bucket", "band", "pfx")
+            .collect()
+        }
+
+    assert rows(idx) == rows(fresh)
+
+
 def test_cli_delete_where(spark, tmp_path, capsys, monkeypatch):
     from vuln_datasync_spark import cli
 

@@ -1,13 +1,15 @@
 """Entry-point contract (__spark_entry__.py): entry() replays the flagship
-changelog to the pandas oracle's final state, and queries() /
-oracle_sql() name the same CDC catalog entries."""
+changelog to the pandas oracle's final state, queries() names every
+catalog entry, the CDC engine's among them, and oracle_sql() covers every
+entry that has oracle SQL."""
 
 import pandas as pd
 
 from __spark_entry__ import entry, oracle_sql, queries
 from vuln_datasync_spark.datagen import generate_changelog_pandas, replay_oracle
+from vuln_datasync_spark.plans.queries import QUERIES
 
-CATALOG = {
+CDC_ENTRIES = {
     "m3_partial_update_lww",
     "src_debezium_parse",
     "src_maxwell_parse",
@@ -42,5 +44,9 @@ def test_entry_matches_oracle_per_repo(spark):
     )
 
 
-def test_queries_and_oracle_sql_name_the_cdc_catalog():
-    assert set(queries()) == set(oracle_sql()) == CATALOG
+def test_queries_and_oracle_sql_name_the_catalog():
+    names = [qd.name for qd in QUERIES]
+    assert list(queries()) == names
+    assert CDC_ENTRIES <= set(names)
+    assert set(oracle_sql()) == {qd.name for qd in QUERIES if qd.sql is not None}
+    assert CDC_ENTRIES <= set(oracle_sql())

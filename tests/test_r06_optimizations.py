@@ -5,7 +5,18 @@ refactor cannot silently change results while chasing speed.
 * normalize split: validate_events -> lww -> enrich_events must equal
   the pre-split normalize -> lww pipeline row-for-row (including the
   sniffed-lang and delete-null-lang ladders).
+* minhash projected form: the _sh-projection signature must equal the
+  direct per-lane expression over char_shingles.
+* lang-id projected form: the hit-count-projection path must equal the
+  single-expression lang_id.
+* _fan: adaptive — repartitions a below-parallelism scan, leaves an
+  at-parallelism frame untouched.
+* decode_y4m: C420 with odd luma dims raises a clean ValueError.
 """
+
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
 
 from vuln_datasync_spark.functions.normalize import (
     enrich_events,
@@ -50,3 +61,86 @@ def test_post_reduce_enrichment_equals_pre_reduce_on_winners(spark):
     pre = lww_resolve(enrich_events(ev), mode="window")
     assert post.exceptAll(pre).count() == 0
     assert pre.exceptAll(post).count() == 0
+
+
+def test_minhash_projected_form_matches_per_lane_expression(spark):
+    from vuln_datasync_spark.functions.text import char_shingles
+    from vuln_datasync_spark.operators.dedup import (
+        minhash_expr,
+        minhash_signature,
+    )
+
+    df = spark.createDataFrame(
+        [(i, f"Document number {i} with some shared text body") for i in range(40)]
+        + [(99, "")],
+        "doc_id long, text string",
+    )
+    got = minhash_signature(df, "text", k=8).select("doc_id", "minhash")
+    sh = char_shingles(F.col("text"), 5)
+    want = df.select(
+        "doc_id",
+        F.array(*[minhash_expr(sh, i) for i in range(8)]).alias("minhash"),
+    )
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+def test_lang_id_projected_form_matches_single_expression(spark):
+    from vuln_datasync_spark.functions.text import (
+        STOPWORDS,
+        distinct_tokens,
+        lang_id,
+        lang_id_from_hits,
+        stopword_hits_from_tokens,
+    )
+
+    df = spark.createDataFrame(
+        [
+            (0, "the cat and the dog is in the house"),
+            (1, "der hund ist nicht mit das"),
+            (2, "el perro que los con una"),
+            (3, "le chat dans les des pour"),
+            (4, "zzz qqq xxx"),
+            (5, ""),
+            # tie between banks: earlier bank order must win in both forms
+            (6, "the der"),
+        ],
+        "doc_id long, text string",
+    )
+    projected = (
+        df.select("doc_id", distinct_tokens("text").alias("_t"))
+        .select(
+            "doc_id",
+            *[
+                stopword_hits_from_tokens(F.col("_t"), lang).alias(f"_h_{lang}")
+                for lang in STOPWORDS
+            ],
+        )
+        .select(
+            "doc_id",
+            lang_id_from_hits(
+                {lang: F.col(f"_h_{lang}") for lang in STOPWORDS}
+            ).alias("pred"),
+        )
+    )
+    direct = df.select("doc_id", lang_id("text").alias("pred"))
+    assert sorted(projected.collect()) == sorted(direct.collect())
+
+
+def test_fan_is_adaptive(spark):
+    from vuln_datasync_spark.plans.queries import _fan
+
+    par = spark.sparkContext.defaultParallelism
+    narrow = spark.range(0, 100, 1, 1).toDF("id")
+    assert _fan(narrow).rdd.getNumPartitions() == par
+    wide = spark.range(0, 100, 1, par).toDF("id")
+    # already at parallelism: untouched (same plan object, no exchange)
+    assert _fan(wide) is wide
+
+
+def test_decode_y4m_rejects_odd_c420_dims():
+    from vuln_datasync_spark.operators.multimodal import decode_y4m
+
+    raw = b"YUV4MPEG2 W3 H2 F25:1 C420\n" + b"FRAME\n" + bytes(3 * 2 + 2 * 1)
+    with pytest.raises(ValueError, match="C420 requires even"):
+        decode_y4m(raw)

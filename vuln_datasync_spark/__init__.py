@@ -15,12 +15,14 @@ pipeline:
 
 Layout:
     datagen/    deterministic synthetic changelog + single-threaded oracle
-    functions/  column functions (content hash, validate/enrich normalize)
-    operators/  LWW resolve (full-row and partial-update), quality rules
+    functions/  column functions (content hash, normalize, text)
+    operators/  LWW resolve, quality rules, dedup, similarity, corpus,
+                analytics and multimodal operators
+    pipelines/  corpus prep, index and aggregate sync over the same sink
     sinks/      ManifestTable keyed MERGE sink, Bloom/Z-order layout, exports
     sources/    changelog batch/stream sources, Debezium/Maxwell envelopes
-    streaming/  apply_batch / run_stream pipeline + lineage
-    plans/      CDC query catalog (Spark impl + DuckDB oracle SQL pairs)
+    streaming/  apply_batch / run_stream pipeline + lineage, windows, joins
+    plans/      query catalog (Spark impl + DuckDB oracle SQL pairs)
     cli.py      spark-submit subcommands over the same engine
 
 Importing the package installs ``_zipguard`` (CPython < 3.13): Python

@@ -16,6 +16,7 @@ Subcommands:
   replay   batch-apply a whole changelog directory to the table
   stream   tail the changelog with Structured Streaming (availableNow or
            processingTime trigger), exactly-once, resumable
+  corpus-stream  training-corpus ingest with incremental dedup gating
   export   snapshot export to json/csv (optionally gzip)
   stats    table + lineage summary (reference /api/v1/stats analog)
   compact  expire old snapshots and drop aged tombstones
@@ -218,6 +219,86 @@ def cmd_compact(args) -> int:
     return 0
 
 
+def cmd_corpus_stream(args) -> int:
+    """Training-corpus ingest as a resumable micro-batch tail: per-batch
+    exact + near-dup dedup gating against the persisted minhash index,
+    exactly-once MERGE of the survivors."""
+    from .pipelines.corpus_stream import run_corpus_stream
+
+    spark = _spark(args)
+    table = run_corpus_stream(
+        spark,
+        args.incoming,
+        args.table,
+        args.index,
+        args.checkpoint,
+        max_files_per_trigger=args.max_files_per_trigger,
+        threshold=args.threshold,
+    )
+    print(json.dumps({"rows": table.read().count()}))
+    return 0
+
+
+def cmd_sync_index(args) -> int:
+    """Advance an ANN index to a vector table's current snapshot via the
+    change feed (bootstrap build on first run; delta upsert + deletes
+    after)."""
+    from .pipelines.index_sync import sync_ann_index
+    from .sinks.manifest_table import ManifestTable
+
+    spark = _spark(args)
+    table = ManifestTable(spark, args.table)
+    rec = sync_ann_index(
+        table,
+        args.index,
+        args.vec_col,
+        args.dim,
+        consumer_id=args.consumer,
+        reset_on_missing_base=args.reset_on_missing_base,
+    )
+    print(json.dumps(rec or {"status": "current"}))
+    return 0
+
+
+def cmd_sync_alias(args) -> int:
+    """Advance the alias -> id inverted index to the table's current
+    snapshot via the preimage change feed (stale alias cells cleared)."""
+    from .pipelines.index_sync import sync_alias_index
+    from .sinks.manifest_table import ManifestTable
+
+    spark = _spark(args)
+    table = ManifestTable(spark, args.table)
+    rec = sync_alias_index(
+        table,
+        args.index,
+        alias_col=args.alias_col,
+        consumer_id=args.consumer,
+        reset_on_missing_base=args.reset_on_missing_base,
+    )
+    print(json.dumps(rec or {"status": "current"}))
+    return 0
+
+
+def cmd_sync_token(args) -> int:
+    """Advance the inverted token index (search / decontamination
+    probes) to the table's current snapshot via the preimage change
+    feed: content changes clear stale postings, deletes clear all."""
+    from .pipelines.index_sync import sync_token_index
+    from .sinks.manifest_table import ManifestTable
+
+    spark = _spark(args)
+    table = ManifestTable(spark, args.table)
+    rec = sync_token_index(
+        table,
+        args.index,
+        args.text_col,
+        consumer_id=args.consumer,
+        reset_on_missing_base=args.reset_on_missing_base,
+    )
+    print(json.dumps(rec or {"status": "current"}))
+    return 0
+
+
 def cmd_sync_outbox(args) -> int:
     """Publish the table's change feed as Debezium envelope JSON lines
     (the CDC outbox — consumable by any Debezium-speaking system or by
@@ -236,6 +317,42 @@ def cmd_sync_outbox(args) -> int:
         reset_on_missing_base=args.reset_on_missing_base,
     )
     print(json.dumps(rec or {"status": "current"}))
+    return 0
+
+
+def cmd_learn_bpe(args) -> int:
+    """Induce a BPE tokenizer from a parquet corpus and write the merge
+    table (rank, left, right) — the artifact a tokenizer ships."""
+    from .operators.bpe import learn_bpe, merges_table
+
+    spark = _spark(args)
+    df = spark.read.parquet(args.input)
+    merges = learn_bpe(
+        df, args.text_col, n_merges=args.merges, min_freq=args.min_freq
+    )
+    merges_table(spark, merges).coalesce(1).write.mode("overwrite").parquet(
+        args.out
+    )
+    print(json.dumps({"merges_learned": len(merges), "out": args.out}))
+    return 0
+
+
+def cmd_tokenize(args) -> int:
+    """Tokenize a parquet corpus with a shipped BPE merge table
+    (learn-bpe output) — map-only encode, tokens written alongside the
+    input columns."""
+    from .operators.bpe import apply_bpe, load_merges
+
+    spark = _spark(args)
+    merges = load_merges(spark, args.merges)
+    df = spark.read.parquet(args.input)
+    out = apply_bpe(df, args.text_col, merges, out_col=args.tokens_col)
+    out.write.mode("overwrite").parquet(args.out)
+    print(
+        json.dumps(
+            {"rows": spark.read.parquet(args.out).count(), "out": args.out}
+        )
+    )
     return 0
 
 
@@ -264,15 +381,22 @@ def cmd_validate(args) -> int:
 
 
 def cmd_lookup(args) -> int:
-    """Point lookup by key, printed as JSON lines. Keys read only their
-    hash buckets (reference GetVulnerabilityByID)."""
+    """Point lookup by key or alias, printed as JSON lines. Keys read
+    only their hash buckets; aliases probe the inverted index first
+    (reference GetVulnerabilityByID / GetVulnerabilityByAlias)."""
+    from .operators.alias_index import resolve_aliases
     from .sinks.manifest_table import ManifestTable
 
     spark = _spark(args)
     table = ManifestTable(spark, args.table)
-    df = table.lookup(
-        [tuple(v.split("||")) if "||" in v else v for v in args.values]
-    )
+    if args.alias:
+        if not args.index:
+            raise SystemExit("--alias lookup needs --index")
+        df = resolve_aliases(table, args.index, args.values)
+    else:
+        df = table.lookup(
+            [tuple(v.split("||")) if "||" in v else v for v in args.values]
+        )
     for line in df.toJSON().toLocalIterator():
         print(line)
     return 0
@@ -605,6 +729,88 @@ def cmd_compact_log(args) -> int:
     return 0
 
 
+def cmd_profile(args) -> int:
+    """ANALYZE-style per-column profile of the live table state: rows,
+    nulls, min/max, KMV ndv estimate. One scan; shuffles independent of
+    table size."""
+    from .operators.profiling import profile_columns
+    from .sinks.manifest_table import ManifestTable
+
+    spark = _spark(args)
+    table = ManifestTable(spark, args.table)
+    df = table.read(snapshot_id=args.snapshot)
+    cols = args.cols.split(",") if args.cols else [
+        f.name for f in df.schema.fields
+        if not f.name.startswith("_")
+    ]
+    rows = profile_columns(df, cols, k=args.k).orderBy("col_name").collect()
+    print(json.dumps([r.asDict() for r in rows], default=str))
+    return 0
+
+
+def cmd_distinct(args) -> int:
+    """Bounded-state distinct count of a column, optionally per group
+    (operators/sketch.py kmv_distinct — the reference's per-source
+    distinct-vuln dashboards, sql/vulnerabilities.sql:105-126, served
+    without a ∝-distinct-keys shuffle). With --sketch-out, persists the
+    mergeable per-group sketch rows instead, for later
+    kmv_merge_estimate calls over any union of segments."""
+    from .operators.sketch import kmv_distinct, kmv_sketch
+    from .sinks.manifest_table import ManifestTable
+
+    spark = _spark(args)
+    table = ManifestTable(spark, args.table)
+    df = table.read(snapshot_id=args.snapshot)
+    by = args.by.split(",") if args.by else []
+    if args.sketch_out:
+        kmv_sketch(df, by, args.col, k=args.k).write.mode(
+            "overwrite"
+        ).parquet(args.sketch_out)
+        print(json.dumps({"sketch": args.sketch_out, "k": args.k}))
+        return 0
+    if by:
+        rows = kmv_distinct(df, by, args.col, k=args.k).orderBy(*by).collect()
+        print(json.dumps([r.asDict() for r in rows], default=str))
+    else:
+        rows = kmv_distinct(df, [], args.col, k=args.k).collect()
+        est = rows[0]["est_distinct"] if rows else 0
+        print(json.dumps({"est_distinct": est}))
+    return 0
+
+
+def cmd_sync_agg(args) -> int:
+    """Advance a materialized per-dimension aggregate to the table's
+    current snapshot via the preimage change feed (O(delta) per sync)."""
+    from .pipelines.agg_sync import sync_agg
+    from .sinks.manifest_table import ManifestTable
+
+    spark = _spark(args)
+    table = ManifestTable(spark, args.table)
+    rec = sync_agg(
+        table,
+        args.state,
+        args.dims.split(","),
+        consumer_id=args.consumer,
+        sum_col=args.sum_col,
+        distinct_col=args.distinct_col,
+    )
+    print(json.dumps(rec or {"status": "current"}))
+    return 0
+
+
+def cmd_sync_scd2(args) -> int:
+    """Advance an SCD2 history dimension to the table's current
+    snapshot via the change feed (closed versions append-only)."""
+    from .pipelines.scd_sync import sync_scd2
+    from .sinks.manifest_table import ManifestTable
+
+    spark = _spark(args)
+    table = ManifestTable(spark, args.table)
+    rec = sync_scd2(table, args.state, consumer_id=args.consumer)
+    print(json.dumps(rec))
+    return 0
+
+
 def cmd_fsck(args) -> int:
     from .sinks.manifest_table import ManifestTable
 
@@ -741,6 +947,54 @@ def build_parser() -> argparse.ArgumentParser:
                    help="with --logs: only fold buckets with at least this many log files")
     c.set_defaults(fn=cmd_compact)
 
+    cs = sub.add_parser(
+        "corpus-stream",
+        help="training-corpus ingest tail: per-batch dedup gate against "
+        "the persisted minhash index, exactly-once MERGE of survivors",
+    )
+    cs.add_argument("--table", required=True)
+    cs.add_argument("--incoming", required=True,
+                    help="directory of document parquet "
+                    "(DOC_STREAM_DDL schema)")
+    cs.add_argument("--index", required=True,
+                    help="minhash index root (created on first batch)")
+    cs.add_argument("--checkpoint", required=True)
+    cs.add_argument("--threshold", type=float, default=0.5,
+                    help="est_jaccard near-dup drop threshold")
+    cs.add_argument("--max-files-per-trigger", type=int, default=None)
+    cs.set_defaults(fn=cmd_corpus_stream)
+
+    si = sub.add_parser(
+        "sync-index", help="advance an ANN index via the change feed"
+    )
+    si.add_argument("--table", required=True)
+    si.add_argument("--index", required=True)
+    si.add_argument("--vec-col", default="embedding")
+    si.add_argument("--dim", type=int, required=True)
+    si.add_argument("--consumer", default="ann-index")
+    si.add_argument("--reset-on-missing-base", action="store_true")
+    si.set_defaults(fn=cmd_sync_index)
+
+    sal = sub.add_parser(
+        "sync-alias", help="advance the alias index via the change feed"
+    )
+    sal.add_argument("--table", required=True)
+    sal.add_argument("--index", required=True)
+    sal.add_argument("--alias-col", default="aliases")
+    sal.add_argument("--consumer", default="alias-index")
+    sal.add_argument("--reset-on-missing-base", action="store_true")
+    sal.set_defaults(fn=cmd_sync_alias)
+
+    stk = sub.add_parser(
+        "sync-token", help="advance the token index via the change feed"
+    )
+    stk.add_argument("--table", required=True)
+    stk.add_argument("--index", required=True)
+    stk.add_argument("--text-col", default="content")
+    stk.add_argument("--consumer", default="token-index")
+    stk.add_argument("--reset-on-missing-base", action="store_true")
+    stk.set_defaults(fn=cmd_sync_token)
+
     sox = sub.add_parser(
         "sync-outbox",
         help="publish the change feed as Debezium envelopes (CDC egress)",
@@ -753,12 +1007,36 @@ def build_parser() -> argparse.ArgumentParser:
     sox.add_argument("--reset-on-missing-base", action="store_true")
     sox.set_defaults(fn=cmd_sync_outbox)
 
-    lk = sub.add_parser("lookup", help="point lookup by key")
+    bpe = sub.add_parser(
+        "learn-bpe", help="induce a BPE tokenizer (merge table) from parquet"
+    )
+    bpe.add_argument("--input", required=True, help="parquet corpus dir")
+    bpe.add_argument("--text-col", default="text")
+    bpe.add_argument("--merges", type=int, default=200)
+    bpe.add_argument("--min-freq", type=int, default=2)
+    bpe.add_argument("--out", required=True, help="merge-table parquet dir")
+    bpe.set_defaults(fn=cmd_learn_bpe)
+
+    tok = sub.add_parser(
+        "tokenize", help="apply a BPE merge table to a parquet corpus"
+    )
+    tok.add_argument("--input", required=True, help="parquet corpus dir")
+    tok.add_argument("--merges", required=True, help="merge-table parquet")
+    tok.add_argument("--text-col", default="text")
+    tok.add_argument("--tokens-col", default="tokens")
+    tok.add_argument("--out", required=True)
+    tok.set_defaults(fn=cmd_tokenize)
+
+    lk = sub.add_parser(
+        "lookup", help="point lookup by key (or --alias via the index)"
+    )
     lk.add_argument("--table", required=True)
+    lk.add_argument("--alias", action="store_true")
+    lk.add_argument("--index", help="alias index path (with --alias)")
     lk.add_argument(
         "values",
         nargs="+",
-        help="key values ('a||b' for composite keys)",
+        help="key values ('a||b' for composite keys) or aliases",
     )
     lk.set_defaults(fn=cmd_lookup)
 
@@ -960,6 +1238,57 @@ def build_parser() -> argparse.ArgumentParser:
     )
     cl.add_argument("--n-files", type=int, default=None)
     cl.set_defaults(fn=cmd_compact_log)
+
+    pf = sub.add_parser(
+        "profile", help="per-column rows/nulls/min/max/ndv profile"
+    )
+    pf.add_argument("--table", required=True)
+    pf.add_argument("--cols", default=None, help="comma-separated; "
+                    "default: all non-internal columns")
+    pf.add_argument("--k", type=int, default=256)
+    pf.add_argument("--snapshot", default=None)
+    pf.set_defaults(fn=cmd_profile)
+
+    dc = sub.add_parser(
+        "distinct",
+        help="bounded-state distinct count (KMV), optionally per group",
+    )
+    dc.add_argument("--table", required=True)
+    dc.add_argument("--col", required=True)
+    dc.add_argument("--by", default=None, help="comma-separated group cols")
+    dc.add_argument("--k", type=int, default=256)
+    dc.add_argument("--snapshot", default=None)
+    dc.add_argument(
+        "--sketch-out",
+        default=None,
+        help="write mergeable per-group sketch rows here instead of "
+        "estimating (input to later union estimates)",
+    )
+    dc.set_defaults(fn=cmd_distinct)
+
+    sa = sub.add_parser(
+        "sync-agg", help="advance a materialized aggregate via the feed"
+    )
+    sa.add_argument("--table", required=True)
+    sa.add_argument("--state", required=True)
+    sa.add_argument("--dims", required=True, help="comma-separated columns")
+    sa.add_argument("--sum-col", default=None)
+    sa.add_argument(
+        "--distinct-col", default=None,
+        help="maintain exact COUNT(DISTINCT col) via a retractable "
+        "support table",
+    )
+    sa.add_argument("--consumer", default="agg")
+    sa.set_defaults(fn=cmd_sync_agg)
+
+    sd = sub.add_parser(
+        "sync-scd2",
+        help="advance an SCD2 history dimension via the change feed",
+    )
+    sd.add_argument("--table", required=True)
+    sd.add_argument("--state", required=True)
+    sd.add_argument("--consumer", default="scd2")
+    sd.set_defaults(fn=cmd_sync_scd2)
 
     g = sub.add_parser("synth", help="generate a synthetic changelog")
     g.add_argument("--events", type=int, default=100000)

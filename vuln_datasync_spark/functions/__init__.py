@@ -1,2 +1,7 @@
 from .hashing import content_sha256  # noqa: F401
-from .normalize import detect_lang_udf, normalize_events  # noqa: F401
+from .normalize import (  # noqa: F401
+    detect_lang_udf,
+    ecosystem_from_slug,
+    normalize_events,
+    summary_truncate,
+)

@@ -86,6 +86,59 @@ def _detect_lang(path: pd.Series, content: pd.Series) -> pd.Series:
 detect_lang_udf = F.pandas_udf(_detect_lang, T.StringType())
 
 
+# package-manager slug -> ecosystem (normalizer.go:313-336, the switch in
+# extractEcosystemFromPackageSlug); anything unmapped falls through to the
+# segment itself (the reference's `default: return first`)
+_SLUG_ECOSYSTEM = {
+    "gem": "rubygems",
+    "ruby": "rubygems",
+    "npm": "npm",
+    "node": "npm",
+    "pip": "pypi",
+    "python": "pypi",
+    "pypi": "pypi",
+    "go": "go",
+    "golang": "go",
+    "maven": "maven",
+    "java": "maven",
+    "nuget": "nuget",
+    "dotnet": "nuget",
+    ".net": "nuget",
+}
+
+
+def ecosystem_from_slug(slug: Column | str) -> Column:
+    """First path segment, lowered, mapped through the package-manager dim —
+    the chained-when form of
+    /root/reference/internal/merger/normalizer.go:313-336. Unmapped slugs
+    return the segment itself (reference `default:` branch); an empty slug
+    returns '' exactly as the reference does (Go Split never yields an
+    empty slice, so the 'unknown' branch there is unreachable)."""
+    c = F.col(slug) if isinstance(slug, str) else slug
+    seg = F.lower(F.split(c, "/")[0])
+    mapping = F.create_map(
+        *[F.lit(x) for kv in _SLUG_ECOSYSTEM.items() for x in kv]
+    )
+    return F.coalesce(mapping[seg], seg)
+
+
+def summary_truncate(details: Column | str, max_len: int = 100) -> Column:
+    """First-sentence-or-100-chars summary
+    (/root/reference/internal/merger/normalizer.go:339-356): if the text fits,
+    keep it; else prefer the first sentence if it fits; else hard-truncate
+    with '...'."""
+    d = F.col(details) if isinstance(details, str) else details
+    # the length gate is on the BARE sentence (reference: len(sentences[0])
+    # <= 100, then returns sentences[0]+".") — a 100-char first sentence
+    # yields a 101-char summary, exactly like the reference
+    bare = F.split(d, "\\. ")[0]
+    return (
+        F.when(F.length(d) <= max_len, d)
+        .when(F.length(bare) <= max_len, F.concat(bare, F.lit(".")))
+        .otherwise(F.concat(F.substring(d, 1, max_len - 3), F.lit("...")))
+    )
+
+
 # total order for last-writer-wins: (commit_seq, commit, op) — deterministic
 # at any parallelism (SURVEY.md §7.3 #2)
 LWW_ORDER_COLS = ("commit_seq", "commit", "op")

@@ -1,14 +1,3 @@
-from .advisory_ingest import (  # noqa: F401
-    ADVISORY_STREAM_DDL,
-    CANON_ARRAYS,
-    CANON_SCALARS,
-    create_vuln_table,
-    gitlab_advisories_to_vulns,
-    ingest_advisories,
-    ingest_canonical,
-    run_advisory_stream,
-    to_canonical,
-)
 from .corpus_prep import prepare_training_corpus  # noqa: F401
 from .index_sync import sync_ann_index, sync_minhash_index  # noqa: F401
 from .agg_sync import read_agg, sync_agg  # noqa: F401

@@ -1,5 +1,4 @@
-"""Composed training-corpus preparation — the training-data analog of the
-advisory sync composition (pipelines/advisory_ingest.py): one call takes a
+"""Composed training-corpus preparation: one call takes a
 raw document table to a deduplicated, filtered, split-labelled corpus.
 
     exact dedup (sha256 keep-min-id)

@@ -207,8 +207,8 @@ def run_corpus_stream(
     **gate_kwargs,
 ):
     """The corpus-dedup pipeline as a resumable micro-batch tail over a
-    drop directory of document parquet files (same construction as
-    ``pipelines/advisory_ingest.py run_advisory_stream``): offsets live in
+    drop directory of document parquet files (same construction as the
+    CDC ``streaming/pipeline.py run_stream``): offsets live in
     the checkpoint, ``trigger(availableNow=True)`` drains and stops, and
     the sink's epoch ledger + the gate's replay-safe construction make a
     crash anywhere in a batch replay to the identical state."""

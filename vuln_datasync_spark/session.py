@@ -123,6 +123,11 @@ def get_spark(
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.parquet.compression.codec": "zstd",
         "spark.ui.enabled": "false",
+        # corpus prep builds an iterative plan whose rendered text --
+        # produced for every AQE re-plan even with the UI off -- outgrows a
+        # small driver heap (test_parity.py::test_query_parity
+        # [corpus_prepare] runs out of memory at 3g without this bound)
+        "spark.sql.maxPlanStringLength": "1m",
         "spark.driver.memory": driver_mem,
         # This microVM serializes concurrent page faults catastrophically
         # (measured: fresh-page memcpy 112 GB/s at 4 workers -> 2 GB/s at

@@ -1,1 +1,2 @@
 from .manifest_table import ManifestTable  # noqa: F401
+from .warehouse import bucketed_join, save_bucketed  # noqa: F401

@@ -1,1 +1,6 @@
 from .pipeline import apply_batch, run_stream  # noqa: F401
+from .stream_join import stream_interval_join  # noqa: F401
+from .windows import (  # noqa: F401
+    run_windowed_stats_stream,
+    windowed_change_stats,
+)
