@@ -3,8 +3,8 @@
 partial_update: null payload columns mean "unchanged" — the matched row
 coalesces against its stored values, and the sha256(content) invariant is
 recomputed on the MERGED row (reference analog: field-wise coalesce merge,
-/root/reference/internal/merger — restated at operators/merge.py
-coalesce_fields, here applied to the changelog sink).
+/root/reference/internal/merger, implemented by lww_resolve_partial in
+operators/lww.py and applied here to the changelog sink).
 
 DLQ: rows normalize_events drops (missing key / bad op / missing seq) are
 written per-epoch with a reject_reason; overwrite per epoch dir keeps the

@@ -166,7 +166,7 @@ def cmd_stats(args) -> int:
         return 0
     df = table.read(include_tombstones=True)
     # distinct-count the table's first key column (repo for the CDC
-    # schema, vuln_id for advisory tables) — stats works on any keying
+    # schema) — stats works on any keying
     key0 = table.key_cols[0]
     row = df.agg(
         F.count("*").alias("rows"),

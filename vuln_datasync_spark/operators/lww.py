@@ -149,8 +149,7 @@ def lww_resolve_partial(
     """Per-key LWW where null payload columns mean "unchanged": the winner
     row (max order) takes each payload column from the LATEST non-null
     value in order (Debezium-style sparse/partial update events; reference
-    analog: field-wise coalesce merge, internal/merger logic restated at
-    `operators/merge.py coalesce_fields`).
+    analog: field-wise coalesce merge, /root/reference/internal/merger).
 
     Semantics per key, events ordered by (commit_seq, commit, op):
 

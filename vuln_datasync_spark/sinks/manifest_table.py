@@ -33,15 +33,19 @@ commit semantics the engine would get from ``MERGE INTO`` on Iceberg
 
 One commit protocol serves every writer (merge, no-op epochs, ALTER,
 rollback and the maintenance rewrites). ``_write_snapshot`` writes the
-rewritten buckets under ``data/snap-<sid>/bucket=<b>/`` and reads back
-their stats. ``_commit_snapshot`` builds the next manifest from a base (the
-parent; the target for ``rollback``): the caller names the keys it changes,
-and every other key — files, MOR logs, stats, schema, schema log, applied
-epochs, bucket count — carries forward unchanged, so each manifest is
-complete as written. It then swaps the pointer against the expected parent.
-A commit that loses the race removes its own ``data/snap-<sid>/`` before
-re-raising ``CommitConflict``, so a failed attempt leaves no orphan files;
-only ``merge`` retries, the other writers surface the conflict.
+rewritten buckets under ``data/snap-<sid>/bucket=<b>/`` in one exchange:
+rows are routed to write tasks by bucket, and a copy-on-write rewrite
+resolves LWW in the stage after that exchange, so target ∪ batch is
+shuffled once. The new files' stats come from their parquet footers on
+the driver, with no Spark job. ``_commit_snapshot`` builds the next
+manifest from a base (the parent; the target for ``rollback``): the
+caller names the keys it changes, and every other key — files, MOR logs,
+stats, schema, schema log, applied epochs, bucket count — carries forward
+unchanged, so each manifest is complete as written. It then swaps the
+pointer against the expected parent. A commit that loses the race removes
+its own ``data/snap-<sid>/`` before re-raising ``CommitConflict``, so a
+failed attempt leaves no orphan files; only ``merge`` retries, the other
+writers surface the conflict.
 
 On a real cluster the file listing/IO below would go through the Hadoop
 FileSystem API; local-mode uses the posix filesystem directly.
@@ -49,9 +53,11 @@ FileSystem API; local-mode uses the posix filesystem directly.
 
 from __future__ import annotations
 
+import datetime
 import glob
 import json
 import logging
+import math
 import os
 import re
 import shutil
@@ -64,7 +70,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.normalize import LWW_ORDER_COLS
-from ..operators.lww import lww_resolve
+from ..operators.lww import lww_resolve, lww_resolve_partial
 
 logger = logging.getLogger("vuln_datasync_spark.manifest_table")
 
@@ -610,6 +616,15 @@ class ManifestTable:
             out = out.unionByName(p)
         return out
 
+    def _scan(self, m: dict, files: list[str]) -> DataFrame:
+        """Plain scan of ``files`` under manifest ``m``'s schema, renames
+        and drops applied through its schema log; no LWW resolution."""
+        schema = T.StructType.fromJson(m["schema"])
+        slog = m.get("schema_log") or []
+        if slog:
+            return self._read_with_schema_log(files, schema, slog)
+        return self.spark.read.schema(schema).parquet(*files)
+
     # ---------- expressions ----------
 
     def bucket_expr(self) -> F.Column:
@@ -813,21 +828,15 @@ class ManifestTable:
                 key_set,
             )
 
-        def _open(files):
-            slog = m.get("schema_log") or []
-            if slog:
-                return self._read_with_schema_log(files, schema, slog)
-            return self.spark.read.schema(schema).parquet(*files)
-
         parts = []
         if base_files:
-            parts.append(_open(base_files))
+            parts.append(self._scan(m, base_files))
         if log_side_files:
             # <= 1 base row + a few log rows per key: the per-key window
             # sort is constant-size, shuffle ∝ rows in logged buckets
             parts.append(
                 lww_resolve(
-                    _open(log_side_files),
+                    self._scan(m, log_side_files),
                     mode="window",
                     key_cols=self.key_cols,
                 )
@@ -1352,52 +1361,36 @@ class ManifestTable:
             for b in affected
         )
         mor_write = bool(mor and stored_files)
-        if mor_write:
-            # merge-on-read: the batch (already one LWW winner per key,
-            # conformed to the reconciled schema) IS the log delta — no
-            # target read, no bucket rewrite; write ∝ batch size. Reads
-            # resolve base ∪ logs per key (read() docstring).
-            merged = batch
-        elif not stored_files:
-            # S12 bulk-append fast path (reference analog: batch INSERT,
-            # /root/reference/internal/database/batch.go bulk path): none
-            # of the touched buckets has stored data, so the batch (already
-            # one winner per key) IS the merged state — skip the target
-            # read, the union, and the per-key window entirely. This is
-            # every first load and every backfill into fresh buckets.
-            merged = batch
-        else:
+        # Merge-on-read: the batch (already one LWW winner per key,
+        # conformed to the reconciled schema) IS the log delta — no target
+        # read, no bucket rewrite; write ∝ batch size. Reads resolve
+        # base ∪ logs per key (read() docstring).
+        # Bulk-append fast path (reference analog: batch INSERT,
+        # /root/reference/internal/database/batch.go bulk path): none of
+        # the touched buckets has stored data, so the batch IS the merged
+        # state — no target read, no union, no per-key window. This is
+        # every first load and every backfill into fresh buckets.
+        merged, resolve = batch, None
+        if stored_files and not mor_write:
             target = self.read(include_tombstones=True, buckets=affected)
-            target = _conform(target, new_schema)
             # MERGE = LWW over (target ∪ batch): the stored row carries its
             # own (commit_seq, commit, op) order, so max-by-order implements
             # WHEN MATCHED AND b.ord > t.ord THEN UPDATE/DELETE, WHEN NOT
             # MATCHED THEN INSERT, and replays/out-of-order arrivals are
-            # no-ops. window mode: the union has <= 2 rows per key (one
-            # stored winner + one batch winner), so the per-key sort is
-            # constant-size — single pass, no skew exposure, payload never
-            # aggregates.
-            if partial_update:
-                from ..operators.lww import lww_resolve_partial
-
-                merged = lww_resolve_partial(
-                    target.unionByName(batch), key_cols=self.key_cols
-                )
-            else:
-                merged = lww_resolve(
-                    target.unionByName(batch),
-                    mode="window",
-                    key_cols=self.key_cols,
-                )
-        merged = merged.withColumn("_bucket", self.bucket_expr())
+            # no-ops. The union has <= 2 rows per key (one stored winner +
+            # one batch winner), so the per-key sort is constant-size.
+            # _write_snapshot resolves after routing rows by bucket.
+            merged = _conform(target, new_schema).unionByName(batch)
+            resolve = self._bucket_lww(partial_update)
         snap = self._write_snapshot(
-            merged, len(affected), self.write_sort, self.target_file_rows
+            merged.withColumn("_bucket", self.bucket_expr()),
+            affected, self.write_sort, self.target_file_rows,
+            resolve=resolve,
         )
 
-        # per-bucket tombstone stats: read back ONLY the files just written
-        # (column-pruned to is_deleted+commit_seq — a few KB per bucket),
-        # carry untouched buckets' stats forward. expire_tombstones selects
-        # buckets from these stats instead of scanning the whole table.
+        # snap.bucket_meta holds the tombstone stats of the files just
+        # written; untouched buckets' stats carry forward. expire_tombstones
+        # selects buckets from these stats instead of scanning the table.
         if mor_write:
             # base files untouched; the new files are per-bucket log deltas
             logs = dict(parent_m.get("logs") or {})
@@ -1594,15 +1587,15 @@ class ManifestTable:
             out, checkpoint_id=checkpoint_id, batch_id=batch_id
         )
 
-    def _zone_cols(self, df: DataFrame) -> list[T.StructField]:
+    def _zone_cols(self, schema: T.StructType) -> list[T.StructField]:
         """Columns eligible for per-file zone-map stats: every numeric /
         timestamp / date column, plus STRING columns only when they are
         key columns (short by construction). Free-text payload columns
-        (document content, summaries) are deliberately excluded — min/max
-        over megabyte strings would make the stats scan read the heaviest
-        column of the table for bounds nobody range-filters on."""
+        (document content, summaries) are deliberately excluded — their
+        bounds would put long strings into every manifest for ranges
+        nobody filters on."""
         out = []
-        for f_ in df.schema.fields:
+        for f_ in schema.fields:
             if f_.name in ("bucket", "is_deleted"):
                 continue
             t = f_.dataType.typeName()
@@ -1615,9 +1608,9 @@ class ManifestTable:
 
     @staticmethod
     def _enc_stat(v):
-        """JSON-encode a collected min/max so comparisons on the stored
-        form are order-preserving: timestamps/dates to fixed-width ISO
-        strings (lexicographic == chronological), numbers as-is."""
+        """JSON-encode a min/max so comparisons on the stored form are
+        order-preserving: timestamps/dates to fixed-width ISO strings
+        (lexicographic == chronological), numbers as-is."""
         if v is None:
             return None
         if hasattr(v, "strftime"):
@@ -1626,88 +1619,114 @@ class ManifestTable:
             return v.strftime("%Y-%m-%d")
         return v
 
-    def _write_stats(self, snap_dir: str):
-        """ONE column-pruned scan over freshly written snapshot files
-        producing both stats layers the manifest carries:
+    @classmethod
+    def _footer_zone(cls, md, j: int, f_: T.StructField):
+        """``[min, max]`` of column ``j`` folded over the row groups of
+        footer ``md``, encoded as ``_enc_stat`` stores it; None when the
+        footer cannot bound it (a row group with non-null values and no
+        min/max: INT96 timestamps, NaN-only floats).
+
+        * All-null column: ``[None, None]``.
+        * Strings keep the 64-char cap: the min is cut to 64 chars (a cut
+          prefix is still a lower bound), a max of 65+ chars is stored as
+          None (unbounded).
+        * Float/double: the max is None. Footers leave NaN out of max,
+          while Spark orders NaN above every number.
+        * Timestamps: footers give UTC-aware datetimes; they are turned
+          into the naive local datetime ``collect()`` gives, so the
+          stored strings match what a Spark scan would record."""
+        mn = mx = None
+        for i in range(md.num_row_groups):
+            st = md.row_group(i).column(j).statistics
+            if st is None or not st.has_null_count:
+                return None
+            if st.num_values == 0:
+                continue  # only nulls in this row group
+            if not st.has_min_max:
+                return None
+            mn = st.min if mn is None else min(mn, st.min)
+            mx = st.max if mx is None else max(mx, st.max)
+        t = f_.dataType.typeName()
+        if t == "timestamp" and mn is not None:
+            epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+            us = datetime.timedelta(microseconds=1)
+            mn, mx = (
+                T.TimestampType().fromInternal((v - epoch) // us)
+                for v in (mn, mx)
+            )
+        elif t in ("float", "double"):
+            if mn is not None and math.isnan(mn):
+                return None
+            mx = None
+        elif t == "string":
+            if mn is not None and len(mn) > 64:
+                mn = mn[:64]
+            if mx is not None and len(mx) >= 65:
+                mx = None
+        return [cls._enc_stat(mn), cls._enc_stat(mx)]
+
+    def _write_stats(self, files: dict, schema: T.StructType):
+        """Both stats layers the manifest carries, for the files one
+        ``_write_snapshot`` wrote (``files``: bucket -> manifest-relative
+        paths; ``schema``: the written frame's), read on the driver with
+        no Spark job:
 
         * ``bucket_meta`` — per-bucket tombstone stats (feeds
-          ``expire_tombstones``'s no-scan bucket selection), and
-        * ``file_meta`` — per-FILE min/max zone maps for numeric /
-          timestamp / date / key columns (feeds ``read(range_filters=)``
-          file skipping — the Iceberg manifest-stats / Delta data-skipping
-          pattern; reference analog: the B-tree index scan behind
-          incremental modified-since sync,
-          /root/reference/sql/vulnerabilities.sql:128-132).
+          ``expire_tombstones``'s no-scan bucket selection), from a
+          pyarrow read of ``is_deleted`` and ``commit_seq`` only;
+        * ``file_meta`` — per-FILE row counts and min/max zone maps for
+          numeric / timestamp / date / key columns (feeds
+          ``read(range_filters=)`` file skipping — the Iceberg
+          manifest-stats / Delta data-skipping pattern; reference analog:
+          the B-tree index scan behind incremental modified-since sync,
+          /root/reference/sql/vulnerabilities.sql:128-132), taken from
+          the parquet footers (see ``_footer_zone``). A column the footer
+          cannot bound is left out of ``cols``, so reads keep the file.
 
-        At 100 TB the scan is still ∝ the files just written (never the
-        table), reads only the stat columns, and string stats are capped
-        at 64 chars: min/max are computed over ``substring(c, 1, 65)`` —
-        prefix truncation is monotone, so the truncated min is always a
-        valid lower bound, and the truncated max is an exact upper bound
-        unless it hit the cap (then it is stored as null = unbounded).
-        """
-        if not glob.glob(os.path.join(snap_dir, "bucket=*", "*.parquet")):
-            return {}, {}
-        df = self.spark.read.parquet(snap_dir)
-        zcols = self._zone_cols(df)
-        aggs = [F.count(F.lit(1)).alias("_rows")]
-        if "is_deleted" in df.columns and "commit_seq" in df.columns:
-            aggs += [
-                F.sum(
-                    F.coalesce(F.col("is_deleted"), F.lit(False)).cast("int")
-                ).alias("_nt"),
-                F.min(
-                    F.when(F.col("is_deleted"), F.col("commit_seq"))
-                ).alias("_mts"),
-            ]
-        for f_ in zcols:
-            c = (
-                F.substring(F.col(f_.name), 1, 65)
-                if f_.dataType.typeName() == "string"
-                else F.col(f_.name)
-            )
-            aggs += [
-                F.min(c).alias(f"_mn_{f_.name}"),
-                F.max(c).alias(f"_mx_{f_.name}"),
-            ]
-        rows = (
-            df.groupBy(
-                F.col("bucket"), F.input_file_name().alias("_f")
-            )
-            .agg(*aggs)
-            .collect()
-        )
+        Work is ∝ the files just written, never the table. Files written
+        before timestamps were INT64 (INT96 carries no footer stats) keep
+        the stats recorded when they were written; they are never
+        re-read."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        zcols = self._zone_cols(schema)
+        tomb = "is_deleted" in schema.names and "commit_seq" in schema.names
         bucket_meta: dict[str, dict] = {}
         file_meta: dict[str, dict] = {}
-        root_abs = os.path.abspath(self.root)
-        for r in rows:
-            b = str(r["bucket"])
-            if "_nt" in r.asDict():
+        for b, rels in files.items():
+            for rel in rels:
+                with pq.ParquetFile(os.path.join(self.root, rel)) as pf:
+                    md = pf.metadata
+                    t = (
+                        pf.read(columns=["is_deleted", "commit_seq"])
+                        if tomb
+                        else None
+                    )
+                at = {
+                    md.schema.column(j).path: j for j in range(md.num_columns)
+                }
+                cols = {}
+                for f_ in zcols:
+                    if f_.name in at:
+                        zone = self._footer_zone(md, at[f_.name], f_)
+                        if zone is not None:
+                            cols[f_.name] = zone
+                file_meta[rel] = {"rows": int(md.num_rows), "cols": cols}
+                if t is None:
+                    continue
+                dead = pc.fill_null(t["is_deleted"], False)
                 bm = bucket_meta.setdefault(
                     b, {"n_tombstones": 0, "min_tomb_seq": None}
                 )
-                bm["n_tombstones"] += int(r["_nt"] or 0)
-                if r["_mts"] is not None:
+                bm["n_tombstones"] += int(pc.sum(dead).as_py() or 0)
+                mts = pc.min(pc.filter(t["commit_seq"], dead)).as_py()
+                if mts is not None:
                     bm["min_tomb_seq"] = (
-                        int(r["_mts"])
+                        int(mts)
                         if bm["min_tomb_seq"] is None
-                        else min(bm["min_tomb_seq"], int(r["_mts"]))
+                        else min(bm["min_tomb_seq"], int(mts))
                     )
-            path = r["_f"]
-            if path.startswith("file:"):
-                path = re.sub(r"^file:/*", "/", path)
-            rel = os.path.relpath(path, root_abs)
-            cols = {}
-            for f_ in zcols:
-                mn = self._enc_stat(r[f"_mn_{f_.name}"])
-                mx = self._enc_stat(r[f"_mx_{f_.name}"])
-                if f_.dataType.typeName() == "string":
-                    if mn is not None and len(mn) > 64:
-                        mn = mn[:64]  # still a valid lower bound
-                    if mx is not None and len(mx) >= 65:
-                        mx = None  # truncated: unbounded above
-                cols[f_.name] = [mn, mx]
-            file_meta[rel] = {"rows": int(r["_rows"]), "cols": cols}
         return bucket_meta, file_meta
 
     def _carry_file_meta(
@@ -1730,16 +1749,37 @@ class ManifestTable:
         ``_file_era`` parses out of every data path."""
         return f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
 
+    def _bucket_lww(self, partial_update: bool = False):
+        """The LWW resolve a copy-on-write rewrite hands
+        ``_write_snapshot``: per key within its bucket. Leading the window
+        partitioning with ``_bucket`` lets the bucket routing satisfy it,
+        so Spark plans no second exchange."""
+        keys = ("_bucket", *self.key_cols)
+        if partial_update:
+            return lambda d: lww_resolve_partial(d, key_cols=keys)
+        return lambda d: lww_resolve(d, mode="window", key_cols=keys)
+
     def _write_snapshot(
         self,
         df: DataFrame,
-        n_parts: int,
+        buckets: list[int],
         sort_by: tuple[str, ...],
         target_rows: int | None,
+        resolve=None,
     ) -> _Snapshot:
-        """Write ``df`` (carrying a ``_bucket`` column) as a new snapshot
-        under ``data/snap-<sid>/bucket=<b>/``, list its files per bucket
-        and read back their stats in one scan.
+        """Write ``df`` (carrying a ``_bucket`` column whose values are in
+        ``buckets``) as a new snapshot under ``data/snap-<sid>/bucket=<b>/``,
+        list its files per bucket and take their stats from the footers.
+
+        One exchange routes rows to write tasks on the plain ``_bucket``
+        column: each bucket lands whole in one task, so there is one file
+        per bucket (more only under ``target_rows``), and there are about
+        as many tasks as task slots, not one per bucket. ``resolve``, when
+        given, runs on the routed frame before the sort and write; a
+        window partitioned by ``("_bucket", ...)`` reuses the routing
+        exchange (``_bucket_lww``). Routing on an expression of
+        ``_bucket`` would not: the window would plan its own exchange and
+        split buckets across tasks.
 
         ``sort_by`` (usually the table's ``write_sort``) orders rows
         within each bucket so split files carry disjoint zone ranges;
@@ -1748,7 +1788,16 @@ class ManifestTable:
         sid = self._new_snapshot_id()
         snap_rel = os.path.join("data", f"snap-{sid}")
         snap_dir = os.path.join(self.root, snap_rel)
-        out = df.repartition(n_parts, "_bucket")
+        # a row goes to task (bucket mod k); widen k until the buckets
+        # spread over as many tasks as there are slots (every residue is
+        # distinct once k > max(buckets))
+        want = min(len(buckets), self.spark.sparkContext.defaultParallelism)
+        k = want
+        while len({b % k for b in buckets}) < want:
+            k += 1
+        out = df.repartitionById(k, "_bucket")
+        if resolve is not None:
+            out = resolve(out)
         sort_cols = [c for c in sort_by if c in df.columns]
         if sort_cols:
             out = out.sortWithinPartitions("_bucket", *sort_cols)
@@ -1757,10 +1806,8 @@ class ManifestTable:
             helpers = [c for c in sort_cols if c.startswith("_z")]
             if helpers:
                 out = out.drop(*helpers)
-        w = (
-            out.withColumnRenamed("_bucket", "bucket")
-            .write.partitionBy("bucket")
-        )
+        out = out.withColumnRenamed("_bucket", "bucket")
+        w = out.write.partitionBy("bucket")
         if target_rows:
             w = w.option("maxRecordsPerFile", int(target_rows))
         w.parquet(snap_dir)
@@ -1770,7 +1817,7 @@ class ManifestTable:
                 os.path.join(snap_rel, os.path.basename(bdir), os.path.basename(p))
                 for p in glob.glob(os.path.join(bdir, "*.parquet"))
             )
-        bucket_meta, file_meta = self._write_stats(snap_dir)
+        bucket_meta, file_meta = self._write_stats(files, out.schema)
         return _Snapshot(sid, files, bucket_meta, file_meta)
 
     def _replace_buckets(
@@ -2219,9 +2266,9 @@ class ManifestTable:
             .withColumn("_bucket", self.bucket_expr())
         )
         snap = self._write_snapshot(
-            kept, len(affected), self.write_sort, self.target_file_rows
+            kept, affected, self.write_sort, self.target_file_rows
         )
-        # rewritten buckets' stats are re-read: tombstones with
+        # rewritten buckets take the new files' stats: tombstones with
         # seq >= below_seq survive the purge
         self._commit_snapshot(
             m, m["snapshot_id"], snap.sid,
@@ -2257,10 +2304,15 @@ class ManifestTable:
         )
         if not affected:
             return None
-        merged = self.read(include_tombstones=True, buckets=affected)
-        merged = merged.withColumn("_bucket", self.bucket_expr())
+        # base ∪ logs unresolved: the LWW window runs after the bucket
+        # routing, so the rewrite shuffles these rows once
+        raw = self._scan(
+            m, self._files_for(m, affected) + self._log_files_for(m, affected)
+        )
         snap = self._write_snapshot(
-            merged, len(affected), self.write_sort, self.target_file_rows
+            raw.withColumn("_bucket", self.bucket_expr()),
+            affected, self.write_sort, self.target_file_rows,
+            resolve=self._bucket_lww(),
         )
         self._commit_snapshot(
             m, m["snapshot_id"], snap.sid,
@@ -2299,7 +2351,7 @@ class ManifestTable:
             F.lit(new_n_buckets),
         ).cast("int")
         snap = self._write_snapshot(
-            full.withColumn("_bucket", new_bucket), new_n_buckets,
+            full.withColumn("_bucket", new_bucket), range(new_n_buckets),
             self.write_sort, self.target_file_rows,
         )
         self._commit_snapshot(
@@ -2329,8 +2381,9 @@ class ManifestTable:
         ``sort_by`` and split each bucket into ~``target_file_rows``-row
         files. Logical state is unchanged; what changes is physical
         layout: after clustering, consecutive files cover disjoint
-        ``sort_by`` ranges, so the per-file zone maps (``_write_stats``)
-        turn a ``read(range_filters=...)`` into an I/O-∝-selectivity scan
+        ``sort_by`` ranges, so the per-file zone maps (taken from each
+        new file's parquet footer by ``_write_stats``) turn a
+        ``read(range_filters=...)`` into an I/O-∝-selectivity scan
         *inside* each bucket, and parquet row-group stats tighten the
         rest. This is the Delta OPTIMIZE ZORDER-lite / Iceberg
         rewrite_data_files(sort) analog: hash-bucket by key for merge
@@ -2339,7 +2392,8 @@ class ManifestTable:
         ``buckets`` limits the rewrite to a subset (incremental
         clustering during maintenance windows); untouched buckets carry
         forward by reference. At 100 TB: work ∝ rewritten buckets, one
-        shuffle (the repartition), sort is per-partition spillable.
+        shuffle (rows routed by bucket, at most one task per slot), sort
+        is per-partition spillable.
 
         ``zorder=[c1, c2, ...]`` replaces the linear sort with a Morton
         bit-interleave of the (min-max scaled) columns — multi-dimension
@@ -2376,7 +2430,7 @@ class ManifestTable:
             full = full.withColumn("_zkey", zexpr)
             sort_by = ("_zkey",)
         snap = self._write_snapshot(
-            full, len(affected), tuple(sort_by), target_file_rows
+            full, affected, tuple(sort_by), target_file_rows
         )
         self._commit_snapshot(
             m, m["snapshot_id"], snap.sid, f"maintenance:cluster:{snap.sid}",
