@@ -8,6 +8,7 @@ no Spark job. A second exchange or a stats scan shows up here as a job
 or an Exchange too many."""
 
 import datetime as dt
+import math
 import os
 
 import pytest
@@ -15,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
 from vuln_datasync_spark.sinks.manifest_table import ManifestTable
+from vuln_datasync_spark.sinks.manifest_table import logger as mt_logger
 from vuln_datasync_spark.streaming.pipeline import apply_batch
 
 from .test_zone_maps import CHANGELOG_SCHEMA
@@ -263,54 +265,138 @@ def test_footer_stats_match_the_spark_scan(spark, tmp_path):
         assert meta == written[rel]
 
 
-def test_footer_float_upper_bound_is_open(spark, tmp_path):
-    """Footers leave NaN out of a float max while Spark orders NaN above
-    every number, so a float zone map stores no upper bound; the lower
-    bound matches the scan."""
-    t = ManifestTable.create(spark, str(tmp_path / "t"), n_buckets=2)
-    snaps = _record_snapshots(t)
-    ev = _events(spark, 0, 30).withColumn(
-        "weight",
-        F.when(F.col("commit_seq") % 7 == 0, F.lit(float("nan"))).otherwise(
-            F.col("commit_seq") / 4.0
-        ),
+def test_footer_stats_fold_row_groups(spark, tmp_path, monkeypatch):
+    """Files of several row groups: zones fold over them, and tombstone
+    stats read only the row groups whose footer shows a tombstone."""
+    import pyarrow.parquet as pq
+
+    read = []
+    orig = pq.ParquetFile.read_row_groups
+
+    def spy(self, row_groups, *a, **k):
+        read.append(list(row_groups))
+        return orig(self, row_groups, *a, **k)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", spy)
+    t = ManifestTable.create(
+        spark, str(tmp_path / "t"), n_buckets=2, write_sort=("commit_seq",)
     )
-    t.merge(ev, "ff", 0)
+    snaps = _record_snapshots(t)
+    spark.conf.set("parquet.block.size", "1024")
+    try:
+        t.merge(_events(spark, 0, 600), "rg", 0)
+        # deletes carry the highest seqs: they sort into the last groups
+        t.merge(_events(spark, 0, 40, op="delete", seq_add=1000), "rg", 1)
+    finally:
+        spark.conf.unset("parquet.block.size")
+    groups = [
+        pq.read_metadata(os.path.join(t.root, rel)).num_row_groups
+        for rel in snaps[1].file_meta
+    ]
+    assert min(groups) > 1, groups
+    for snap in snaps:
+        ref_bucket_meta, ref_file_meta = _reference(t, snap)
+        assert snap.file_meta == ref_file_meta
+        assert snap.bucket_meta == ref_bucket_meta
+    assert sum(m["n_tombstones"] for m in snaps[1].bucket_meta.values()) == 40
+    # the bulk load has no tombstones and read no rows; the delete commit
+    # read only the groups holding them
+    assert read and sum(map(len, read)) < sum(groups)
+
+
+def _weights(df):
+    """``weight``: distinct finite doubles, NaN where commit_seq % 50 ==
+    7; ``all_nan``: NaN everywhere."""
+    return df.withColumn(
+        "weight",
+        F.when(F.col("commit_seq") % 50 == 7, F.lit(float("nan"))).otherwise(
+            (F.col("commit_seq") * 37 % 101) / 4.0
+        ),
+    ).withColumn("all_nan", F.lit(float("nan")))
+
+
+def test_footer_float_bounds(spark, tmp_path):
+    """parquet-java, like Spark, orders NaN above every number: a float
+    file holding NaN stores no upper bound (NaN passes any lower bound),
+    an all-NaN column is left out (reads keep the file), and a file with
+    no NaN keeps the scan's exact bounds, so reads still skip on it."""
+    t = ManifestTable.create(spark, str(tmp_path / "t"), n_buckets=4)
+    snaps = _record_snapshots(t)
+    t.merge(_weights(_events(spark, 0, 60)), "ff", 0)
     (snap,) = snaps
     _, ref = _reference(t, snap)
+    with_nan = without_nan = 0
     for rel, meta in snap.file_meta.items():
-        lo, hi = meta["cols"]["weight"]
-        assert hi is None
-        assert lo == ref[rel]["cols"]["weight"][0]
-    # a range read above every finite value still keeps the files
-    got = t.read(range_filters={"weight": (100.0, None)}).collect()
-    assert {r["commit_seq"] for r in got} == {0, 7, 14, 21, 28}
+        lo, hi = ref[rel]["cols"]["weight"]
+        if math.isnan(hi):
+            with_nan += 1
+            assert meta["cols"]["weight"] == [lo, None]
+        else:
+            without_nan += 1
+            assert meta["cols"]["weight"] == [lo, hi]
+        assert "all_nan" not in meta["cols"]
+        assert math.isnan(ref[rel]["cols"]["all_nan"][0])
+    assert with_nan and without_nan
+    rows = t.read().collect()
+    for lo in (20.0, 100.0):
+        got = t.read(range_filters={"weight": (lo, None)}).collect()
+        want = [r for r in rows if math.isnan(r["weight"]) or r["weight"] >= lo]
+        assert sorted(r["commit_seq"] for r in got) == sorted(
+            r["commit_seq"] for r in want
+        )
+    # above every finite value only the NaN files are kept
+    rep = t.prune_report({"weight": (100.0, None)})
+    assert len(rep["skipped"]) == without_nan
 
 
-def test_int96_files_read_and_keep_their_stats(spark, tmp_path):
-    """Files written with INT96 timestamps have no ts footer stats: their
-    zone maps leave ts out (reads keep them), they still read, and the
-    next commit's INT64 files get ts stats equal to the scan's."""
+def _ts_of(r):
+    k = int(r["path"][len("src/f") : -len(".py")])
+    want = dt.datetime(2026, 1, 1) + dt.timedelta(minutes=r["commit_seq"])
+    return want if k % 6 else None
+
+
+def test_int96_session_reads_ts_back(spark, tmp_path, caplog):
+    """A session left at INT96 writes no ts footer stats: each write reads
+    ts back from its files, so the zone maps equal the scan's, ts range
+    reads prune and z-order on ts works; the first such write warns.
+    After the session switches to INT64, the INT96 files still read and
+    keep their recorded stats."""
     conf = "spark.sql.parquet.outputTimestampType"
     t = ManifestTable.create(spark, str(tmp_path / "t"), n_buckets=4)
     snaps = _record_snapshots(t)
     spark.conf.set(conf, "INT96")
     try:
-        t.merge(_events(spark, 0, 40), "i96", 0)
+        with caplog.at_level("WARNING", logger=mt_logger.name):
+            t.merge(_events(spark, 0, 40), "i96", 0)
+            t.merge(_events(spark, 40, 80), "i96", 1)
+        warned = [r for r in caplog.records if "INT96" in r.getMessage()]
+        assert len(warned) == 1
+        for snap in snaps:
+            ref_bucket_meta, ref_file_meta = _reference(t, snap)
+            assert snap.file_meta == ref_file_meta
+            assert snap.bucket_meta == ref_bucket_meta
+            assert all(fm["cols"]["ts"][0] for fm in snap.file_meta.values())
+        before = sorted(map(tuple, t.read().collect()))
+        t.cluster(zorder=["ts", "size_bytes"], target_file_rows=5)
+        assert sorted(map(tuple, t.read().collect())) == before
     finally:
         spark.conf.set(conf, "TIMESTAMP_MICROS")
-    first = t.manifest()
-    _, ref = _reference(t, snaps[0])
-    for rel, meta in snaps[0].file_meta.items():
-        assert "ts" not in meta["cols"]
-        ref[rel]["cols"].pop("ts")
-        assert meta == ref[rel]
+    lo = dt.datetime(2026, 1, 1, 1, 0)
+    rep = t.prune_report({"ts": (lo, None)})
+    assert rep["skipped"] and rep["kept"]
+    got = t.read(range_filters={"ts": (lo, None)}).collect()
+    assert sorted(r["commit_seq"] for r in got) == sorted(
+        r["commit_seq"]
+        for r in t.read().collect()
+        if r["ts"] is not None and r["ts"] >= lo
+    )
     # rewrite two of the four buckets; the others carry their INT96 files
-    touched = _events(spark, 0, 40, seq_add=100)
-    t.merge(touched.filter(t.bucket_expr() < 2), "i96", 1)
-    ref_bucket_meta, ref_file_meta = _reference(t, snaps[1])
-    assert snaps[1].file_meta == ref_file_meta
-    assert snaps[1].bucket_meta == ref_bucket_meta
+    first = t.manifest()
+    t.merge(_events(spark, 0, 40, seq_add=100).filter(t.bucket_expr() < 2),
+            "i96", 2)
+    ref_bucket_meta, ref_file_meta = _reference(t, snaps[-1])
+    assert snaps[-1].file_meta == ref_file_meta
+    assert snaps[-1].bucket_meta == ref_bucket_meta
     m = t.manifest()
     int96 = [rel for b in ("2", "3") for rel in m["files"][b]]
     assert int96
@@ -318,11 +404,6 @@ def test_int96_files_read_and_keep_their_stats(spark, tmp_path):
         assert m["file_meta"][rel] == first["file_meta"][rel]
     # every row reads back its ts, from INT96 and INT64 files alike
     rows = t.read().collect()
-    assert len(rows) == 40
+    assert len(rows) == 80
     for r in rows:
-        k = int(r["path"][len("src/f") : -len(".py")])
-        want = dt.datetime(2026, 1, 1) + dt.timedelta(minutes=r["commit_seq"])
-        assert r["ts"] == (want if k % 6 else None)
-    # a ts range read keeps every INT96 file
-    kept = t.prune_report({"ts": (dt.datetime(2030, 1, 1), None)})["kept"]
-    assert set(int96) <= set(kept)
+        assert r["ts"] == _ts_of(r)

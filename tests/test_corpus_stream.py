@@ -2,6 +2,9 @@
 exact + near-dup dedup, cross-corpus index probe, exactly-once MERGE,
 idempotent index fold, crash/resume."""
 
+import os
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -105,13 +108,17 @@ def test_stream_crash_resume_matches_batch(spark, tmp_path):
             ("n_chars", pa.int64()),
         ]
     )
-    for name, rows in [("b1.parquet", B1), ("b2.parquet", B2)]:
+    for i, (name, rows) in enumerate([("b1.parquet", B1), ("b2.parquet", B2)]):
         pq.write_table(
             pa.Table.from_pylist(
                 [dict(zip(cols, r)) for r in rows], schema=schema
             ),
             incoming / name,
         )
+        # the file source takes files in modification-time order; two
+        # writes in the same millisecond would leave b1/b2 unordered
+        t = time.time() - 60 + i
+        os.utime(incoming / name, (t, t))
 
     tbl = str(tmp_path / "tbl")
     idx = str(tmp_path / "idx")

@@ -115,6 +115,43 @@ def test_maintain_detects_zone_overlap_and_reclusters(spark, tmp_path):
     assert rep2["clustered_buckets"] == []
 
 
+def test_maintain_converges_on_a_double_cluster_column(spark, tmp_path):
+    """Zone maps of a double column keep their max unless the file holds
+    NaN, so one recluster by it leaves disjoint files and the next pass
+    finds nothing to do."""
+    from pyspark.sql import functions as F
+
+    table = ManifestTable.create(
+        spark, str(tmp_path / "t"), n_buckets=2, target_file_rows=25
+    )
+    seqs = list(range(1, 201))
+    random.Random(5).shuffle(seqs)
+    df = spark.createDataFrame(_rows(seqs), CHANGELOG_SCHEMA).withColumn(
+        "weight",
+        F.when(F.col("commit_seq") % 50 == 7, F.lit(float("nan"))).otherwise(
+            (F.col("commit_seq") * 37 % 211) / 4.0
+        ),
+    )
+    table.merge(df, "mt", 0)
+    before = _state(table)
+
+    rep = table.maintain(cluster_sort=("weight",))
+    assert rep["clustered_buckets"], rep
+    assert "zone-overlap" in rep["cluster_reason"]
+    assert _state(table) == before
+    m = table.manifest()
+    for ps in m["files"].values():
+        rngs = sorted(
+            tuple(m["file_meta"][p]["cols"]["weight"]) for p in ps
+        )
+        assert rngs[-1][1] is None  # NaN sorts into the last file
+        for (a_lo, a_hi), (b_lo, b_hi) in zip(rngs, rngs[1:]):
+            assert a_hi < b_lo
+
+    rep2 = table.maintain(cluster_sort=("weight",))
+    assert rep2["clustered_buckets"] == []
+
+
 def test_maintain_tombstone_fraction_rule(spark, tmp_path):
     table = ManifestTable.create(spark, str(tmp_path / "t"), n_buckets=2)
     _apply(spark, table, _rows(range(1, 21)), 0)

@@ -3,7 +3,7 @@
 partial_update: null payload columns mean "unchanged" — the matched row
 coalesces against its stored values, and the sha256(content) invariant is
 recomputed on the MERGED row (reference analog: field-wise coalesce merge,
-/root/reference/internal/merger, implemented by lww_resolve_partial in
+the reference's internal/merger, implemented by lww_resolve_partial in
 operators/lww.py and applied here to the changelog sink).
 
 DLQ: rows normalize_events drops (missing key / bad op / missing seq) are

@@ -109,3 +109,40 @@ def test_zorder_validation(spark, tmp_path):
             T.StructType.fromJson(m["schema"]),
             bits=32,
         )
+
+
+def test_zorder_on_a_double_column(spark, tmp_path):
+    """A double column z-orders and prunes like a long one; a NaN row
+    (ordered above every number) leaves only its own file unbounded."""
+    from pyspark.sql import functions as F
+
+    t = ManifestTable.create(
+        spark, str(tmp_path / "t"), n_buckets=1, target_file_rows=25
+    )
+    df = spark.createDataFrame(_rows(400), CHANGELOG_SCHEMA).withColumn(
+        "weight",
+        F.when(F.col("commit_seq") == 7, F.lit(float("nan"))).otherwise(
+            F.col("size_bytes") / 4.0
+        ),
+    )
+    t.merge(df, "zd", 0)
+    before = {(r["repo"], str(r["weight"])) for r in t.read().collect()}
+    # the files written in arrival order bound weight, all but the one
+    # holding NaN
+    zones = [
+        fm["cols"]["weight"] for fm in t.manifest()["file_meta"].values()
+    ]
+    assert len(zones) == 16 and sum(hi is None for _, hi in zones) == 1
+    t.cluster(zorder=["commit_seq", "weight"], target_file_rows=25)
+    after = t.read().collect()
+    assert {(r["repo"], str(r["weight"])) for r in after} == before
+    zones = [
+        fm["cols"]["weight"] for fm in t.manifest()["file_meta"].values()
+    ]
+    assert len(zones) >= 8
+    assert sum(hi is None for _, hi in zones) == 1
+    s, tot = _skipped(t, {"weight": (0.0, 12.0)})
+    assert s >= tot // 3
+    rf = {"weight": (0.0, 12.0)}
+    got = {r["repo"] for r in t.read(range_filters=rf).collect()}
+    assert got == {r["repo"] for r in after if 0.0 <= r["weight"] <= 12.0}

@@ -149,7 +149,7 @@ def lww_resolve_partial(
     """Per-key LWW where null payload columns mean "unchanged": the winner
     row (max order) takes each payload column from the LATEST non-null
     value in order (Debezium-style sparse/partial update events; reference
-    analog: field-wise coalesce merge, /root/reference/internal/merger).
+    analog: field-wise coalesce merge, the reference's internal/merger).
 
     Semantics per key, events ordered by (commit_seq, commit, op):
 

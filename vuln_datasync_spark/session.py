@@ -122,10 +122,11 @@ def get_spark(
         "spark.io.compression.codec": "zstd",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.parquet.compression.codec": "zstd",
-        # ManifestTable takes its zone maps from parquet footers, and INT96
-        # (Spark's default timestamp type) carries no footer stats: INT64
-        # micros keeps `ts` zone maps. INT96 files still read; their stats
-        # were recorded when they were written.
+        # ManifestTable takes its zone maps from parquet footers. INT96
+        # (Spark's default timestamp type) carries no footer stats, so it
+        # would read `ts` back from every new file on the driver; INT64
+        # micros puts them in the footer. INT96 files still read; their
+        # stats were recorded when they were written.
         "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
         "spark.ui.enabled": "false",
         # corpus prep builds an iterative plan whose rendered text --

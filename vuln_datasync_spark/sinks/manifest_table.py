@@ -74,6 +74,10 @@ from ..operators.lww import lww_resolve, lww_resolve_partial
 
 logger = logging.getLogger("vuln_datasync_spark.manifest_table")
 
+# tables whose INT96-timestamp writes have been warned about (once each)
+_INT96_WARNED: set[str] = set()
+
+
 class CommitConflict(RuntimeError):
     """Optimistic commit refused: the table's current snapshot moved
     between plan and pointer swap (another writer committed first)."""
@@ -159,7 +163,14 @@ def _conform(df: DataFrame, schema: T.StructType) -> DataFrame:
 
 
 class ManifestTable:
-    """A keyed, versioned table at ``root`` with atomic manifest commits."""
+    """A keyed, versioned table at ``root`` with atomic manifest commits.
+
+    Zone maps come from the new files' parquet footers. A session that
+    writes timestamps as INT96 (Spark's default; ``get_spark`` sets
+    ``spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS``) leaves
+    them out of the footers, so each write reads its timestamp columns
+    back on the driver instead, and the first such write per table logs
+    a warning."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -1366,7 +1377,7 @@ class ManifestTable:
         # read, no bucket rewrite; write ∝ batch size. Reads resolve
         # base ∪ logs per key (read() docstring).
         # Bulk-append fast path (reference analog: batch INSERT,
-        # /root/reference/internal/database/batch.go bulk path): none of
+        # the reference's internal/database/batch.go bulk path): none of
         # the touched buckets has stored data, so the batch IS the merged
         # state — no target read, no union, no per-key window. This is
         # every first load and every backfill into fresh buckets.
@@ -1620,22 +1631,43 @@ class ManifestTable:
         return v
 
     @classmethod
-    def _footer_zone(cls, md, j: int, f_: T.StructField):
-        """``[min, max]`` of column ``j`` folded over the row groups of
-        footer ``md``, encoded as ``_enc_stat`` stores it; None when the
-        footer cannot bound it (a row group with non-null values and no
-        min/max: INT96 timestamps, NaN-only floats).
+    def _zone_entry(cls, mn, mx, f_: T.StructField, nan: bool = False):
+        """The stored ``[min, max]`` zone of column ``f_`` from its min and
+        max (naive local datetimes for timestamps, as ``collect()`` gives
+        them); ``nan`` says the column holds a NaN, which Spark orders
+        above every number. None when nothing can bound it.
 
         * All-null column: ``[None, None]``.
         * Strings keep the 64-char cap: the min is cut to 64 chars (a cut
           prefix is still a lower bound), a max of 65+ chars is stored as
           None (unbounded).
-        * Float/double: the max is None. Footers leave NaN out of max,
-          while Spark orders NaN above every number.
-        * Timestamps: footers give UTC-aware datetimes; they are turned
-          into the naive local datetime ``collect()`` gives, so the
-          stored strings match what a Spark scan would record."""
+        * A float/double column holding NaN stores no max (NaN is above
+          every bound); an all-NaN column is left unbounded (None)."""
+        if nan:
+            if mn is None:
+                return None
+            mx = None
+        elif f_.dataType.typeName() == "string":
+            if mn is not None and len(mn) > 64:
+                mn = mn[:64]
+            if mx is not None and len(mx) >= 65:
+                mx = None
+        return [cls._enc_stat(mn), cls._enc_stat(mx)]
+
+    @classmethod
+    def _footer_zone(cls, md, j: int, f_: T.StructField):
+        """Zone of column ``j`` folded over the row groups of footer
+        ``md`` (see ``_zone_entry``); None when the footer cannot bound
+        it: a row group holds values but no min/max (INT96 timestamps),
+        or every value is NaN.
+
+        Footer timestamps are UTC-aware; they are turned into the naive
+        local datetime ``collect()`` gives, so the stored strings match
+        what a Spark scan records. parquet-java orders NaN above every
+        number, as Spark does: a float row group holding NaN has max NaN,
+        and min NaN only when every value is NaN."""
         mn = mx = None
+        nan = False
         for i in range(md.num_row_groups):
             st = md.row_group(i).column(j).statistics
             if st is None or not st.has_null_count:
@@ -1644,50 +1676,89 @@ class ManifestTable:
                 continue  # only nulls in this row group
             if not st.has_min_max:
                 return None
-            mn = st.min if mn is None else min(mn, st.min)
-            mx = st.max if mx is None else max(mx, st.max)
-        t = f_.dataType.typeName()
-        if t == "timestamp" and mn is not None:
+            lo, hi = st.min, st.max
+            if isinstance(hi, float) and math.isnan(hi):
+                nan = True
+                if math.isnan(lo):
+                    continue  # every value NaN
+                hi = lo
+            mn = lo if mn is None else min(mn, lo)
+            mx = hi if mx is None else max(mx, hi)
+        if f_.dataType.typeName() == "timestamp" and mn is not None:
             epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
             us = datetime.timedelta(microseconds=1)
             mn, mx = (
                 T.TimestampType().fromInternal((v - epoch) // us)
                 for v in (mn, mx)
             )
-        elif t in ("float", "double"):
-            if mn is not None and math.isnan(mn):
-                return None
-            mx = None
-        elif t == "string":
-            if mn is not None and len(mn) > 64:
-                mn = mn[:64]
-            if mx is not None and len(mx) >= 65:
-                mx = None
-        return [cls._enc_stat(mn), cls._enc_stat(mx)]
+        return cls._zone_entry(mn, mx, f_, nan)
+
+    @classmethod
+    def _data_zone(cls, arr, f_: T.StructField):
+        """Zone of a non-float column read back from its file (a pyarrow
+        array), for a column whose footer cannot bound it; same rules as
+        ``_footer_zone``."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        ts = f_.dataType.typeName() == "timestamp"
+        if ts:
+            # INT96 reads as naive UTC, INT64 as UTC-aware: both to micros
+            arr = pc.cast(pc.cast(arr, pa.timestamp("us")), pa.int64())
+        mm = pc.min_max(arr).as_py()
+        mn, mx = mm["min"], mm["max"]
+        if ts and mn is not None:
+            mn, mx = (T.TimestampType().fromInternal(v) for v in (mn, mx))
+        return cls._zone_entry(mn, mx, f_)
+
+    @staticmethod
+    def _tomb_stats(pf, md, at: dict):
+        """``(n_tombstones, min tombstone commit_seq)`` of one open file.
+        Only row groups whose footer shows an ``is_deleted=True`` (or has
+        no stats for it) are read, and only ``is_deleted`` and
+        ``commit_seq``; a file without tombstones reads no data."""
+        import pyarrow.compute as pc
+
+        j = at["is_deleted"]
+        rgs = []
+        for i in range(md.num_row_groups):
+            st = md.row_group(i).column(j).statistics
+            if st is not None and st.has_null_count and st.num_values == 0:
+                continue  # only nulls
+            if st is not None and st.has_min_max and not st.max:
+                continue  # no True
+            rgs.append(i)
+        if not rgs:
+            return 0, None
+        t = pf.read_row_groups(rgs, columns=["is_deleted", "commit_seq"])
+        dead = pc.fill_null(t["is_deleted"], False)
+        mts = pc.min(pc.filter(t["commit_seq"], dead)).as_py()
+        return int(pc.sum(dead).as_py() or 0), mts
 
     def _write_stats(self, files: dict, schema: T.StructType):
         """Both stats layers the manifest carries, for the files one
         ``_write_snapshot`` wrote (``files``: bucket -> manifest-relative
-        paths; ``schema``: the written frame's), read on the driver with
+        paths; ``schema``: the written frame's), taken on the driver with
         no Spark job:
 
         * ``bucket_meta`` — per-bucket tombstone stats (feeds
-          ``expire_tombstones``'s no-scan bucket selection), from a
-          pyarrow read of ``is_deleted`` and ``commit_seq`` only;
+          ``expire_tombstones``'s no-scan bucket selection); see
+          ``_tomb_stats``;
         * ``file_meta`` — per-FILE row counts and min/max zone maps for
           numeric / timestamp / date / key columns (feeds
           ``read(range_filters=)`` file skipping — the Iceberg
           manifest-stats / Delta data-skipping pattern; reference analog:
           the B-tree index scan behind incremental modified-since sync,
-          /root/reference/sql/vulnerabilities.sql:128-132), taken from
-          the parquet footers (see ``_footer_zone``). A column the footer
-          cannot bound is left out of ``cols``, so reads keep the file.
+          the reference's sql/vulnerabilities.sql:128-132), taken from
+          the parquet footers (see ``_footer_zone``).
 
-        Work is ∝ the files just written, never the table. Files written
-        before timestamps were INT64 (INT96 carries no footer stats) keep
-        the stats recorded when they were written; they are never
-        re-read."""
-        import pyarrow.compute as pc
+        A column the footer cannot bound — timestamps written as INT96,
+        which carry no footer stats — is read back from the file with
+        pyarrow (``_data_zone``): one column, on the driver, ∝ the rows
+        written. ``get_spark`` writes INT64 timestamps, so the CDC table
+        reads no zone column back, and its files without tombstones read
+        no data at all. Files already in the table keep the stats
+        recorded when they were written; they are never re-read."""
         import pyarrow.parquet as pq
 
         zcols = self._zone_cols(schema)
@@ -1696,31 +1767,38 @@ class ManifestTable:
         file_meta: dict[str, dict] = {}
         for b, rels in files.items():
             for rel in rels:
-                with pq.ParquetFile(os.path.join(self.root, rel)) as pf:
+                with pq.ParquetFile(
+                    os.path.join(self.root, rel),
+                    coerce_int96_timestamp_unit="us",
+                ) as pf:
                     md = pf.metadata
-                    t = (
-                        pf.read(columns=["is_deleted", "commit_seq"])
-                        if tomb
-                        else None
-                    )
-                at = {
-                    md.schema.column(j).path: j for j in range(md.num_columns)
-                }
-                cols = {}
-                for f_ in zcols:
-                    if f_.name in at:
+                    at = {
+                        md.schema.column(j).path: j
+                        for j in range(md.num_columns)
+                    }
+                    cols, unbounded = {}, []
+                    for f_ in zcols:
+                        if f_.name not in at:
+                            continue
                         zone = self._footer_zone(md, at[f_.name], f_)
                         if zone is not None:
                             cols[f_.name] = zone
-                file_meta[rel] = {"rows": int(md.num_rows), "cols": cols}
-                if t is None:
-                    continue
-                dead = pc.fill_null(t["is_deleted"], False)
+                        # float footers always carry min/max: None there
+                        # means all NaN, which nothing bounds
+                        elif f_.dataType.typeName() not in ("float", "double"):
+                            unbounded.append(f_)
+                    if unbounded:
+                        t = pf.read(columns=[f_.name for f_ in unbounded])
+                        for f_ in unbounded:
+                            cols[f_.name] = self._data_zone(t[f_.name], f_)
+                    file_meta[rel] = {"rows": int(md.num_rows), "cols": cols}
+                    if not tomb:
+                        continue
+                    n, mts = self._tomb_stats(pf, md, at)
                 bm = bucket_meta.setdefault(
                     b, {"n_tombstones": 0, "min_tomb_seq": None}
                 )
-                bm["n_tombstones"] += int(pc.sum(dead).as_py() or 0)
-                mts = pc.min(pc.filter(t["commit_seq"], dead)).as_py()
+                bm["n_tombstones"] += n
                 if mts is not None:
                     bm["min_tomb_seq"] = (
                         int(mts)
@@ -1758,6 +1836,27 @@ class ManifestTable:
         if partial_update:
             return lambda d: lww_resolve_partial(d, key_cols=keys)
         return lambda d: lww_resolve(d, mode="window", key_cols=keys)
+
+    def _warn_int96(self, schema: T.StructType) -> None:
+        """Warn once per table when this session writes timestamp zone
+        columns as INT96: their footers carry no stats, so
+        ``_write_stats`` reads them back from every new file."""
+        if self.root in _INT96_WARNED or not any(
+            f_.dataType.typeName() == "timestamp"
+            for f_ in self._zone_cols(schema)
+        ):
+            return
+        conf = "spark.sql.parquet.outputTimestampType"
+        if self.spark.conf.get(conf) == "INT96":
+            _INT96_WARNED.add(self.root)
+            logger.warning(
+                "%s: %s=INT96 writes timestamps without footer stats; "
+                "their zone maps are read back from each new file on the "
+                "driver. Set it to TIMESTAMP_MICROS to take them from "
+                "the footers.",
+                self.root,
+                conf,
+            )
 
     def _write_snapshot(
         self,
@@ -1807,6 +1906,7 @@ class ManifestTable:
             if helpers:
                 out = out.drop(*helpers)
         out = out.withColumnRenamed("_bucket", "bucket")
+        self._warn_int96(out.schema)
         w = out.write.partitionBy("bucket")
         if target_rows:
             w = w.option("maxRecordsPerFile", int(target_rows))

@@ -27,7 +27,11 @@ from pyspark.sql import types as T
 def global_bounds(manifest: dict, cols: list[str]) -> dict:
     """Per-column (min, max) across all files, from the manifest's
     file_meta zone maps — no data I/O. Raises if a column has no
-    stats (non-numeric / never written)."""
+    stats (non-numeric / never written).
+
+    A zone with no upper bound (a float file holding NaN) offers its
+    lower bound as a max candidate: NaN and any larger value clamp to
+    the top rank, so the key stays correct, only coarser above it."""
     fm = manifest.get("file_meta", {})
     out: dict[str, tuple] = {}
     for c in cols:
@@ -39,6 +43,8 @@ def global_bounds(manifest: dict, cols: list[str]) -> dict:
             lo, hi = ent
             if lo is not None and (mn is None or lo < mn):
                 mn = lo
+            if hi is None:
+                hi = lo
             if hi is not None and (mx is None or hi > mx):
                 mx = hi
         if mn is None or mx is None:
