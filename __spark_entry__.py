@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry(spark)    — flagship CDC replay on a deterministic synthetic changelog
-                  (engine path: normalize -> LWW, window or ordkey as
-                  apply_batch's _resolve_lww_mode picks -> manifest MERGE),
+                  (engine path: normalize -> LWW, one window resolver
+                  where the earliest arrival wins a tie -> manifest MERGE),
                   returning per-repo final-state stats + content checksums.
 queries()       — one entry per catalog operator, the CDC engine's among them
                   (catalog: vuln_datasync_spark/plans/queries.py).

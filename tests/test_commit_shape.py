@@ -138,6 +138,32 @@ def test_compact_logs_plans_one_exchange(spark, tmp_path, snapshot_plans):
     assert sorted(map(tuple, t.read().collect())) == before
 
 
+
+def test_partial_update_into_logged_table_plans_one_exchange(
+    spark, tmp_path, snapshot_plans
+):
+    """A copy-on-write merge into buckets with MOR logs reads base ∪ logs
+    raw and resolves them with the batch after the one routing exchange.
+    The log rows null ``ts``; the sparse batch leaves it unchanged, so it
+    must stay null rather than refill from the older base row."""
+    t = ManifestTable.create(
+        spark, str(tmp_path / "t"), n_buckets=8, merge_mode="mor"
+    )
+    apply_batch(_events(spark, 0, 200), t, "pp", 0)
+    apply_batch(_events(spark, 100, 300, seq_add=1000, ts=False), t, "pp", 1)
+    assert any((t.manifest().get("logs") or {}).values())
+    snapshot_plans.clear()
+    sparse = _events(spark, 150, 250, seq_add=2000, ts=False)
+    apply_batch(sparse, t, "pp", 2, partial_update=True)
+    (nodes,) = snapshot_plans
+    assert [name for name, _ in nodes].count("Exchange") == 1, nodes
+    got = {r["path"]: (r["content"], r["ts"]) for r in t.read().collect()}
+    for k in range(300):
+        seq_add = 2000 if 150 <= k < 250 else 1000 if k >= 100 else 0
+        assert got[f"src/f{k}.py"][0] == f"v{k}-{seq_add}", k
+        if k >= 100:
+            assert got[f"src/f{k}.py"][1] is None, k
+
 # ---------- footer stats vs the Spark scan ----------
 
 

@@ -1,6 +1,8 @@
-"""LWW resolution: both strategies agree, ties are deterministic at any
-parallelism, duplicates collapse (SURVEY.md §2.6 / §7.3 #2-3)."""
+"""LWW resolution: the one resolver picks the winners of the pandas
+oracle, ties are deterministic at any parallelism, duplicates collapse
+(SURVEY.md §2.6 / §7.3 #2-3)."""
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from vuln_datasync_spark.datagen import generate_changelog_pandas
@@ -8,41 +10,46 @@ from vuln_datasync_spark.operators.lww import lww_resolve
 
 
 def _fingerprint(df):
+    """Order-free digest of every column of every row."""
     return (
         df.select(
-            F.sha2(
-                F.concat_ws(
-                    "|", "repo", "path", "commit", F.col("commit_seq").cast("string")
-                ),
-                256,
-            ).alias("h")
+            F.sha2(F.to_json(F.struct(*sorted(df.columns))), 256).alias("h")
         )
         .agg(F.sum(F.conv(F.substring("h", 1, 15), 16, 10).cast("decimal(38,0)")))
         .first()[0]
     )
 
 
-def test_all_modes_agree(spark):
+def _winners(ev):
+    """Oracle: the last event per key by (commit_seq, commit, op)."""
+    return (
+        ev.sort_values(["commit_seq", "commit", "op"], kind="stable")
+        .groupby(["repo", "path"], sort=False)
+        .tail(1)
+    )
+
+
+def test_resolver_matches_oracle(spark):
     ev = generate_changelog_pandas(4000, seed=7)
-    df = spark.createDataFrame(ev)
-    prints = {
-        mode: _fingerprint(lww_resolve(df, mode=mode, n_salts=8))
-        for mode in ("maxby", "salted", "ordkey", "window")
-    }
-    assert len(set(prints.values())) == 1, prints
-    # ordkey must also agree without the broadcast fast path
-    assert (
-        _fingerprint(lww_resolve(df, mode="ordkey", broadcast_winners=False))
-        == prints["ordkey"]
+    cols = ["repo", "path", "commit_seq", "commit", "op", "content"]
+    got = lww_resolve(spark.createDataFrame(ev)).select(*cols).collect()
+    assert sorted(map(tuple, got)) == sorted(
+        map(tuple, _winners(ev)[cols].itertuples(index=False))
     )
 
 
 def test_parallelism_invariance(spark):
     ev = generate_changelog_pandas(3000, seed=11)
-    df = spark.createDataFrame(ev)
+    # copies of 60 winners that tie on (commit_seq, commit, op) and
+    # differ only in a payload column: the resolver's last tie-break
+    # must pick the same copy however the rows arrive
+    ties = _winners(ev).head(60)
+    copies = [ties.assign(size_bytes=s) for s in (240, 7, 99)]
+    df = spark.createDataFrame(pd.concat([ev, *copies], ignore_index=True))
     a = _fingerprint(lww_resolve(df.repartition(1)))
     b = _fingerprint(lww_resolve(df.repartition(17)))
-    assert a == b
+    c = _fingerprint(lww_resolve(df.repartition(17)))
+    assert a == b == c
 
 
 def test_duplicates_collapse_and_one_row_per_key(spark):
@@ -52,12 +59,7 @@ def test_duplicates_collapse_and_one_row_per_key(spark):
     n_keys = df.select("repo", "path").distinct().count()
     assert won.count() == n_keys
     # winner per key == max (commit_seq, commit, op) among that key's events
-    expected = (
-        ev.sort_values(["commit_seq", "commit", "op"], kind="stable")
-        .groupby(["repo", "path"], sort=False)
-        .tail(1)
-    )
     got = {(r["repo"], r["path"]): r["commit_seq"] for r in won.collect()}
-    for _, row in expected.iterrows():
+    for _, row in _winners(ev).iterrows():
         assert got[(row.repo, row.path)] == row.commit_seq
     won.unpersist()

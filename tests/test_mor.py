@@ -489,3 +489,49 @@ def test_cow_merge_into_logs_only_bucket_folds_logs(spark, tmp_path):
     state = _state(t)
     assert state[(ar, ap)] == "vA"
     assert state[(br, bp)] == "vB"
+
+
+def test_ties_across_commits_keep_the_first_copy(spark, tmp_path):
+    """An exact tie on (commit_seq, commit, op) split over two commits,
+    the second with a column the first lacked: both table kinds keep the
+    first copy on every read of a snapshot and after compaction, and the
+    change feed between the tied commits is empty."""
+    narrow = T.StructType(
+        [f for f in CHANGELOG_SCHEMA.fields if f.name != "size_bytes"]
+    )
+    keys = [(f"r{k % 5}", f"src/f{k}.py") for k in range(400)]
+
+    def rows(seq, content, *extra):
+        return [
+            (seq, "update", r, p, f"c{seq}", "python", content + p, None,
+             *extra)
+            for r, p in keys
+        ]
+
+    want = {(r, p): ("w-" + p, None) for r, p in keys}
+    for mode in ("mor", "cow"):
+        t = ManifestTable.create(
+            spark, str(tmp_path / mode), n_buckets=4, merge_mode=mode
+        )
+
+        def copies(sid=None):
+            return {
+                (r["repo"], r["path"]): (r["content"], r["size_bytes"])
+                for r in t.read(snapshot_id=sid).collect()
+            }
+
+        apply_batch(spark.createDataFrame(rows(1, "v-"), narrow), t, "tie", 0)
+        apply_batch(spark.createDataFrame(rows(10, "w-"), narrow), t, "tie", 1)
+        s1 = t.current_snapshot_id()
+        apply_batch(
+            spark.createDataFrame(rows(10, "w-", 240), CHANGELOG_SCHEMA),
+            t, "tie", 2,
+        )
+        s2 = t.current_snapshot_id()
+        if mode == "mor":
+            assert all(len(ps) == 2 for ps in t.manifest()["logs"].values())
+        assert t.read_changes(s1, s2).count() == 0, mode
+        assert copies(s2) == want, mode
+        assert copies(s2) == want, mode
+        t.compact_logs()
+        assert copies() == want, mode

@@ -6,8 +6,9 @@ pipeline:
 
     changelog (insert/update/delete events keyed by (repo, path))
         -> vectorized normalization (built-in exprs + Arrow pandas UDFs)
-        -> last-writer-wins resolution per key (window or ordkey, picked
-           per batch by apply_batch's _resolve_lww_mode)
+        -> last-writer-wins resolution per key (one window resolver;
+           the earliest arrival wins a tie, so merge-on-read and
+           copy-on-write tables agree)
         -> MERGE into a snapshot-isolated keyed table (mini-Iceberg parquet
            sink with atomic manifest commits; real Iceberg behind import-try)
         -> per-micro-batch lineage records, exactly-once via epoch-tagged

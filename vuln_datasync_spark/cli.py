@@ -61,8 +61,7 @@ def cmd_replay(args) -> int:
         spark, args.changelog, fmt=args.format, since_seq=args.since_seq
     )
     lineage = apply_batch(
-        events, table, checkpoint_id=args.job_id, batch_id=args.batch_id,
-        lww_mode=args.lww_mode,
+        events, table, checkpoint_id=args.job_id, batch_id=args.batch_id
     )
     print(json.dumps(lineage))
     return 0
@@ -80,7 +79,6 @@ def cmd_stream(args) -> int:
         args.checkpoint,
         changelog_schema(),
         max_files_per_trigger=args.max_files_per_trigger,
-        lww_mode=args.lww_mode,
         processing_time=args.processing_time,
         # long-lived tails drain on SIGINT/SIGTERM; the availableNow drain
         # exits on its own and must not clobber the host's handlers
@@ -846,8 +844,6 @@ def build_parser() -> argparse.ArgumentParser:
     r.add_argument("--buckets", type=int, default=64)
     r.add_argument("--job-id", default="cli")
     r.add_argument("--batch-id", type=int, default=0)
-    r.add_argument("--lww-mode", default="auto",
-                   choices=["auto", "ordkey", "window", "salted", "maxby"])
     r.add_argument("--merge-mode", default="cow", choices=["cow", "mor"],
                    help="table write mode when CREATING the table: cow "
                    "rewrites touched buckets; mor appends per-bucket log "
@@ -865,8 +861,6 @@ def build_parser() -> argparse.ArgumentParser:
     s.add_argument("--processing-time", default=None,
                    help="long-lived tail trigger interval (e.g. '2 seconds');"
                    " default drains available files once (availableNow)")
-    s.add_argument("--lww-mode", default="auto",
-                   choices=["auto", "ordkey", "window", "salted", "maxby"])
     s.add_argument("--envelope-format", default=None,
                    choices=["debezium", "maxwell"],
                    help="the changelog dir holds raw WAL/binlog envelope "

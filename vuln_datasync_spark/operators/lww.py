@@ -5,141 +5,95 @@ is the event with the greatest sequence per key
 (/root/reference/sql/vulnerabilities.sql:66-90 — ON CONFLICT DO UPDATE;
 /root/reference/internal/merger/normalizer.go:408-411 — most-recent wins).
 
-Total order: ``(commit_seq, commit, op)`` so ties (exact duplicate events,
-~3% of the log) resolve identically at any parallelism.
+One resolver over one total order (``lww_order``), winner first:
 
-Four strategies, same result (measured at 1M events, local[32], warm):
+1. ``(commit_seq, commit, op)`` descending;
+2. the arrival rank (``ARRIVAL``) ascending, so the EARLIEST copy of an
+   exact tie wins. The sink sets it through ``rank_arrivals``: base files
+   before merge-on-read log files, logs in the commit order the manifest
+   records, the stored table before an incoming batch. A duplicate event
+   that arrives again (perhaps with a column added since) never replaces
+   the stored copy, so a merge-on-read and a copy-on-write table fed the
+   same batches hold the same rows;
+3. inside one batch, which has no arrival order, ``xxhash64`` of the
+   remaining columns ascending: a content hash keeps the last tie
+   deterministic at any partitioning and on a rerun without a source
+   position, so in-memory frames resolve the same way as file scans.
+   Every ranked part holds at most one row per key (a batch's winners, or
+   a resolved base), so there the rank ends every tie and no row is
+   hashed: hashing the payload of a copy-on-write target cost ~9% of
+   ``stream_upsert``'s ``events_per_cpu_s``.
 
-* ``mode="ordkey"`` (DEFAULT, ~1.9s) — two-phase reduce with the payload
-  kept OUT of the aggregate: (1) project the key + a compact order-string
-  ``lpad(commit_seq,19,'0')||commit||op`` (string compare == tuple compare;
-  requires commit_seq >= 0) and hash-aggregate ``max`` per key — partial
-  aggregation collapses hot keys map-side BEFORE the shuffle (the north
-  rule's local/global LWW reduce), and only ~100-byte rows ever shuffle;
-  (2) semi-join the winning (key, ord) set back against the events to fetch
-  the full payload — broadcast when the winner set is small (the content
-  column then never moves at all), shuffle semi-join otherwise;
-  (3) dropDuplicates per key (exact duplicate events both match the semi
-  join). This is the plan that survives 100 TB: shuffle bytes ∝ #keys, not
-  ∝ data, and skew collapses at the map side.
-
-* ``mode="window"`` (~1.3s) — ``row_number() OVER (PARTITION BY key ORDER
-  BY ord DESC) = 1``. Fastest locally (one binary sort, streamed), but a
-  hot key's every event lands in one task — no skew mitigation. Good for
-  bounded per-key cardinality.
-
-* ``mode="salted"`` (~2.5s) — explicit salted two-phase ``max(struct)``:
-  local max per (key, salt), then global max per key. Skew-safe, but the
-  full payload rides through a SortAggregate twice.
-
-* ``mode="maxby"`` (~28s) — single ``max(struct(ord, payload))`` per key.
-  Spark executes max-over-struct as a SortAggregate (struct buffers are
-  neither mutable-primitive nor TypedImperative), so every event's full
-  payload is sorted and struct-compared — measured 15-20x slower than
-  ordkey. Kept as the semantic reference implementation.
+``lww_resolve`` keeps ``row_number() = 1`` of a window partitioned by key
+and ordered this way: one shuffle by key, then a sort within it.
+``lww_resolve_partial`` is its sparse-update form over the same order.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.normalize import LWW_ORDER_COLS
 
 KEY_COLS = ("repo", "path")
+# internal arrival-rank column: the resolvers drop it, so it never reaches
+# a written file or a read
+ARRIVAL = "_arrival"
 
 
-def _ord_struct() -> F.Column:
-    return F.struct(*[F.col(c) for c in LWW_ORDER_COLS]).alias("_ord")
+def rank_arrivals(parts: list[DataFrame]) -> DataFrame:
+    """Union ``parts``, earliest arrival first, tagging every row with its
+    part's index in ``ARRIVAL``."""
+    out = None
+    for i, p in enumerate(parts):
+        p = p.withColumn(ARRIVAL, F.lit(i))
+        out = p if out is None else out.unionByName(p)
+    return out
 
 
-COMMIT_PAD_WIDTH = 40  # sha1/truncated-sha256 hex width
-
-
-def _ord_key() -> F.Column:
-    """Compact string encoding of (commit_seq, commit, op) whose string
-    order equals the tuple order: commit_seq zero-padded to 19 (requires
-    commit_seq >= 0), commit right-padded with ' ' (0x20 < any hex/alnum
-    char) to a fixed 40 so variable-length commits can never compare
-    across field boundaries against op. Commits longer than 40 chars are
-    compared on their first 40 (rpad truncates) — full hashes are <= 40
-    hex in practice; ties beyond that fall to op."""
-    return F.concat(
-        F.lpad(F.col("commit_seq").cast("string"), 19, "0"),
-        F.rpad(F.coalesce(F.col("commit"), F.lit("")), COMMIT_PAD_WIDTH, " "),
-        F.coalesce(F.col("op"), F.lit("")),  # null fields must not null
-    )  # out the whole key
+def lww_order(
+    df: DataFrame, key_cols: tuple[str, ...], winner_first: bool = True
+) -> list[Column]:
+    """Sort expressions of the LWW total order within a key of ``df``
+    (module docstring), winner first; ``winner_first=False`` is the exact
+    reverse, for frames that run up to the winner."""
+    new, old = (F.desc, F.asc) if winner_first else (F.asc, F.desc)
+    order = [new(c) for c in LWW_ORDER_COLS]
+    if ARRIVAL in df.columns:
+        return order + [old(ARRIVAL)]
+    rest = [
+        f.name
+        for f in df.schema.fields
+        if f.name not in (*key_cols, *LWW_ORDER_COLS)
+        # xxhash64 rejects map values
+        and "map<" not in f.dataType.simpleString()
+    ]
+    return order + [old(F.xxhash64(*rest))] if rest else order
 
 
 def lww_resolve(
     events: DataFrame,
-    mode: str = "ordkey",
-    n_salts: int = 16,
     key_cols: tuple[str, ...] = KEY_COLS,
-    broadcast_winners: bool | str = "auto",
+    *,
+    mode: str = "window",
 ) -> DataFrame:
     """Reduce a change-event batch to one winning event per key.
 
     Input: normalized events (must contain key_cols + LWW_ORDER_COLS).
-    Output: one row per key, original event columns.
+    Output: one row per key, the input columns without ``ARRIVAL``.
 
-    ``broadcast_winners`` (ordkey mode only): "auto" (default) plans a
-    regular join and lets AQE convert it to a broadcast semi-join at
-    runtime from the winner set's MEASURED shuffle size — safe at any key
-    cardinality (a 10^9-key backfill batch exceeds broadcast limits and
-    must shuffle; a micro-batch's winner set broadcasts for free). True
-    forces the broadcast hint (only when the caller KNOWS the key count is
-    small); False forces the shuffle path.
-    """
-    payload_cols = [c for c in events.columns if c not in key_cols]
-    packed = F.struct(
-        _ord_struct(), F.struct(*[F.col(c) for c in payload_cols]).alias("_p")
-    )
-
-    if mode == "ordkey":
-        from pyspark.sql import Window as W
-
-        with_key = events.withColumn("_ok", _ord_key())
-        winners = with_key.groupBy(*key_cols).agg(F.max("_ok").alias("_ok"))
-        if broadcast_winners is True:
-            winners = F.broadcast(winners)
-        semi = with_key.join(winners, [*key_cols, "_ok"], "left_semi")
-        # exact duplicate events both pass the semi join; dedup via a
-        # window over the (tiny, one-row-per-key + rare dup copies) winner
-        # set — measured ~20x cheaper than dropDuplicates' SortAggregate
-        # over full payload rows
-        w = W.partitionBy(*key_cols).orderBy(F.desc("_ok"))
-        return (
-            semi.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_ok")
-        )
-    if mode == "window":
-        from pyspark.sql import Window as W
-
-        w = W.partitionBy(*key_cols).orderBy(
-            *[F.desc(c) for c in LWW_ORDER_COLS]
-        )
-        return (
-            events.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    if mode == "maxby":
-        won = events.groupBy(*key_cols).agg(F.max(packed).alias("_w"))
-    elif mode == "salted":
-        salt = F.pmod(F.xxhash64(F.col("commit"), F.col("commit_seq")), F.lit(n_salts))
-        local = (
-            events.withColumn("_salt", salt)
-            .groupBy(*key_cols, "_salt")
-            .agg(F.max(packed).alias("_w"))
-        )
-        won = local.groupBy(*key_cols).agg(F.max(F.col("_w")).alias("_w"))
-    else:
+    ``mode`` accepts only ``"window"`` and raises on anything else. It is
+    kept only because perfbench's traced run passes it; the next benchmark
+    revision drops that argument and this keyword."""
+    if mode != "window":
         raise ValueError(f"unknown lww mode: {mode}")
-
-    return won.select(
-        *key_cols, *[F.col(f"_w._p.{c}").alias(c) for c in payload_cols]
+    w = W.partitionBy(*key_cols).orderBy(*lww_order(events, key_cols))
+    return (
+        events.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn", ARRIVAL)
     )
 
 
@@ -151,7 +105,7 @@ def lww_resolve_partial(
     value in order (Debezium-style sparse/partial update events; reference
     analog: field-wise coalesce merge, the reference's internal/merger).
 
-    Semantics per key, events ordered by (commit_seq, commit, op):
+    Semantics per key, events in ``lww_order``:
 
     * order columns + ``is_deleted`` always come from the winning event;
     * every other column c = last non-null c among NON-deleted events
@@ -166,21 +120,17 @@ def lww_resolve_partial(
     One shuffle (both window specs share the partitioning); per-key state
     is the window frame — in the merge path the union has <= 2 rows per
     key (stored winner + batch winner), so the sort is constant-size."""
-    from pyspark.sql import Window as W
-
     from ..functions.hashing import content_sha256
 
     fill_cols = [
         c
         for c in events.columns
-        if c not in (*key_cols, *LWW_ORDER_COLS, "is_deleted")
+        if c not in (*key_cols, *LWW_ORDER_COLS, "is_deleted", ARRIVAL)
     ]
-    w_rank = W.partitionBy(*key_cols).orderBy(
-        *[F.desc(c) for c in LWW_ORDER_COLS]
-    )
+    w_rank = W.partitionBy(*key_cols).orderBy(*lww_order(events, key_cols))
     w_fill = (
         W.partitionBy(*key_cols)
-        .orderBy(*[F.asc(c) for c in LWW_ORDER_COLS])
+        .orderBy(*lww_order(events, key_cols, winner_first=False))
         .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
     )
     dead = F.lit(False)
@@ -202,7 +152,7 @@ def lww_resolve_partial(
         df = df.withColumn(
             c, F.when(alive, F.col(f"_f_{c}")).otherwise(F.col(c))
         ).drop(f"_f_{c}")
-    df = df.drop("_rn")
+    df = df.drop("_rn", ARRIVAL)
     if "content_sha256" in df.columns and "content" in df.columns:
         df = df.withColumn("content_sha256", content_sha256(F.col("content")))
     return df

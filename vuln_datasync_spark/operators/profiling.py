@@ -1,22 +1,22 @@
-"""Data-shape profilers that pick the engine's own knobs.
+"""Data-shape profilers: measurements of the data the engine's choices
+depend on.
 
-The north-star contract breaks hot-key skew "with key salting plus a
-two-phase local/global last-writer-wins reduce" and handles late data
-with watermarked windows — but HOW MANY salts, and HOW LONG a watermark
-delay, are properties of the data, not the code. These operators measure
-them, cheaply and exactly, so the answers are reproducible (and value-
-checkable against a SQL oracle) instead of guessed:
+How hot the hottest key is (the per-key LWW window sorts each key in one
+task) and how long a watermark delay must be are properties of the data,
+not the code. These operators measure them, cheaply and exactly, so the
+answers are reproducible (and value-checkable against a SQL oracle)
+instead of guessed:
 
 * key_skew_report       — one-row key-distribution summary (max/mean
-                          skew ratio, top-1 / top-k share). A skew ratio
-                          near 1 means ``lww_resolve(mode="ordkey")``
-                          needs no salting; a ratio of R means the
-                          hottest key serializes ~R partitions' worth of
-                          work and ``n_salts >= R`` restores balance.
+                          skew ratio, top-1 / top-k share).
+                          ``lww_resolve`` is one window partitioned by
+                          key, so a ratio of R means the hottest key
+                          serializes ~R partitions' worth of its sort; a
+                          ratio near 1 means the keys spread evenly.
                           Reference analog: the per-source record counts
                           vuln-datasync's dashboard exposes
-                          (sql/vulnerabilities.sql:105-126) — here made
-                          an engine input, not just a chart.
+                          (sql/vulnerabilities.sql:105-126) — here an
+                          exact figure, not just a chart.
 * event_lateness_profile — one-row distribution of event-time regression
                           within each key's ARRIVAL order (running max
                           of event time minus current event time).

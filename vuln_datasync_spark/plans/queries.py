@@ -1285,9 +1285,8 @@ def tx_dup_span(spark, sf):
 
 @q(
     "prof_key_skew",
-    "ops profiling: key-distribution skew report that sizes n_salts for "
-    "the salted two-phase LWW reduce (operators/profiling.py "
-    "key_skew_report)",
+    "ops profiling: key-distribution skew report, the hottest key's share "
+    "of the per-key LWW window (operators/profiling.py key_skew_report)",
     r"""WITH counts AS (
           SELECT user_id AS k, count(*) AS c FROM events GROUP BY user_id
         ), stats AS (

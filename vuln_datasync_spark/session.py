@@ -101,10 +101,11 @@ def get_spark(
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
-        # the LWW winner semi-join relies on AQE's RUNTIME size measurement
-        # to pick broadcast vs shuffle (lww_resolve broadcast_winners=
-        # 'auto'); 64m comfortably covers a few-million-key winner set
-        # while still forcing giant backfill batches onto the shuffle path
+        # AQE re-plans a join as a broadcast from a side's RUNTIME size:
+        # the sync pipelines', operators' and catalog entries' joins
+        # against small key or dimension sides (sizes known only after
+        # their filters run) skip the shuffle at up to 64m, while
+        # backfill-sized sides keep it
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "64m",
         # AQE coalescing runs parallelism-first (Spark default) but its
         # 1m minPartitionSize floor still collapses small shuffles to 1-2

@@ -19,7 +19,8 @@ commit semantics the engine would get from ``MERGE INTO`` on Iceberg
   reference analog: unique-job dedup, /root/reference/internal/jobs/
   server.go:760-832).
 * **Monotone merge condition** — a row only advances when the incoming
-  event's total order ``(commit_seq, commit, op)`` exceeds the stored one,
+  event's total order ``(commit_seq, commit, op)`` exceeds the stored one
+  (an exact tie keeps the stored copy; operators/lww.py ``lww_order``),
   so replays and late/out-of-order events are no-ops (MERGE ... WHEN MATCHED
   AND b.seq > t.seq analog; reference: ON CONFLICT DO UPDATE,
   /root/reference/sql/vulnerabilities.sql:66-90).
@@ -65,12 +66,18 @@ import time
 import uuid
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.normalize import LWW_ORDER_COLS
-from ..operators.lww import lww_resolve, lww_resolve_partial
+from ..operators.lww import (
+    ARRIVAL,
+    lww_order,
+    lww_resolve,
+    lww_resolve_partial,
+    rank_arrivals,
+)
 
 logger = logging.getLogger("vuln_datasync_spark.manifest_table")
 
@@ -636,6 +643,31 @@ class ManifestTable:
             return self._read_with_schema_log(files, schema, slog)
         return self.spark.read.schema(schema).parquet(*files)
 
+    def _arrival_scans(
+        self,
+        m: dict,
+        buckets: list[int] | None,
+        via: dict | None = None,
+        prune=None,
+    ) -> list[DataFrame]:
+        """Scans of ``buckets`` (all when None) under manifest ``m``, one
+        per arrival rank, earliest first: the base files, then each
+        bucket's MOR logs by their position in the manifest's per-bucket
+        list, which is commit order. ``rank_arrivals`` of them is what
+        every base ∪ logs resolve reads, so the earliest copy of a tie
+        wins. Files are read under ``via``'s schema and schema log
+        (default ``m``); ``prune`` (files -> files) filters each rank."""
+        groups = [self._files_for(m, buckets)]
+        for b, ps in (m.get("logs") or {}).items():
+            if buckets is None or int(b) in buckets:
+                for i, p in enumerate(ps, 1):
+                    if i == len(groups):
+                        groups.append([])
+                    groups[i].append(os.path.join(self.root, p))
+        if prune is not None:
+            groups = [prune(fs) for fs in groups]
+        return [self._scan(via or m, fs) for fs in groups if fs]
+
     # ---------- expressions ----------
 
     def bucket_expr(self) -> F.Column:
@@ -656,14 +688,6 @@ class ManifestTable:
             if exclude and int(b) in exclude:
                 continue
             if buckets is None or int(b) in buckets:
-                files += [os.path.join(self.root, p) for p in paths]
-        return files
-
-    def _log_files_for(self, manifest: dict, buckets: list[int] | None = None):
-        """MOR log files (merge-on-read deltas) for the given buckets."""
-        files = []
-        for b, paths in (manifest.get("logs") or {}).items():
-            if paths and (buckets is None or int(b) in buckets):
                 files += [os.path.join(self.root, p) for p in paths]
         return files
 
@@ -825,7 +849,7 @@ class ManifestTable:
             self._files_for(m, buckets, exclude=set(logged)) if m else []
         )
         base_files = _prune(base_files, range_filters or {}, all_cols)
-        log_side_files: list[str] = []
+        log_side: list[DataFrame] = []
         if logged:
             key_set = set(self.key_cols)
             rf_key = {
@@ -833,24 +857,18 @@ class ManifestTable:
                 for c, v in (range_filters or {}).items()
                 if c in key_set
             }
-            log_side_files = _prune(
-                self._files_for(m, logged) + self._log_files_for(m, logged),
-                rf_key,
-                key_set,
+            log_side = self._arrival_scans(
+                m, logged, prune=lambda fs: _prune(fs, rf_key, key_set)
             )
 
         parts = []
         if base_files:
             parts.append(self._scan(m, base_files))
-        if log_side_files:
+        if log_side:
             # <= 1 base row + a few log rows per key: the per-key window
             # sort is constant-size, shuffle ∝ rows in logged buckets
             parts.append(
-                lww_resolve(
-                    self._scan(m, log_side_files),
-                    mode="window",
-                    key_cols=self.key_cols,
-                )
+                lww_resolve(rank_arrivals(log_side), key_cols=self.key_cols)
             )
         if not parts:
             empty_schema = schema or T.StructType(
@@ -1113,31 +1131,21 @@ class ManifestTable:
         if buckets == []:
             return self.spark.createDataFrame([], T.StructType(out_fields))
 
-        def _sides(m, sid):
-            if m is None:
+        def _sides(m):
+            # read BOTH sides through the TARGET's schema and schema log
+            # so a rename between the snapshots is not reported as every
+            # row changing: the base side's files resolve their physical
+            # names by era, then align to the target schema
+            parts = self._arrival_scans(m, buckets, via=m_to) if m else []
+            if not parts:
                 df = self.spark.createDataFrame([], schema)
+            elif self._logged_buckets(m, buckets):
+                # merge-on-read side: collapse base ∪ logs to the per-key
+                # winner before diffing, by the same arrival ranks as
+                # read(), so a tie resolves alike on both sides
+                df = lww_resolve(rank_arrivals(parts), key_cols=tuple(keys))
             else:
-                # read BOTH sides through the TARGET's schema log so a
-                # rename between the snapshots is not reported as every
-                # row changing: the base side's files resolve their
-                # physical names by era, then align to the target schema
-                files = self._files_for(m, buckets) + self._log_files_for(
-                    m, buckets
-                )
-                slog = m_to.get("schema_log") or []
-                if not files:
-                    df = self.spark.createDataFrame([], schema)
-                elif slog:
-                    df = self._read_with_schema_log(files, schema, slog)
-                else:
-                    df = self.spark.read.schema(schema).parquet(*files)
-                df = _conform(df, schema)
-                if self._logged_buckets(m, buckets):
-                    # merge-on-read side: collapse base ∪ logs to the
-                    # per-key winner before diffing
-                    df = lww_resolve(
-                        df, mode="window", key_cols=tuple(keys)
-                    )
+                df = rank_arrivals(parts)
             live = (
                 ~F.coalesce(F.col("is_deleted"), F.lit(False))
                 if "is_deleted" in df.columns
@@ -1150,8 +1158,8 @@ class ManifestTable:
             )
             return df.select(*keys, vs.alias("_v"), live.alias("_l"))
 
-        o = _sides(m_from, m_from["snapshot_id"] if m_from else None)
-        n = _sides(m_to, m_to["snapshot_id"])
+        o = _sides(m_from)
+        n = _sides(m_to)
         j = n.select(
             *keys, F.col("_v").alias("_nv"), F.col("_l").alias("_nl")
         ).join(
@@ -1383,16 +1391,23 @@ class ManifestTable:
         # every first load and every backfill into fresh buckets.
         merged, resolve = batch, None
         if stored_files and not mor_write:
-            target = self.read(include_tombstones=True, buckets=affected)
             # MERGE = LWW over (target ∪ batch): the stored row carries its
             # own (commit_seq, commit, op) order, so max-by-order implements
             # WHEN MATCHED AND b.ord > t.ord THEN UPDATE/DELETE, WHEN NOT
             # MATCHED THEN INSERT, and replays/out-of-order arrivals are
-            # no-ops. The union has <= 2 rows per key (one stored winner +
-            # one batch winner), so the per-key sort is constant-size.
-            # _write_snapshot resolves after routing rows by bucket.
-            merged = _conform(target, new_schema).unionByName(batch)
-            resolve = self._bucket_lww(partial_update)
+            # no-ops. The target is read raw — base files, then MOR logs in
+            # commit order — and the batch ranks last, so a stored copy
+            # wins a tie. _write_snapshot resolves base ∪ logs ∪ batch
+            # after routing rows by bucket, in its one exchange; per key
+            # that is one base row, a few log rows and one batch row.
+            target = [
+                _conform(p, new_schema)
+                for p in self._arrival_scans(parent_m, affected)
+            ]
+            merged = rank_arrivals([*target, batch])
+            resolve = self._bucket_lww(
+                len(target) if partial_update else None
+            )
         snap = self._write_snapshot(
             merged.withColumn("_bucket", self.bucket_expr()),
             affected, self.write_sort, self.target_file_rows,
@@ -1827,15 +1842,29 @@ class ManifestTable:
         ``_file_era`` parses out of every data path."""
         return f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
 
-    def _bucket_lww(self, partial_update: bool = False):
+    def _bucket_lww(self, sparse_from: int | None = None):
         """The LWW resolve a copy-on-write rewrite hands
         ``_write_snapshot``: per key within its bucket. Leading the window
         partitioning with ``_bucket`` lets the bucket routing satisfy it,
-        so Spark plans no second exchange."""
+        so Spark plans no second exchange.
+
+        ``sparse_from``: the arrival rank of a partial-update batch. Rows
+        ranked below it are stored full rows, so only the newest of them
+        per key meets the batch's sparse fill: a null in a newer log row
+        stays null instead of taking an older base row's value."""
         keys = ("_bucket", *self.key_cols)
-        if partial_update:
-            return lambda d: lww_resolve_partial(d, key_cols=keys)
-        return lambda d: lww_resolve(d, mode="window", key_cols=keys)
+        if sparse_from is None:
+            return lambda d: lww_resolve(d, key_cols=keys)
+
+        def resolve(d: DataFrame) -> DataFrame:
+            stored = F.col(ARRIVAL) < sparse_from
+            w = Window.partitionBy(*keys, stored).orderBy(*lww_order(d, keys))
+            newest = d.withColumn("_rn", F.row_number().over(w)).filter(
+                ~stored | (F.col("_rn") == 1)
+            )
+            return lww_resolve_partial(newest.drop("_rn"), key_cols=keys)
+
+        return resolve
 
     def _warn_int96(self, schema: T.StructType) -> None:
         """Warn once per table when this session writes timestamp zone
@@ -2406,9 +2435,7 @@ class ManifestTable:
             return None
         # base ∪ logs unresolved: the LWW window runs after the bucket
         # routing, so the rewrite shuffles these rows once
-        raw = self._scan(
-            m, self._files_for(m, affected) + self._log_files_for(m, affected)
-        )
+        raw = rank_arrivals(self._arrival_scans(m, affected))
         snap = self._write_snapshot(
             raw.withColumn("_bucket", self.bucket_expr()),
             affected, self.write_sort, self.target_file_rows,

@@ -102,12 +102,12 @@ def compact_changelog(
     already holds the key would never see the retraction — same rule as
     Kafka's delete.retention.ms=0).
 
-    Scale shape: one LWW reduce over the log (the engine's own salted/
-    ordkey resolver — same 10^10-event path as ingest), output ∝ live
-    keys, never ∝ history length. The compacted dir carries a
-    ``_COMPACT.json`` marker recording upto_seq so incremental readers
-    know where the tail begins (read the tail with
-    ``read_changelog_batch(since_seq=upto_seq)``).
+    Scale shape: one LWW reduce over the log (the engine's one window
+    resolver, as in ingest; an exact tie resolves on a content hash, the
+    same at any partitioning), output ∝ live keys, never ∝ history
+    length. The compacted dir carries a ``_COMPACT.json`` marker recording
+    upto_seq so incremental readers know where the tail begins (read the
+    tail with ``read_changelog_batch(since_seq=upto_seq)``).
 
     Reference analog: vuln-datasync re-fetches full dumps per sync
     (internal/fetchers/osv/fetcher.go) — compaction is what makes a
@@ -123,7 +123,7 @@ def compact_changelog(
     events = read_changelog_batch(spark, log_dir, fmt=fmt)
     if upto_seq is not None:
         events = events.filter(F.col("commit_seq") <= upto_seq)
-    winners = lww_resolve(events, mode="ordkey")
+    winners = lww_resolve(events)
     if not retain_tombstones:
         winners = winners.filter(F.col("op") != "delete")
     # deterministic layout: order by key so reruns produce stable files

@@ -4,8 +4,8 @@ Spark restatement of the reference's sync path (SURVEY.md §3.1):
 
     readStream(changelog)
       -> normalize_events (built-in exprs + Arrow pandas UDF lang-detect)
-      -> lww_resolve (window or ordkey, chosen per batch by
-         _resolve_lww_mode from session width and input size)
+      -> lww_resolve (the one window resolver; earliest arrival wins a
+         tie, so merge-on-read and copy-on-write tables agree)
       -> foreachBatch: ManifestTable.merge (epoch-tagged exactly-once commit)
       -> lineage row per micro-batch partition
 
@@ -36,46 +36,11 @@ from ..sinks.manifest_table import ManifestTable
 logger = logging.getLogger("vuln_datasync_spark.streaming")
 
 
-# ordkey-vs-window crossover (measured at 1M/4M events, 4/8/32 threads):
-# window's single full-payload sort wins while the batch is small or the
-# parallelism is low; once the cluster is wide AND the batch is large,
-# ordkey's compact-key map-side combine wins decisively (4M events at 32
-# threads: ordkey 8.9s vs window 21-67s — wide-and-big is exactly where a
-# full-payload per-key sort contends for memory, while ordkey's shuffle
-# stays ∝ #keys). A real multi-executor cluster is always "wide", so any
-# substantial batch there takes the ordkey path — the 100 TB plan.
-AUTO_ORDKEY_MIN_INPUT_BYTES = 128 * 1024 * 1024
-AUTO_ORDKEY_MIN_PARALLELISM = 16
-
-
 def _resolve_lww_mode(events: DataFrame, mode: str) -> str:
-    """mode='auto': ordkey when the session is wide (>=16 task slots) AND
-    the batch's source-file footprint is large (>=128 MB); window
-    otherwise. Footprint comes from a driver-side file listing — no scan.
-    Unknown-size inputs (no files, e.g. in-memory test frames) default to
-    window; unknown-size on a non-posix store defaults to ordkey (a store
-    we can't stat is a production store — assume big)."""
-    if mode != "auto":
-        return mode
-    try:
-        par = events.sparkSession.sparkContext.defaultParallelism
-        if par < AUTO_ORDKEY_MIN_PARALLELISM:
-            return "window"
-        from urllib.parse import unquote, urlparse
-
-        files = events.inputFiles()
-        total = 0
-        for f in files:
-            # inputFiles returns URIs (file:/x/y%20z/p.parquet) — decode
-            # before stat or local paths with special chars misroute
-            p = unquote(urlparse(f).path) if "://" in f or f.startswith("file:") else f
-            try:
-                total += os.path.getsize(p)
-            except OSError:
-                return "ordkey"  # non-posix store: assume big
-        return "ordkey" if total >= AUTO_ORDKEY_MIN_INPUT_BYTES else "window"
-    except Exception:
-        return "window"
+    """Always ``"window"``, the one resolver. Kept only because
+    perfbench's traced run imports it; the next benchmark revision drops
+    that import and this function."""
+    return "window"
 
 
 def apply_batch(
@@ -83,9 +48,6 @@ def apply_batch(
     table: ManifestTable,
     checkpoint_id: str = "adhoc",
     batch_id: int = 0,
-    lww_mode: str = "auto",
-    n_salts: int = 16,
-    broadcast_winners: bool | str = "auto",
     partial_update: bool = False,
     dlq_dir: str | None = None,
     contract_rules: list[dict] | None = None,
@@ -96,11 +58,9 @@ def apply_batch(
     The source offset range (min/max commit_seq) is captured with
     ``DataFrame.observe`` during the merge's own jobs — no extra scan.
 
-    ``lww_mode='auto'`` picks the LWW strategy from session width and
-    batch input size (ordkey when >=16 task slots AND >=128 MB of source
-    files, window otherwise — see ``_resolve_lww_mode``);
-    ``broadcast_winners='auto'`` defers the ordkey semi-join's broadcast
-    decision to AQE's runtime size measurement (see lww_resolve).
+    LWW runs through the one window resolver (``lww_resolve``); an exact
+    tie inside the batch resolves on a content hash, and against the
+    stored table the earliest arrival wins (operators/lww.py).
 
     ``partial_update``: sparse CDC events — null payload columns mean
     "unchanged" and coalesce against the stored row (and against earlier
@@ -170,7 +130,6 @@ def apply_batch(
         rejects.write.mode("overwrite").parquet(
             os.path.join(dlq_dir, f"{checkpoint_id}_{batch_id}")
         )
-    lww_mode = _resolve_lww_mode(events, lww_mode)
     obs = Observation()
     if partial_update:
         # partial semantics fill lang/sha per EVENT before the reduce
@@ -192,14 +151,7 @@ def apply_batch(
             F.min("commit_seq").alias("seq_start"),
             F.max("commit_seq").alias("seq_end"),
         )
-        winners = enrich_events(
-            lww_resolve(
-                ev,
-                mode=lww_mode,
-                n_salts=n_salts,
-                broadcast_winners=broadcast_winners,
-            )
-        )
+        winners = enrich_events(lww_resolve(ev))
 
     def seq_range():
         try:
@@ -300,9 +252,6 @@ def run_stream(
     checkpoint_dir: str,
     schema,
     max_files_per_trigger: int | None = None,
-    lww_mode: str = "auto",
-    n_salts: int = 16,
-    broadcast_winners: bool | str = "auto",
     on_batch=None,
     processing_time: str | None = None,
     await_termination: bool = True,
@@ -403,9 +352,6 @@ def run_stream(
             table,
             checkpoint_id=ckpt_id,
             batch_id=batch_id,
-            lww_mode=lww_mode,
-            n_salts=n_salts,
-            broadcast_winners=broadcast_winners,
             partial_update=partial_update,
             dlq_dir=dlq_dir,
             contract_rules=contract_rules,
