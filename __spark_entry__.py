@@ -29,7 +29,7 @@ def entry(spark: SparkSession) -> DataFrame:
         generate_changelog_pandas,
         write_changelog,
     )
-    from vuln_datasync_spark.plans.queries import ensure_shipped
+    from vuln_datasync_spark.session import ensure_shipped
     from vuln_datasync_spark.sinks import ManifestTable
     from vuln_datasync_spark.streaming import apply_batch
 

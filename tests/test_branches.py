@@ -1,18 +1,18 @@
-"""Branches (movable refs, write-audit-publish) and orphan-file vacuum.
+"""Snapshot expiry, orphan-file vacuum and key-zone pruned lookups.
 
-WAP pattern (Iceberg branch + fast_forward analog; reference analog: the
-sync loop's staged-write-then-commit job flow,
-/root/reference/internal/jobs/server.go:544-588): stage a risky ingest on
-a branch, audit it with ordinary reads, publish by fast-forwarding main.
+Maintenance that keeps a table's files proportional to its live state
+(Iceberg ``expire_snapshots`` / ``remove_orphan_files`` analogs), and a
+point lookup that opens only the files whose key zone covers the probe.
 """
 
+import json
 import os
+import shutil
 import time
 
-import pytest
 from pyspark.sql import types as T
 
-from vuln_datasync_spark.sinks.manifest_table import CommitConflict, ManifestTable
+from vuln_datasync_spark.sinks.manifest_table import ManifestTable
 from vuln_datasync_spark.streaming.pipeline import apply_batch
 
 CHANGELOG_SCHEMA = T.StructType(
@@ -41,91 +41,6 @@ def _apply(spark, table, rows, bid, ckpt="br"):
     return apply_batch(
         spark.createDataFrame(rows, CHANGELOG_SCHEMA), table, ckpt, bid
     )
-
-
-def test_wap_write_audit_publish(spark, tmp_path):
-    table = ManifestTable.create(spark, str(tmp_path / "t"), n_buckets=2)
-    _apply(spark, table, _rows(range(1, 4)), 0)
-    main_sid = table.current_snapshot_id()
-
-    table.create_branch("audit")
-    br = table.for_branch("audit")
-    _apply(spark, br, _rows(range(11, 16)), 1)
-
-    # write: branch advanced, main untouched
-    assert br.current_snapshot_id() != main_sid
-    assert table.current_snapshot_id() == main_sid
-    # audit: branch readable by name from the MAIN handle
-    assert table.read("audit").count() == 8
-    assert table.read().count() == 3
-    # publish: fast-forward main
-    head = table.publish("audit")
-    assert table.current_snapshot_id() == head
-    assert table.read().count() == 8
-    # exactly-once carries across publish: replaying the branch batch on
-    # MAIN is a no-op (epoch inherited through the manifest chain)
-    assert _apply(spark, table, _rows(range(11, 16)), 1) is None
-
-
-def test_publish_conflict_when_main_advances(spark, tmp_path):
-    table = ManifestTable.create(spark, str(tmp_path / "t"), n_buckets=2)
-    _apply(spark, table, _rows(range(1, 4)), 0)
-    table.create_branch("wap")
-    br = table.for_branch("wap")
-    _apply(spark, br, _rows(range(11, 14)), 1)
-    # main advances past the fork point
-    _apply(spark, table, _rows(range(21, 23)), 2)
-    with pytest.raises(CommitConflict, match="fork point"):
-        table.publish("wap")
-    # rebase: re-branch from the new main, replay (exactly-once on the new
-    # chain — epochs differ per chain, so the batch applies), publish
-    table.drop_branch("wap")
-    table.create_branch("wap")
-    br2 = table.for_branch("wap")
-    assert _apply(spark, br2, _rows(range(11, 14)), 1) is not None
-    table.publish("wap")
-    assert table.read().count() == 8
-
-
-def test_branch_commit_isolation_and_concurrency(spark, tmp_path):
-    table = ManifestTable.create(spark, str(tmp_path / "t"), n_buckets=2)
-    _apply(spark, table, _rows(range(1, 4)), 0)
-    table.create_branch("b1")
-    table.create_branch("b2")
-    b1 = table.for_branch("b1")
-    b2 = table.for_branch("b2")
-    _apply(spark, b1, _rows(range(11, 14), repo="ra"), 1)
-    _apply(spark, b2, _rows(range(21, 26), repo="rb"), 1)
-    assert table.read("b1").count() == 6
-    assert table.read("b2").count() == 8
-    assert table.read().count() == 3
-    # same epoch key committed independently per branch (separate chains)
-    assert _apply(spark, b1, _rows(range(11, 14), repo="ra"), 1) is None
-
-
-def test_expiry_pins_branch_head_not_intermediates(spark, tmp_path):
-    table = ManifestTable.create(
-        spark, str(tmp_path / "t"), n_buckets=2
-    )
-    _apply(spark, table, _rows(range(1, 4)), 0)
-    table.create_branch("keepme")
-    br = table.for_branch("keepme")
-    _apply(spark, br, _rows(range(11, 14)), 1)
-    mid = br.current_snapshot_id()
-    _apply(spark, br, _rows(range(21, 24)), 2)
-    head = br.current_snapshot_id()
-    # advance main so the branch head is off the kept main chain
-    for i in range(3, 7):
-        _apply(spark, table, _rows(range(100 * i, 100 * i + 2)), i)
-
-    table.expire_snapshots(keep=2)
-    mdir = tmp_path / "t" / "_manifests"
-    assert (mdir / f"{head}.json").exists()
-    assert not (mdir / f"{mid}.json").exists()  # intermediate swept
-    assert table.read("keepme").count() == 9  # head still fully readable
-    table.drop_branch("keepme")
-    table.expire_snapshots(keep=2)
-    assert not (mdir / f"{head}.json").exists()
 
 
 def test_remove_orphan_files(spark, tmp_path):
@@ -162,51 +77,9 @@ def test_remove_orphan_files(spark, tmp_path):
     assert table.remove_orphan_files(older_than_seconds=3600)["removed"] == []
 
 
-def test_stream_into_branch_then_publish(spark, tmp_path):
-    import pandas as pd
-
-    from vuln_datasync_spark.streaming.pipeline import run_stream
-
-    log = tmp_path / "log"
-    log.mkdir()
-    pd.DataFrame(
-        {
-            "commit_seq": [1, 2, 3],
-            "op": ["insert"] * 3,
-            "repo": ["r0"] * 3,
-            "path": ["a.py", "b.py", "c.py"],
-            "commit": ["c1", "c2", "c3"],
-            "lang": ["py"] * 3,
-            "content": ["v1", "v2", "v3"],
-            "ts": pd.to_datetime(["2026-01-01"] * 3),
-            "size_bytes": [1, 2, 3],
-        }
-    ).to_parquet(log / "b0.parquet", coerce_timestamps="us")
-    troot = str(tmp_path / "t")
-    table = ManifestTable.create(spark, troot, n_buckets=2)
-    _apply(spark, table, _rows(range(100, 102)), 0)
-    schema = (
-        "commit_seq long, op string, repo string, path string, commit "
-        "string, lang string, content string, ts timestamp, size_bytes long"
-    )
-    run_stream(
-        spark,
-        str(log),
-        troot,
-        str(tmp_path / "ckpt"),
-        schema,
-        branch="staged",
-    )
-    assert table.read().count() == 2  # main untouched by the stream
-    assert table.read("staged").count() == 5
-    table.publish("staged")
-    assert table.read().count() == 5
-
-
 def test_expire_snapshots_older_than(spark, tmp_path):
-    import time
-
-    table = ManifestTable.create(spark, str(tmp_path / "t"), n_buckets=2)
+    root = str(tmp_path / "t")
+    table = ManifestTable.create(spark, root, n_buckets=2)
     _apply(spark, table, _rows(range(1, 3)), 0)
     _apply(spark, table, _rows(range(11, 13)), 1)
     time.sleep(0.05)
@@ -214,39 +87,36 @@ def test_expire_snapshots_older_than(spark, tmp_path):
     time.sleep(0.05)
     _apply(spark, table, _rows(range(21, 23)), 2)
     _apply(spark, table, _rows(range(31, 33)), 3)
+    # plant a crash between manifest write and pointer swap: a manifest
+    # that names the head as parent, and its data file, but that no
+    # pointer ever linked into the chain
+    head = table.manifest()
+    dead = f"{int(time.time() * 1000):013d}-deadbeef"
+    dead_rel = os.path.join("data", f"snap-{dead}", "bucket=0", "part-0.parquet")
+    os.makedirs(os.path.dirname(os.path.join(root, dead_rel)))
+    shutil.copy(
+        os.path.join(root, table._referenced(head)[0]),
+        os.path.join(root, dead_rel),
+    )
+    dead_manifest = os.path.join(root, "_manifests", f"{dead}.json")
+    with open(dead_manifest, "w") as f:
+        json.dump(
+            {**head, "snapshot_id": dead, "parent": head["snapshot_id"],
+             "files": {"0": [dead_rel]}},
+            f,
+        )
     # keep=1 + older_than=cut: the two pre-cut snapshots go, both
     # post-cut snapshots stay even though keep alone would drop one
     table.expire_snapshots(keep=1, older_than=int(cut))
     kept = [m["snapshot_id"] for m in table.snapshots()]
     assert len(kept) == 2
     assert all(int(s.split("-", 1)[0]) > cut for s in kept)
+    # the never-linked manifest and its file are swept
+    assert not os.path.exists(dead_manifest)
+    assert not os.path.exists(os.path.join(root, dead_rel))
+    assert table.current_snapshot_id() == head["snapshot_id"]
     assert table.read().count() == 8  # state intact
-
-
-def test_cli_branch_publish_vacuum(spark, tmp_path, capsys, monkeypatch):
-    import json
-
-    from vuln_datasync_spark import cli
-
-    monkeypatch.setattr(cli, "_spark", lambda args: spark)
-    table = ManifestTable.create(spark, str(tmp_path / "t"), n_buckets=2)
-    _apply(spark, table, _rows(range(1, 4)), 0)
-    t = str(tmp_path / "t")
-
-    assert cli.main(["branch", "--table", t, "stage"]) == 0
-    out = json.loads(capsys.readouterr().out)
-    assert out["branch"] == "stage"
-    br = table.for_branch("stage")
-    _apply(spark, br, _rows(range(11, 14)), 1)
-    assert cli.main(["branch", "--table", t, "--list"]) == 0
-    assert "stage" in json.loads(capsys.readouterr().out)
-    assert cli.main(["branch", "--table", t, "--publish", "stage"]) == 0
-    assert json.loads(capsys.readouterr().out)["published"] == "stage"
-    assert table.read().count() == 6
-    assert cli.main(["branch", "--table", t, "--drop", "stage"]) == 0
-    capsys.readouterr()
-    assert cli.main(["vacuum", "--table", t, "--older-than", "0"]) == 0
-    assert "removed" in json.loads(capsys.readouterr().out)
+    assert table.verify_table(check_rows=True)["ok"]
 
 
 def test_lookup_prunes_files_by_key_zone(spark, tmp_path):

@@ -2,6 +2,8 @@
 snapshots (Iceberg changelog-scan / Delta CDF analog), incl. bucket
 pruning: untouched buckets must not be scanned."""
 
+import json
+
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -140,6 +142,14 @@ def test_change_feed_schema_evolution_and_errors(spark, tmp_path):
 
     with pytest.raises(ValueError, match="unknown base"):
         table.read_changes("nope", s2)
+    # a manifest that logs a column rename or drop (older versions wrote
+    # them) is refused instead of read with that column as null
+    mp = tmp_path / "t" / "_manifests" / f"{s2}.json"
+    m = json.loads(mp.read_text())
+    m["schema_log"] = [{"op": "drop", "col": "branch", "at": 0}]
+    mp.write_text(json.dumps(m))
+    with pytest.raises(ValueError, match="renamed or dropped"):
+        table.read()
 
 
 def test_consume_changes_cursor_and_resume(spark, tmp_path):

@@ -56,6 +56,20 @@ def test_lookup_exact_rows_and_empty(spark, tmp_path):
     assert table.lookup([]).count() == 0
     with pytest.raises(ValueError, match="key must have"):
         table.lookup(["just-one-value"])
+    # an unknown snapshot id fails loudly instead of reading as empty
+    bad = "no-such-snap"
+    for call in (
+        lambda: table.read(bad),
+        lambda: table.lookup([("r0", "f0.py")], snapshot_id=bad),
+        lambda: table.count_rows(bad),
+        lambda: table.prune_report({"commit_seq": (0, None)}, snapshot_id=bad),
+    ):
+        with pytest.raises(ValueError, match="unknown snapshot 'no-such-snap'"):
+            call()
+    # the head of an empty table still reads as empty
+    empty = ManifestTable.create(spark, str(tmp_path / "e"), n_buckets=2)
+    assert empty.read().count() == 0
+    assert empty.count_rows() == 0
 
 
 def test_lookup_prunes_files(spark, tmp_path):
@@ -165,4 +179,8 @@ def test_cli_rollback(spark, tmp_path, capsys, monkeypatch):
     )
     out = json.loads(capsys.readouterr().out.strip())
     assert out["rolled_back_to"] == s_good
+    assert _state(ManifestTable(spark, str(tmp_path / "t"))) == good
+    # vacuum keeps every file some manifest references
+    assert cli.main(["vacuum", "--table", str(tmp_path / "t"), "--older-than", "0"]) == 0
+    assert json.loads(capsys.readouterr().out)["removed"] == []
     assert _state(ManifestTable(spark, str(tmp_path / "t"))) == good

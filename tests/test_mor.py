@@ -249,16 +249,6 @@ def test_mor_rollback_restores_log_state(spark, tmp_path):
     assert _state(mor) == state2
 
 
-def test_mor_clone_copies_log_files(spark, tmp_path):
-    _, mor = _twin_tables(spark, tmp_path)
-    clone = mor.clone_to(str(tmp_path / "clone"))
-    assert _state(clone) == _state(mor)
-    # exactly-once carries over: replaying an applied epoch is a no-op
-    before = clone.current_snapshot_id()
-    _batch(spark, clone, BATCHES[2], 2)
-    assert clone.current_snapshot_id() == before
-
-
 def test_mor_snapshot_expiry_keeps_live_log_files(spark, tmp_path):
     _, mor = _twin_tables(spark, tmp_path)
     state = _state(mor)

@@ -55,8 +55,6 @@ def cmd_replay(args) -> int:
             spark, args.table, n_buckets=args.buckets,
             merge_mode=args.merge_mode,
         )
-    if args.branch:
-        table = table.for_branch(args.branch)
     events = read_changelog_batch(
         spark, args.changelog, fmt=args.format, since_seq=args.since_seq
     )
@@ -451,11 +449,6 @@ def cmd_scan(args) -> int:
             )
         )
         return 0
-    snap = args.snapshot
-    if args.as_of:
-        snap = table.snapshot_as_of(args.as_of)
-        if snap is None:
-            raise SystemExit(f"no snapshot at or before {args.as_of!r}")
     eq = None
     if getattr(args, "eq", None):
         eq = {}
@@ -465,7 +458,7 @@ def cmd_scan(args) -> int:
                 raise SystemExit(f"--eq expects COL=VALUE, got {spec!r}")
             eq[col] = val
     df = table.read(
-        snapshot_id=snap, range_filters=rf or None, eq_filters=eq
+        snapshot_id=args.snapshot, range_filters=rf or None, eq_filters=eq
     )
     if args.limit:
         df = df.limit(args.limit)
@@ -508,67 +501,6 @@ def cmd_maintain(args) -> int:
         keep_snapshots=args.keep_snapshots,
     )
     print(json.dumps(rep))
-    return 0
-
-
-def cmd_tag(args) -> int:
-    """Named snapshot refs (dataset versioning): create, list, drop."""
-    from .sinks.manifest_table import ManifestTable
-
-    spark = _spark(args)
-    table = ManifestTable(spark, args.table)
-    if args.list:
-        print(json.dumps(table.refs()["tags"]))
-    elif args.drop:
-        table.drop_tag(args.drop)
-        print(json.dumps({"dropped": args.drop}))
-    else:
-        if not args.name:
-            raise SystemExit("tag wants a NAME (or --list / --drop NAME)")
-        sid = table.tag(args.name, snapshot_id=args.snapshot)
-        print(json.dumps({"tag": args.name, "snapshot_id": sid}))
-    return 0
-
-
-def cmd_branch(args) -> int:
-    """Movable refs (write-audit-publish): create, list, drop, publish."""
-    from .sinks.manifest_table import ManifestTable
-
-    spark = _spark(args)
-    table = ManifestTable(spark, args.table)
-    if args.list:
-        print(json.dumps(table.refs()["branches"]))
-    elif args.drop:
-        table.drop_branch(args.drop)
-        print(json.dumps({"dropped": args.drop}))
-    elif args.publish:
-        head = table.publish(args.publish)
-        print(json.dumps({"published": args.publish, "snapshot_id": head}))
-    else:
-        if not args.name:
-            raise SystemExit(
-                "branch wants a NAME (or --list / --drop NAME / --publish NAME)"
-            )
-        sid = table.create_branch(args.name, snapshot_id=args.snapshot)
-        print(json.dumps({"branch": args.name, "snapshot_id": sid}))
-    return 0
-
-
-def cmd_alter(args) -> int:
-    """Metadata-only schema evolution: rename / drop a column."""
-    from .sinks.manifest_table import ManifestTable
-
-    spark = _spark(args)
-    table = ManifestTable(spark, args.table)
-    if args.rename:
-        old, new = args.rename
-        sid = table.rename_column(old, new)
-        print(json.dumps({"renamed": [old, new], "snapshot_id": sid}))
-    elif args.drop_col:
-        sid = table.drop_column(args.drop_col)
-        print(json.dumps({"dropped": args.drop_col, "snapshot_id": sid}))
-    else:
-        raise SystemExit("alter wants --rename OLD NEW or --drop-col NAME")
     return 0
 
 
@@ -687,25 +619,6 @@ def cmd_cluster(args) -> int:
         ),
     )
     print(json.dumps({"snapshot_id": sid}))
-    return 0
-
-
-def cmd_clone(args) -> int:
-    """Deep clone at a snapshot (backup / dataset shipping / DR).
-    Copy cost proportional to the LIVE snapshot, never history."""
-    from .sinks.manifest_table import ManifestTable
-
-    spark = _spark(args)
-    table = ManifestTable(spark, args.table)
-    clone = table.clone_to(
-        args.dest,
-        snapshot_id=args.snapshot,
-        include_lineage=not args.no_lineage,
-    )
-    print(json.dumps({
-        "dest": args.dest,
-        "snapshot_id": clone.current_snapshot_id(),
-    }))
     return 0
 
 
@@ -848,9 +761,6 @@ def build_parser() -> argparse.ArgumentParser:
                    help="table write mode when CREATING the table: cow "
                    "rewrites touched buckets; mor appends per-bucket log "
                    "files (compact with `compact --logs`)")
-    r.add_argument(
-        "--branch", help="commit to this branch ref instead of main (WAP)"
-    )
     r.set_defaults(fn=cmd_replay)
 
     s = sub.add_parser("stream", help="tail the changelog (exactly-once)")
@@ -1046,7 +956,6 @@ def build_parser() -> argparse.ArgumentParser:
         help="inclusive range; leave a side empty for unbounded",
     )
     sc.add_argument("--snapshot")
-    sc.add_argument("--as-of", help="time travel: ISO timestamp (UTC)")
     sc.add_argument("--limit", type=int, default=0)
     sc.add_argument(
         "--report", action="store_true", help="print the prune decision only"
@@ -1084,27 +993,6 @@ def build_parser() -> argparse.ArgumentParser:
     mn.add_argument("--keep-snapshots", type=int, default=3)
     mn.set_defaults(fn=cmd_maintain)
 
-    tg = sub.add_parser("tag", help="named snapshot refs (pin a dataset)")
-    tg.add_argument("--table", required=True)
-    tg.add_argument("name", nargs="?", help="tag name to create")
-    tg.add_argument("--snapshot", help="snapshot to pin (default: current)")
-    tg.add_argument("--list", action="store_true")
-    tg.add_argument("--drop", metavar="NAME")
-    tg.set_defaults(fn=cmd_tag)
-
-    br = sub.add_parser(
-        "branch", help="movable refs (write-audit-publish staging)"
-    )
-    br.add_argument("--table", required=True)
-    br.add_argument("name", nargs="?", help="branch name to create")
-    br.add_argument("--snapshot", help="fork point (default: current)")
-    br.add_argument("--list", action="store_true")
-    br.add_argument("--drop", metavar="NAME")
-    br.add_argument(
-        "--publish", metavar="NAME", help="fast-forward main to NAME's head"
-    )
-    br.set_defaults(fn=cmd_branch)
-
     dq = sub.add_parser(
         "validate", help="data-contract checks with a violation report"
     )
@@ -1128,14 +1016,6 @@ def build_parser() -> argparse.ArgumentParser:
         help="grace period seconds (never touch younger files)",
     )
     vc.set_defaults(fn=cmd_vacuum)
-
-    al = sub.add_parser(
-        "alter", help="metadata-only column rename / drop"
-    )
-    al.add_argument("--table", required=True)
-    al.add_argument("--rename", nargs=2, metavar=("OLD", "NEW"))
-    al.add_argument("--drop-col", metavar="NAME")
-    al.set_defaults(fn=cmd_alter)
 
     dw = sub.add_parser(
         "delete-where", help="predicate delete as CDC tombstones"
@@ -1208,16 +1088,6 @@ def build_parser() -> argparse.ArgumentParser:
     cl.add_argument("--target-file-rows", type=int)
     cl.add_argument("--buckets", help="comma-separated bucket subset")
     cl.set_defaults(fn=cmd_cluster)
-
-    cn = sub.add_parser(
-        "clone", help="deep-clone the table at a snapshot (backup/DR)"
-    )
-    cn.add_argument("--table", required=True)
-    cn.add_argument("--dest", required=True)
-    cn.add_argument("--snapshot", default=None,
-                    help="snapshot id, tag, or branch (default: current)")
-    cn.add_argument("--no-lineage", action="store_true")
-    cn.set_defaults(fn=cmd_clone)
 
     cl = sub.add_parser(
         "compact-log", help="compact a changelog to winning events per key"

@@ -25,6 +25,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.normalize import summary_truncate
+from ..session import ensure_shipped
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -49,38 +50,6 @@ def _fan(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < par:
         return df.repartition(par)
     return df
-
-
-def ensure_shipped(spark: SparkSession) -> None:
-    """Ship this package to executors via addPyFile (idempotent per
-    session). Python workers import pickled-by-reference module functions
-    (pandas UDFs, applyInPandasWithState) and do NOT inherit the driver's
-    sys.path — without this, UDF-bearing queries fail with
-    ModuleNotFoundError whenever the driver's cwd isn't the repo root.
-    Equivalent to spark-submit --py-files."""
-    sc = spark.sparkContext
-    if getattr(sc, "_vds_pkg_shipped", False):
-        return
-    import os
-    import tempfile
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    root = os.path.dirname(pkg_dir)
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"vds_pkg_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as zf:
-            for dirpath, _dirs, files in os.walk(pkg_dir):
-                if "__pycache__" in dirpath:
-                    continue
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(dirpath, f)
-                        zf.write(full, os.path.relpath(full, root))
-    sc.addPyFile(zpath)
-    sc._vds_pkg_shipped = True
 
 
 @dataclass

@@ -51,6 +51,37 @@ def set_job_pool(spark: SparkSession, pool: str) -> None:
     )
 
 
+def ensure_shipped(spark: SparkSession) -> None:
+    """Ship this package to executors via addPyFile (idempotent per
+    session). Python workers import pickled-by-reference module functions
+    (pandas UDFs, applyInPandasWithState) and do NOT inherit the driver's
+    sys.path — without this, UDF-bearing jobs fail with
+    ModuleNotFoundError whenever the driver's cwd isn't the repo root.
+    Equivalent to spark-submit --py-files."""
+    sc = spark.sparkContext
+    if getattr(sc, "_vds_pkg_shipped", False):
+        return
+    import tempfile
+    import zipfile
+
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    root = os.path.dirname(pkg_dir)
+    zpath = os.path.join(
+        tempfile.gettempdir(), f"vds_pkg_{os.getpid()}.zip"
+    )
+    if not os.path.exists(zpath):
+        with zipfile.ZipFile(zpath, "w") as zf:
+            for dirpath, _dirs, files in os.walk(pkg_dir):
+                if "__pycache__" in dirpath:
+                    continue
+                for f in files:
+                    if f.endswith(".py"):
+                        full = os.path.join(dirpath, f)
+                        zf.write(full, os.path.relpath(full, root))
+    sc.addPyFile(zpath)
+    sc._vds_pkg_shipped = True
+
+
 def _default_heap() -> str:
     """Driver heap when SPARK_GRAFT_DRIVER_MEM is unset: a quarter of
     physical RAM, at least 1g and at most 16g. The heap is pre-touched

@@ -7,7 +7,7 @@ commit ids, alias strings) overlaps every file's [min, max]. A Bloom
 filter per (file, column) answers "definitely absent" and lets
 ``ManifestTable.read(eq_filters=...)`` skip the file entirely — the
 Iceberg puffin-blob / Parquet bloom analog, but engine-controlled so it
-also guards the schema-log and multi-file read paths. Reference analog:
+also guards the multi-file read paths. Reference analog:
 the unique index probed by GetVulnerabilityByAlias
 (/root/reference/migrations/001_initial_schema.up.sql:52,
 /root/reference/sql/vulnerabilities.sql:16-21).
@@ -147,11 +147,7 @@ def build_bloom(
     }
     spark = table.spark
     files = [os.path.join(table.root, rel) for rel in todo_rels]
-    slog = m_manifest.get("schema_log") or []
-    if slog:
-        df = table._read_with_schema_log(files, schema, slog)
-    else:
-        df = spark.read.schema(schema).parquet(*files)
+    df = table._scan(m_manifest, files)
 
     root_abs = os.path.abspath(table.root)
     rel_expr = F.regexp_replace(

@@ -32,8 +32,8 @@ commit semantics the engine would get from ``MERGE INTO`` on Iceberg
   additive migration /root/reference/migrations/002_fix_nullable_summary
   .up.sql:1-6).
 
-One commit protocol serves every writer (merge, no-op epochs, ALTER,
-rollback and the maintenance rewrites). ``_write_snapshot`` writes the
+One commit protocol serves every writer (merge, no-op epochs, rollback
+and the maintenance rewrites). ``_write_snapshot`` writes the
 rewritten buckets under ``data/snap-<sid>/bucket=<b>/`` in one exchange:
 rows are routed to write tasks by bucket, and a copy-on-write rewrite
 resolves LWW in the stage after that exchange, so target ∪ batch is
@@ -41,8 +41,8 @@ shuffled once. The new files' stats come from their parquet footers on
 the driver, with no Spark job. ``_commit_snapshot`` builds the next
 manifest from a base (the parent; the target for ``rollback``): the
 caller names the keys it changes, and every other key — files, MOR logs,
-stats, schema, schema log, applied epochs, bucket count — carries forward
-unchanged, so each manifest is complete as written. It then swaps the
+stats, schema, applied epochs, bucket count — carries forward unchanged,
+so each manifest is complete as written. It then swaps the ``_current``
 pointer against the expected parent. A commit that loses the race removes
 its own ``data/snap-<sid>/`` before re-raising ``CommitConflict``, so a
 failed attempt leaves no orphan files; only ``merge`` retries, the other
@@ -182,9 +182,6 @@ class ManifestTable:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        # None = commits move the main ``_current`` pointer; a branch name
-        # (set via for_branch) = commits move that branch ref instead
-        self.branch: str | None = None
         meta = self._read_json(os.path.join(root, "_table.json"))
         if meta is None:
             raise FileNotFoundError(f"no ManifestTable at {root} (use .create)")
@@ -307,12 +304,6 @@ class ManifestTable:
         ]
 
     def current_snapshot_id(self) -> str | None:
-        if self.branch is not None:
-            return self.refs()["branches"].get(self.branch)
-        return self._main_head()
-
-    def _main_head(self) -> str | None:
-        """The main ``_current`` pointer, whatever branch this handle is on."""
         try:
             with open(os.path.join(self.root, "_current")) as f:
                 return f.read().strip() or None
@@ -323,11 +314,15 @@ class ManifestTable:
         sid = snapshot_id or self.current_snapshot_id()
         if sid is None:
             return None
-        refs = self.refs()
-        # tag / branch names resolve anywhere a sid goes (tags win on a
-        # name collision — they are immutable, so the resolution is stable)
-        sid = refs["tags"].get(sid) or refs["branches"].get(sid) or sid
         return self._read_json(self._manifest_path(sid))
+
+    def _manifest_at(self, snapshot_id: str | None) -> dict | None:
+        """``manifest(snapshot_id)`` for a read: None only for the head of
+        an empty table; an explicit id with no manifest raises."""
+        m = self.manifest(snapshot_id)
+        if m is None and snapshot_id is not None:
+            raise ValueError(f"unknown snapshot {snapshot_id!r}")
+        return m
 
     @staticmethod
     def _to_millis(ts) -> int:
@@ -342,128 +337,6 @@ class ManifestTable:
             return int(ts.timestamp() * 1000)
         return int(ts)
 
-    def snapshot_as_of(self, ts) -> str | None:
-        """Latest snapshot committed at or before ``ts`` (time travel by
-        timestamp, Iceberg ``FOR SYSTEM_TIME AS OF`` analog). Snapshot
-        ids embed their commit epoch-millis, so this is a metadata walk —
-        no I/O beyond the manifest chain. ``ts``: datetime (naive = UTC),
-        ISO string, or epoch millis. Returns None if the table has no
-        snapshot that old."""
-        millis = self._to_millis(ts)
-        best = None
-        for m in self.snapshots():  # oldest -> newest
-            if int(m["snapshot_id"].split("-", 1)[0]) <= millis:
-                best = m["snapshot_id"]
-        return best
-
-    # ---------- refs (named snapshots) ----------
-
-    def refs(self) -> dict:
-        r = self._read_json(os.path.join(self.root, "_refs.json"))
-        r = r if r else {"tags": {}}
-        r.setdefault("tags", {})
-        r.setdefault("branches", {})
-        return r
-
-    def _write_refs(self, refs: dict) -> None:
-        self._atomic_write(os.path.join(self.root, "_refs.json"), json.dumps(refs))
-
-    def tag(self, name: str, snapshot_id: str | None = None) -> str:
-        """Pin a named, immutable ref to a snapshot (Iceberg tag analog).
-        Dataset versioning for training runs: ``tag("corpus-v3")`` freezes
-        the exact file set a run trained on; ``read("corpus-v3")``,
-        ``read_changes("corpus-v2", "corpus-v3")`` and
-        ``rollback("corpus-v3")`` all resolve the name, and
-        ``expire_snapshots`` never drops a tagged snapshot's manifest or
-        data files. Pure metadata — no data movement at any scale."""
-        sid = snapshot_id or self.current_snapshot_id()
-        if sid is None:
-            raise ValueError("no snapshot to tag")
-        refs = self.refs()
-        sid = refs["tags"].get(sid, sid)
-        if self._read_json(self._manifest_path(sid)) is None:
-            raise ValueError(f"unknown snapshot {sid!r}")
-        refs["tags"][name] = sid
-        self._write_refs(refs)
-        return sid
-
-    def drop_tag(self, name: str) -> None:
-        refs = self.refs()
-        if name in refs["tags"]:
-            del refs["tags"][name]
-            self._write_refs(refs)
-
-    # ---------- branches (movable refs / write-audit-publish) ----------
-
-    def create_branch(self, name: str, snapshot_id: str | None = None) -> str | None:
-        """Create a movable ref (Iceberg branch analog) rooted at
-        ``snapshot_id`` (default: main's current snapshot; may be None on
-        an empty table — the branch then starts from scratch). Commits via
-        ``for_branch(name)`` advance the branch head; main's ``_current``
-        never moves until ``publish``. This is the WAP (write-audit-
-        publish) pattern: stage a risky ingest on a branch, audit it with
-        ordinary reads (``read(name)``), then fast-forward main — pure
-        metadata, no data movement at any scale."""
-        refs = self.refs()
-        if name in refs["branches"]:
-            raise ValueError(f"branch {name!r} already exists")
-        sid = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
-        if sid is not None:
-            sid = refs["tags"].get(sid, sid)
-            if self._read_json(self._manifest_path(sid)) is None:
-                raise ValueError(f"unknown snapshot {sid!r}")
-        refs["branches"][name] = sid
-        self._write_refs(refs)
-        return sid
-
-    def drop_branch(self, name: str) -> None:
-        refs = self.refs()
-        if name in refs["branches"]:
-            del refs["branches"][name]
-            self._write_refs(refs)
-
-    def for_branch(self, name: str) -> "ManifestTable":
-        """A handle whose reads and commits target branch ``name`` (its
-        head must exist in ``refs()``). The returned handle shares the
-        session; only the commit pointer differs — merge/apply_batch/
-        delete_where/maintain all work unchanged on it."""
-        import copy
-
-        if name not in self.refs()["branches"]:
-            raise ValueError(f"unknown branch {name!r} (create_branch first)")
-        h = copy.copy(self)
-        h.branch = name
-        h._sync_layout(h.manifest())
-        return h
-
-    def publish(self, name: str) -> str:
-        """Fast-forward main to branch ``name``'s head (Iceberg
-        ``fast_forward`` / WAP publish). Requires main's current snapshot
-        to be an ancestor of (or equal to) the branch head — i.e. nothing
-        was committed to main since the branch forked; otherwise raises
-        CommitConflict (rebase by re-branching from the new main and
-        replaying, exactly-once keys make the replay safe). Atomic pointer
-        swap; the branch ref survives (drop it separately)."""
-        head = self.refs()["branches"].get(name)
-        if head is None:
-            raise ValueError(f"branch {name!r} missing or empty")
-        cur = self._main_head()
-        if cur is not None:
-            # ancestor walk over the branch head's parent chain
-            m = self._read_json(self._manifest_path(head))
-            chain = set()
-            while m is not None:
-                chain.add(m["snapshot_id"])
-                p = m.get("parent")
-                m = self._read_json(self._manifest_path(p)) if p else None
-            if cur not in chain:
-                raise CommitConflict(
-                    f"main advanced past branch {name!r}'s fork point "
-                    f"(current {cur} not an ancestor of head {head})"
-                )
-        self._atomic_write(os.path.join(self.root, "_current"), head)
-        return head
-
     def snapshots(self) -> list[dict]:
         out = []
         m = self.manifest()
@@ -476,16 +349,6 @@ class ManifestTable:
         m = self.manifest()
         return T.StructType.fromJson(m["schema"]) if m else None
 
-    # ---------- schema evolution beyond add/widen: rename & drop ----------
-    #
-    # Iceberg handles rename/drop with field IDs; plain parquet has only
-    # names, so the manifest records a `schema_log` of (at_millis, op)
-    # entries and `read()` resolves each file's PHYSICAL column names from
-    # its write era (the snap-dir's embedded millis). Metadata-only: no
-    # data file is rewritten; old files stay readable through the mapping
-    # forever, and a column re-added after a drop never resurrects ghost
-    # values from pre-drop files. At 100 TB an ALTER is one JSON commit.
-
     def _protected_cols(self):
         return set(self.key_cols) | set(LWW_ORDER_COLS) | {
             "is_deleted",
@@ -493,161 +356,24 @@ class ManifestTable:
             "content_sha256",
         }
 
-    @staticmethod
-    def _file_era(rel_path: str) -> int:
-        m = re.search(r"snap-(\d{13})-", rel_path)
-        return int(m.group(1)) if m else 0
-
-    def _alter_commit(self, new_schema_json, log_entry, file_meta):
-        parent = self.current_snapshot_id()
-        parent_m = self.manifest(parent)
-        sid = self._new_snapshot_id()
-        self._commit_snapshot(
-            parent_m, parent, sid, f"alter:{sid}",
-            lineage=self._lineage(sid, f"alter:{log_entry['op']}"),
-            schema=new_schema_json,
-            file_meta=file_meta,
-            schema_log=list(parent_m.get("schema_log", []))
-            + [{**log_entry, "at": int(sid.split("-", 1)[0])}],
-        )
-        return sid
-
-    def rename_column(self, old: str, new: str) -> str:
-        """ALTER TABLE RENAME COLUMN as a metadata-only commit. Existing
-        data files keep the old physical name; reads map them through the
-        schema log. Key / order / invariant columns are immutable."""
-        if old in self._protected_cols() or new in self._protected_cols():
-            raise ValueError(f"column {old!r} -> {new!r} is protected")
-        m = self.manifest()
-        if m is None:
-            raise ValueError("empty table")
-        schema = T.StructType.fromJson(m["schema"])
-        names = [f.name for f in schema.fields]
-        if old not in names:
-            raise ValueError(f"no column {old!r}")
-        if new in names:
-            raise ValueError(f"column {new!r} already exists")
-        new_schema = T.StructType(
-            [
-                T.StructField(new if f.name == old else f.name, f.dataType, f.nullable)
-                for f in schema.fields
-            ]
-        )
-        # zone-map keys follow the rename (values are unchanged by it),
-        # so range_filters on the NEW name keep pruning old files
-        fm = {
-            rel: {
-                **meta,
-                "cols": {
-                    (new if c == old else c): v
-                    for c, v in meta.get("cols", {}).items()
-                },
-            }
-            for rel, meta in m.get("file_meta", {}).items()
-        }
-        return self._alter_commit(
-            new_schema.jsonValue(),
-            {"op": "rename", "from": old, "to": new},
-            fm,
-        )
-
-    def drop_column(self, name: str) -> str:
-        """ALTER TABLE DROP COLUMN, metadata-only. A later column-add with
-        the same name starts from null everywhere — pre-drop files never
-        leak their old values back (the Iceberg field-id guarantee,
-        enforced here via the schema log's era check)."""
-        if name in self._protected_cols():
-            raise ValueError(f"column {name!r} is protected")
-        m = self.manifest()
-        if m is None:
-            raise ValueError("empty table")
-        schema = T.StructType.fromJson(m["schema"])
-        if name not in [f.name for f in schema.fields]:
-            raise ValueError(f"no column {name!r}")
-        new_schema = T.StructType(
-            [f for f in schema.fields if f.name != name]
-        )
-        fm = {
-            rel: {
-                **meta,
-                "cols": {
-                    c: v
-                    for c, v in meta.get("cols", {}).items()
-                    if c != name
-                },
-            }
-            for rel, meta in m.get("file_meta", {}).items()
-        }
-        return self._alter_commit(
-            new_schema.jsonValue(), {"op": "drop", "col": name}, fm
-        )
-
-    def _read_with_schema_log(
-        self, files: list[str], schema: T.StructType, slog: list[dict]
-    ) -> DataFrame:
-        """Read files whose physical column names may predate renames/
-        drops: group by write era, derive each group's physical schema by
-        walking the log backwards, read, and align to the target schema.
-        Group count <= len(schema_log)+1 — each group is still a plain
-        pushdown-friendly parquet scan."""
-        from collections import defaultdict
-
-        root_abs = os.path.abspath(self.root)
-        groups: dict[tuple, list] = defaultdict(list)
-        for f_ in files:
-            era = self._file_era(os.path.relpath(f_, root_abs))
-            key = tuple(
-                i for i, e in enumerate(slog) if e["at"] > era
-            )
-            groups[key].append(f_)
-        parts = []
-        for key, fs in groups.items():
-            # target name -> ("phys", physical_name) | ("null",)
-            mapping = {f.name: ("phys", f.name) for f in schema.fields}
-            for i in sorted(key, reverse=True):  # newest alter first
-                e = slog[i]
-                if e["op"] == "rename":
-                    for t, v in mapping.items():
-                        if v[0] == "phys" and v[1] == e["to"]:
-                            mapping[t] = ("phys", e["from"])
-                else:  # drop: pre-drop physical values are ghosts
-                    for t, v in mapping.items():
-                        if v[0] == "phys" and v[1] == e["col"]:
-                            mapping[t] = ("null",)
-            phys = T.StructType(
-                [
-                    T.StructField(mapping[f.name][1], f.dataType, True)
-                    for f in schema.fields
-                    if mapping[f.name][0] == "phys"
-                ]
-            )
-            pdf = self.spark.read.schema(phys).parquet(*fs)
-            sel = [
-                F.col(mapping[f.name][1]).alias(f.name)
-                if mapping[f.name][0] == "phys"
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
-            parts.append(pdf.select(*sel))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
     def _scan(self, m: dict, files: list[str]) -> DataFrame:
-        """Plain scan of ``files`` under manifest ``m``'s schema, renames
-        and drops applied through its schema log; no LWW resolution."""
+        """Plain scan of ``files`` under manifest ``m``'s schema; no LWW
+        resolution. A column name names one parquet column, so a manifest
+        that logs column renames or drops (written by an older version)
+        is refused rather than read with those columns as null."""
+        if m.get("schema_log"):
+            raise ValueError(
+                f"{self.root}: snapshot {m['snapshot_id']} has renamed or "
+                "dropped columns (schema_log), which this version cannot "
+                "read"
+            )
         schema = T.StructType.fromJson(m["schema"])
-        slog = m.get("schema_log") or []
-        if slog:
-            return self._read_with_schema_log(files, schema, slog)
         return self.spark.read.schema(schema).parquet(*files)
 
     def _arrival_scans(
         self,
         m: dict,
         buckets: list[int] | None,
-        via: dict | None = None,
         prune=None,
     ) -> list[DataFrame]:
         """Scans of ``buckets`` (all when None) under manifest ``m``, one
@@ -655,8 +381,7 @@ class ManifestTable:
         bucket's MOR logs by their position in the manifest's per-bucket
         list, which is commit order. ``rank_arrivals`` of them is what
         every base ∪ logs resolve reads, so the earliest copy of a tie
-        wins. Files are read under ``via``'s schema and schema log
-        (default ``m``); ``prune`` (files -> files) filters each rank."""
+        wins. ``prune`` (files -> files) filters each rank."""
         groups = [self._files_for(m, buckets)]
         for b, ps in (m.get("logs") or {}).items():
             if buckets is None or int(b) in buckets:
@@ -666,7 +391,7 @@ class ManifestTable:
                     groups[i].append(os.path.join(self.root, p))
         if prune is not None:
             groups = [prune(fs) for fs in groups]
-        return [self._scan(via or m, fs) for fs in groups if fs]
+        return [self._scan(m, fs) for fs in groups if fs]
 
     # ---------- expressions ----------
 
@@ -738,7 +463,7 @@ class ManifestTable:
         """Which files a ``read(range_filters=...)`` would open: returns
         ``{"kept": [...], "skipped": [...]}`` (manifest-relative paths).
         Pure manifest-JSON work — no file I/O, no Spark job."""
-        m = self.manifest(snapshot_id)
+        m = self._manifest_at(snapshot_id)
         if m is None:
             return {"kept": [], "skipped": []}
         enc = self._enc_filters(range_filters)
@@ -800,7 +525,7 @@ class ManifestTable:
         predicates are safe because every version of a key shares its key
         values. Non-key predicates still apply row-level after
         resolution, and log-free buckets keep full pruning."""
-        m = self.manifest(snapshot_id)
+        m = self._manifest_at(snapshot_id)
         schema = T.StructType.fromJson(m["schema"]) if m else None
         if eq_filters:
             range_filters = dict(range_filters or {})
@@ -920,7 +645,7 @@ class ManifestTable:
         point lookups read at most k buckets' files, never the table.
         The bucket computation is one driver-local job over len(keys)
         literal rows (no scan)."""
-        m = self.manifest(snapshot_id)
+        m = self._manifest_at(snapshot_id)
         if m is None or not key_values:
             return self.read(snapshot_id).limit(0)
         rows = [
@@ -976,7 +701,7 @@ class ManifestTable:
         The bucket layout (modulus) also reverts if a ``rebucket``
         happened in between; the next merge's ``_sync_layout`` picks it
         up. Returns the new snapshot id."""
-        target = self.manifest(snapshot_id)  # resolves tag / branch names
+        target = self.manifest(snapshot_id)
         if target is None:
             raise ValueError(f"unknown snapshot {snapshot_id!r}")
         snapshot_id = target["snapshot_id"]
@@ -984,7 +709,7 @@ class ManifestTable:
         if parent == snapshot_id:
             return parent
         sid = self._new_snapshot_id()
-        # the TARGET is the base: its file set, logs, stats, schema log and
+        # the TARGET is the base: its file set, logs, stats, schema and
         # applied epochs all come back; only the parent link is current
         manifest = self._commit_snapshot(
             target, parent, sid, f"rollback:{snapshot_id}:{sid}",
@@ -992,70 +717,6 @@ class ManifestTable:
         )
         self.n_buckets = manifest["n_buckets"]
         return sid
-
-    def clone_to(
-        self,
-        dest_root: str,
-        snapshot_id: str | None = None,
-        include_lineage: bool = True,
-    ) -> "ManifestTable":
-        """Deep clone at a snapshot (tag/branch names resolve): backup,
-        dataset shipping, or DR promotion.
-
-        Copies the snapshot's data files (relative paths preserved — the
-        snap-dir millis embedded in them keep schema-era resolution and
-        zone maps valid) plus a single root manifest whose ``parent`` is
-        cut (the clone's history starts here) but whose
-        ``applied_epochs`` carry over — so a promoted clone resumes the
-        SOURCE's changelog stream exactly-once: re-delivery of an
-        already-applied epoch is a no-op on the clone too (tested).
-        Source tags/branches/feed-cursors/sidecars are NOT copied (a
-        Bloom sidecar is rebuilt by ``maintain()``; absent sidecars read
-        conservatively). Copy cost ∝ LIVE snapshot size, never history:
-        expired/overwritten files are unreachable from the manifest. The
-        per-file copy loop is driver-side here; on object storage it
-        would be issued as parallel server-side copies — the file LIST
-        is already exactly right (manifest-driven, no directory walk).
-        """
-        m = self.manifest(snapshot_id)
-        if m is None:
-            raise ValueError(f"no snapshot to clone at {snapshot_id!r}")
-        if os.path.exists(os.path.join(dest_root, "_table.json")):
-            raise ValueError(f"destination already a table: {dest_root}")
-        os.makedirs(os.path.join(dest_root, "_manifests"), exist_ok=True)
-        os.makedirs(os.path.join(dest_root, "data"), exist_ok=True)
-        self._write_layout(dest_root, m.get("n_buckets", self.n_buckets))
-        rels = self._referenced(m)
-        for rel in rels:
-            dst = os.path.join(dest_root, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.copy2(os.path.join(self.root, rel), dst)
-        root_m = dict(m)
-        root_m["parent"] = None
-        root_m["lineage"] = {
-            **(m.get("lineage") or {}),
-            "checkpoint_id": f"clone:{self.root}:{m['snapshot_id']}",
-        }
-        self._atomic_write(
-            os.path.join(dest_root, "_manifests", f"{m['snapshot_id']}.json"),
-            json.dumps(root_m),
-        )
-        self._atomic_write(os.path.join(dest_root, "_current"), m["snapshot_id"])
-        if include_lineage and os.path.isdir(
-            os.path.join(self.root, "_lineage")
-        ):
-            shutil.copytree(
-                os.path.join(self.root, "_lineage"),
-                os.path.join(dest_root, "_lineage"),
-            )
-        logger.info(
-            "cloned %s@%s -> %s (%d files)",
-            self.root,
-            m["snapshot_id"],
-            dest_root,
-            len(rels),
-        )
-        return ManifestTable(self.spark, dest_root)
 
     def read_changes(
         self,
@@ -1132,11 +793,7 @@ class ManifestTable:
             return self.spark.createDataFrame([], T.StructType(out_fields))
 
         def _sides(m):
-            # read BOTH sides through the TARGET's schema and schema log
-            # so a rename between the snapshots is not reported as every
-            # row changing: the base side's files resolve their physical
-            # names by era, then align to the target schema
-            parts = self._arrival_scans(m, buckets, via=m_to) if m else []
+            parts = self._arrival_scans(m, buckets) if m else []
             if not parts:
                 df = self.spark.createDataFrame([], schema)
             elif self._logged_buckets(m, buckets):
@@ -1146,6 +803,8 @@ class ManifestTable:
                 df = lww_resolve(rank_arrivals(parts), key_cols=tuple(keys))
             else:
                 df = rank_arrivals(parts)
+            # the base side may predate a column add or widening
+            df = _conform(df, schema)
             live = (
                 ~F.coalesce(F.col("is_deleted"), F.lit(False))
                 if "is_deleted" in df.columns
@@ -1838,8 +1497,8 @@ class ManifestTable:
 
     @staticmethod
     def _new_snapshot_id() -> str:
-        """``<millis:013d>-<uuid8>``; the millis prefix is the write era
-        ``_file_era`` parses out of every data path."""
+        """``<millis:013d>-<uuid8>``; the millis prefix is the commit
+        time ``expire_snapshots(older_than=)`` compares against."""
         return f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
 
     def _bucket_lww(self, sparse_from: int | None = None):
@@ -2010,7 +1669,7 @@ class ManifestTable:
         The manifest starts from ``base`` (the parent's manifest; the
         target's for ``rollback``; None for a first commit) and applies
         ``changes`` — any of files, logs, bucket_meta, file_meta, schema,
-        schema_log, applied_epochs, n_buckets; every key not named
+        applied_epochs, n_buckets; every key not named
         carries forward. On ``CommitConflict`` this attempt's
         ``data/snap-<sid>/`` is removed before re-raising (its files are
         unreachable from any manifest). ``lineage``, when given, is
@@ -2027,7 +1686,6 @@ class ManifestTable:
             "logs": dict(b.get("logs") or {}),
             "bucket_meta": dict(b.get("bucket_meta", {})),
             "file_meta": dict(b.get("file_meta", {})),
-            "schema_log": list(b.get("schema_log", [])),
             "lineage": lineage,
         }
         manifest.update(changes)
@@ -2048,16 +1706,6 @@ class ManifestTable:
             raise CommitConflict("concurrent commit detected (parent moved)")
         sid = manifest["snapshot_id"]
         self._atomic_write(self._manifest_path(sid), json.dumps(manifest))
-        if self.branch is not None:
-            # branch commit: move the branch ref, never `_current`
-            refs = self.refs()
-            if refs["branches"].get(self.branch) != expected_parent:
-                raise CommitConflict(
-                    f"concurrent commit on branch {self.branch!r}"
-                )
-            refs["branches"][self.branch] = sid
-            self._write_refs(refs)  # atomic (tmp + replace)
-            return
         # atomic pointer swap
         self._atomic_write(os.path.join(self.root, "_current"), sid)
 
@@ -2591,8 +2239,7 @@ class ManifestTable:
           overlapping sort-column ranges (fresh clustered files are
           disjoint by construction, so overlap = interleaving = lost
           pruning power);
-        * snapshot expiry (tag-pinned snapshots survive) and lineage /
-          export sidecar compaction.
+        * snapshot expiry and lineage / export sidecar compaction.
 
         Returns a report of what ran and why. Reference analog: the
         scheduled cleanup job, /root/reference/internal/jobs/
@@ -2696,7 +2343,8 @@ class ManifestTable:
                 bcols = [
                     r["col"]
                     for r in side.select("col").distinct().collect()
-                    if r["col"] in cur_cols  # survive a later drop_column
+                    # a rollback past a column add drops it from the schema
+                    if r["col"] in cur_cols
                 ]
                 if bcols:
                     report["bloom"] = build_bloom(self, sorted(bcols))
@@ -2730,29 +2378,15 @@ class ManifestTable:
                 if m["snapshot_id"] in seen
                 or m["snapshot_id"] in {x["snapshot_id"] for x in newer}
             ]
-        keep_m = list(chain_keep)
-        # tagged snapshots and branch heads are pinned: their manifest and
-        # data files survive expiry until the tag/branch is dropped
-        r = self.refs()
-        pinned = set(r["tags"].values()) | {
-            h for h in r["branches"].values() if h
-        }
-        for sid in pinned:
-            tm = self._read_json(self._manifest_path(sid))
-            if tm is not None and sid not in {
-                m["snapshot_id"] for m in keep_m
-            }:
-                keep_m = [tm] + keep_m
-        live = {p for m in keep_m for p in self._referenced(m)}
-        keep_ids = {m["snapshot_id"] for m in keep_m}
-        # sweep EVERY manifest in the dir, not just the main chain:
-        # branch intermediates and crashed-commit orphan manifests go too
-        # (their files would otherwise dangle after the file sweep below)
+        live = {p for m in chain_keep for p in self._referenced(m)}
+        keep_ids = {m["snapshot_id"] for m in chain_keep}
+        # sweep EVERY manifest in the dir, not just the chain: a manifest
+        # a crashed commit wrote but never linked goes too (its files
+        # would otherwise dangle after the file sweep below)
         for mp in glob.glob(os.path.join(self.root, "_manifests", "*.json")):
             if os.path.basename(mp)[:-5] not in keep_ids:
                 os.remove(mp)
-        # re-root the chain (the oldest kept CHAIN member, never a merely
-        # tag-pinned manifest — a tag must not rewrite history linkage)
+        # re-root the chain at its oldest kept member
         if chain_keep:
             chain_keep[0]["parent"] = None
             self._atomic_write(
@@ -2777,7 +2411,7 @@ class ManifestTable:
         Buckets failing those conditions fall back to ONE pruned scan of
         just themselves. At 100 TB the common case — a compacted table —
         is pure JSON arithmetic on the driver."""
-        m = self.manifest(snapshot_id)
+        m = self._manifest_at(snapshot_id)
         if m is None:
             return 0
         fm = m.get("file_meta", {})

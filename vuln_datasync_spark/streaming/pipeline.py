@@ -258,7 +258,6 @@ def run_stream(
     graceful_stop: bool = False,
     partial_update: bool = False,
     dlq_dir: str | None = None,
-    branch: str | None = None,
     contract_rules: list[dict] | None = None,
     contract_mode: str = "reject",
     pool: str | None = None,
@@ -297,12 +296,6 @@ def run_stream(
         table = ManifestTable(spark, table_root)
     else:
         table = ManifestTable.create(spark, table_root)
-    if branch is not None:
-        # stream into a branch (WAP for streams): micro-batches advance
-        # the branch ref; audit + publish when the tail looks right
-        if branch not in table.refs()["branches"]:
-            table.create_branch(branch)
-        table = table.for_branch(branch)
     ckpt_id = checkpoint_identity(checkpoint_dir)
 
     if envelope_format not in (None, "debezium", "maxwell"):
