@@ -32,14 +32,6 @@ def test_cli_replay_stats_export(spark, tmp_path, capsys, monkeypatch):
     stats = json.loads(capsys.readouterr().out.strip())
     assert stats["rows"] > 0 and stats["batches_applied"] == 1
 
-    out = str(tmp_path / "exp")
-    assert cli.main(
-        ["export", "--table", tbl, "--out", out, "--format", "json"]
-    ) == 0
-    rec = json.loads(capsys.readouterr().out.strip())
-    assert rec["rows"] == stats["rows"] - stats["tombstones"]
-    assert spark.read.json(out).count() == rec["rows"]
-
 
 def test_cli_synth_and_stream(spark, tmp_path, capsys, monkeypatch):
     monkeypatch.setattr(cli, "_spark", lambda args: spark)
@@ -83,32 +75,6 @@ def test_expire_tombstones_and_snapshots(spark, tmp_path):
     assert len(t.snapshots()) == 1
     assert {r["repo"] for r in t.read().collect()} == {"r2"}  # data survives
     assert n_before > 1
-
-
-def test_fair_scheduler_pools(tmp_path):
-    """2.10 queue priorities: FAIR pools mirror the reference's Asynq
-    queue weights 6/3/1 (/root/reference/internal/jobs/server.go:65-70)."""
-    from vuln_datasync_spark.session import (
-        POOL_WEIGHTS,
-        _write_fair_scheduler_xml,
-        get_spark,
-        set_job_pool,
-    )
-
-    assert POOL_WEIGHTS == {"full": 6, "incremental": 3, "export": 1}
-    xml = open(_write_fair_scheduler_xml()).read()
-    for name, w in POOL_WEIGHTS.items():
-        assert f'<pool name="{name}">' in xml
-        assert f"<weight>{w}</weight>" in xml
-
-    spark = get_spark("vds-tests", master="local[4]", shuffle_partitions=8)
-    set_job_pool(spark, "incremental")
-    assert (
-        spark.sparkContext.getLocalProperty("spark.scheduler.pool")
-        == "incremental"
-    )
-    set_job_pool(spark, "")
-    assert spark.sparkContext.getLocalProperty("spark.scheduler.pool") is None
 
 
 def test_rebucket_scales_bucket_count(spark, tmp_path):

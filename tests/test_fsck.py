@@ -1,9 +1,11 @@
-"""count_rows (metadata-only COUNT) and verify_table (integrity fsck)."""
+"""count_rows (metadata-only COUNT), verify_table (integrity fsck) and
+the dangling-head check."""
 
 import json
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from vuln_datasync_spark import cli
@@ -108,6 +110,29 @@ def test_verify_table_broken_chain_and_rollback_epochs(spark, tmp_path):
     )
     rep = t.verify_table()
     assert not rep["ok"] and rep["broken_chain"]
+
+
+def test_dangling_head_fails_loudly(spark, tmp_path):
+    """A ``_current`` that names a missing manifest (an expire_snapshots
+    racing a commit leaves one) is not an empty table: reads and merge
+    raise instead of serving or committing 0 rows, and verify_table
+    reports the head id in broken_chain."""
+    t = _loaded_table(spark, tmp_path)
+    head = t.current_snapshot_id()
+    os.remove(os.path.join(t.root, "_manifests", f"{head}.json"))
+    with pytest.raises(ValueError, match="no manifest"):
+        t.read()
+    batch = spark.createDataFrame(
+        [(99999, "insert", "r", "p.py", "c", "py", "x", None, None)],
+        CHANGELOG_SCHEMA,
+    )
+    with pytest.raises(ValueError, match="no manifest"):
+        apply_batch(batch, t, "fsck", 99)
+    assert t.current_snapshot_id() == head
+    rep = t.verify_table()
+    assert not rep["ok"] and rep["broken_chain"] == [head]
+    with pytest.raises(ValueError, match="unknown snapshot"):
+        t.verify_table("no-such-snap")
 
 
 def test_cli_fsck_and_fast_stats(spark, tmp_path, capsys, monkeypatch):

@@ -144,30 +144,3 @@ def test_install_graceful_stop_saves_and_restores_handlers():
         assert signal.getsignal(signal.SIGTERM) is host_handler
     finally:
         signal.signal(signal.SIGTERM, old)
-
-
-def test_run_stream_routes_batches_to_scheduler_pool(spark, tmp_path):
-    """run_stream(pool=...) must assert the FAIR pool on the micro-batch
-    thread (Spark resolves pools from a thread-local property, and
-    foreachBatch runs on the stream execution thread, not the caller's)."""
-    ev = generate_changelog_pandas(500, seed=33)
-    log_dir = tmp_path / "log"
-    write_changelog(ev, str(log_dir), n_files=2)
-    seen = []
-
-    def on_batch(bid, lineage):
-        seen.append(
-            spark.sparkContext.getLocalProperty("spark.scheduler.pool")
-        )
-
-    table = run_stream(
-        spark,
-        str(log_dir),
-        str(tmp_path / "table"),
-        str(tmp_path / "ckpt"),
-        CHANGELOG_SCHEMA,
-        on_batch=on_batch,
-        pool="incremental",
-    )
-    assert seen and all(p == "incremental" for p in seen)
-    assert_state_matches(table, ev)

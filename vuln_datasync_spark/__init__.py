@@ -20,7 +20,7 @@ Layout:
     operators/  LWW resolve, quality rules, dedup, similarity, corpus,
                 analytics and multimodal operators
     pipelines/  corpus prep, index and aggregate sync over the same sink
-    sinks/      ManifestTable keyed MERGE sink, Bloom/Z-order layout, exports
+    sinks/      ManifestTable keyed MERGE sink, Z-order layout, bucketed saves
     sources/    changelog batch/stream sources, Debezium/Maxwell envelopes
     streaming/  apply_batch / run_stream pipeline + lineage, windows, joins
     plans/      query catalog (Spark impl + DuckDB oracle SQL pairs)

@@ -17,7 +17,6 @@ Subcommands:
   stream   tail the changelog with Structured Streaming (availableNow or
            processingTime trigger), exactly-once, resumable
   corpus-stream  training-corpus ingest with incremental dedup gating
-  export   snapshot export to json/csv (optionally gzip)
   stats    table + lineage summary (reference /api/v1/stats analog)
   compact  expire old snapshots and drop aged tombstones
   synth    generate a deterministic synthetic changelog (testing)
@@ -87,27 +86,6 @@ def cmd_stream(args) -> int:
     return 0
 
 
-def cmd_export(args) -> int:
-    from .sinks.export import export_incremental, export_table
-    from .sinks.manifest_table import ManifestTable
-
-    spark = _spark(args)
-    table = ManifestTable(spark, args.table)
-    if args.incremental:
-        if args.snapshot:
-            raise SystemExit("--incremental and --snapshot are exclusive")
-        rec = export_incremental(
-            table, args.out, fmt=args.format, compression=args.compress
-        )
-    else:
-        rec = export_table(
-            table, args.out, fmt=args.format, compression=args.compress,
-            snapshot_id=args.snapshot,
-        )
-    print(json.dumps(rec))
-    return 0
-
-
 def cmd_rollback(args) -> int:
     """Restore the table to a prior snapshot (metadata-only; see
     ManifestTable.rollback — epochs after the target re-open for replay)."""
@@ -174,17 +152,6 @@ def cmd_stats(args) -> int:
     out["snapshots"] = len(table.snapshots())
     lineage = table.read_lineage()
     out["batches_applied"] = lineage.select("checkpoint_id", "batch_id").distinct().count()
-    exports = table.read_exports()
-    out["exports"] = exports.count()
-    if out["exports"]:
-        last = exports.orderBy(F.desc("exported_at"), F.desc("export_id")).first()
-        out["last_export"] = {
-            "export_id": last["export_id"],
-            "format": last["format"],
-            "rows": last["rows"],
-            "snapshot_id": last["snapshot_id"],
-            "exported_at": last["exported_at"],
-        }
     print(json.dumps(out, default=str))
     return 0
 
@@ -206,9 +173,6 @@ def cmd_compact(args) -> int:
     if args.expire_lineage_before:
         out["lineage_expire"] = table.expire_lineage(args.expire_lineage_before)
     out["lineage_compact"] = table.compact_lineage(
-        max_files=args.lineage_max_files
-    )
-    out["exports_compact"] = table.compact_exports(
         max_files=args.lineage_max_files
     )
     print(json.dumps(out))
@@ -449,17 +413,7 @@ def cmd_scan(args) -> int:
             )
         )
         return 0
-    eq = None
-    if getattr(args, "eq", None):
-        eq = {}
-        for spec in args.eq:
-            col, _, val = spec.partition("=")
-            if not _:
-                raise SystemExit(f"--eq expects COL=VALUE, got {spec!r}")
-            eq[col] = val
-    df = table.read(
-        snapshot_id=args.snapshot, range_filters=rf or None, eq_filters=eq
-    )
+    df = table.read(snapshot_id=args.snapshot, range_filters=rf or None)
     if args.limit:
         df = df.limit(args.limit)
     for line in df.toJSON().toLocalIterator():
@@ -467,24 +421,9 @@ def cmd_scan(args) -> int:
     return 0
 
 
-def cmd_bloom(args) -> int:
-    """Build (delta-only) or compact the per-file Bloom sidecar."""
-    from .sinks.bloom import build_bloom, compact_bloom
-    from .sinks.manifest_table import ManifestTable
-
-    spark = _spark(args)
-    table = ManifestTable(spark, args.table)
-    cols = [c.strip() for c in args.cols.split(",") if c.strip()]
-    rep = build_bloom(table, cols, bits_per_key=args.bits_per_key)
-    if args.compact:
-        rep["compact"] = compact_bloom(table)
-    print(json.dumps(rep))
-    return 0
-
-
 def cmd_maintain(args) -> int:
     """One stat-driven maintenance pass: tombstone expiry, zone-decay
-    re-clustering, snapshot expiry, sidecar compaction — decisions from
+    re-clustering, snapshot expiry, lineage compaction — decisions from
     manifest JSON only."""
     from .sinks.manifest_table import ManifestTable
 
@@ -781,18 +720,6 @@ def build_parser() -> argparse.ArgumentParser:
                    "subdirs, idempotent overwrite per replay)")
     s.set_defaults(fn=cmd_stream)
 
-    e = sub.add_parser("export", help="snapshot export")
-    e.add_argument("--table", required=True)
-    e.add_argument("--out", required=True)
-    e.add_argument("--format", default="json", choices=["json", "csv"])
-    e.add_argument("--compress", action="store_true")
-    e.add_argument("--snapshot", default=None)
-    e.add_argument("--incremental", action="store_true",
-                   help="export only the change feed since the last "
-                   "recorded export (falls back to full when no prior "
-                   "export or its base snapshot expired)")
-    e.set_defaults(fn=cmd_export)
-
     ch = sub.add_parser(
         "changes", help="row-level change feed between two snapshots"
     )
@@ -960,28 +887,7 @@ def build_parser() -> argparse.ArgumentParser:
     sc.add_argument(
         "--report", action="store_true", help="print the prune decision only"
     )
-    sc.add_argument(
-        "--eq",
-        action="append",
-        default=[],
-        metavar="COL=VALUE",
-        help="equality probe (string compare): zone-map + Bloom-sidecar "
-        "file skipping when `bloom` has covered the files",
-    )
     sc.set_defaults(fn=cmd_scan)
-
-    bl = sub.add_parser(
-        "bloom",
-        help="build/compact the per-file Bloom sidecar for eq-probe "
-        "file skipping",
-    )
-    bl.add_argument("--table", required=True)
-    bl.add_argument(
-        "--cols", required=True, help="comma-separated string/int columns"
-    )
-    bl.add_argument("--bits-per-key", type=int, default=10)
-    bl.add_argument("--compact", action="store_true")
-    bl.set_defaults(fn=cmd_bloom)
 
     mn = sub.add_parser(
         "maintain", help="stat-driven maintenance pass (table doctor)"

@@ -13,44 +13,6 @@ import os
 from pyspark.sql import SparkSession
 
 
-# job-queue weights mirroring the reference's Asynq queue priorities
-# full:6, incremental:3, export:1 (/root/reference/internal/jobs/
-# server.go:65-70) — as Spark FAIR scheduler pools
-POOL_WEIGHTS = {"full": 6, "incremental": 3, "export": 1}
-
-_FAIR_XML = """<?xml version="1.0"?>
-<allocations>
-{pools}
-</allocations>
-"""
-
-
-def _write_fair_scheduler_xml() -> str:
-    import tempfile
-
-    pools = "\n".join(
-        f'  <pool name="{name}">\n    <schedulingMode>FAIR</schedulingMode>\n'
-        f"    <weight>{w}</weight>\n    <minShare>0</minShare>\n  </pool>"
-        for name, w in POOL_WEIGHTS.items()
-    )
-    path = os.path.join(
-        tempfile.gettempdir(), f"vds_fairscheduler_{os.getpid()}.xml"
-    )
-    if not os.path.exists(path):
-        with open(path, "w") as f:
-            f.write(_FAIR_XML.format(pools=pools))
-    return path
-
-
-def set_job_pool(spark: SparkSession, pool: str) -> None:
-    """Route subsequently submitted jobs in this thread to a weighted FAIR
-    pool (full > incremental > export — the reference's queue priorities).
-    Call with pool=None-equivalent '' to reset to default."""
-    spark.sparkContext.setLocalProperty(
-        "spark.scheduler.pool", pool if pool else None
-    )
-
-
 def ensure_shipped(spark: SparkSession) -> None:
     """Ship this package to executors via addPyFile (idempotent per
     session). Python workers import pickled-by-reference module functions
@@ -97,7 +59,6 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    fair_pools: bool = False,
 ) -> SparkSession:
     """Build (or get) a SparkSession with engine defaults.
 
@@ -181,9 +142,6 @@ def get_spark(
     }
     if local_dir:
         conf["spark.local.dir"] = local_dir
-    if fair_pools:
-        conf["spark.scheduler.mode"] = "FAIR"
-        conf["spark.scheduler.allocation.file"] = _write_fair_scheduler_xml()
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

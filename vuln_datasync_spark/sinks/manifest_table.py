@@ -105,11 +105,6 @@ LINEAGE_DDL = (
     "snapshot_id string, checkpoint_id string, batch_id long, bucket long, "
     "seq_start long, seq_end long, rows_applied long, committed_at string"
 )
-EXPORT_DDL = (
-    "export_id string, format string, compression boolean, rows long, "
-    "file_bytes long, snapshot_id string, path string, status string, "
-    "exported_at string, mode string, base_snapshot_id string"
-)
 META_COLS = ("is_deleted",)
 
 # type-widening lattice (Iceberg-compatible promotions)
@@ -316,11 +311,30 @@ class ManifestTable:
             return None
         return self._read_json(self._manifest_path(sid))
 
+    def _head(self) -> tuple[str | None, dict | None]:
+        """``(snapshot id, manifest)`` of the head; ``(None, None)`` for an
+        empty table. A ``_current`` that names a missing manifest is read
+        once more (a commit and an ``expire_snapshots`` may have run since
+        the first read); if it still does, ``ValueError``: the head is
+        dangling, and reading or merging it as an empty table would lose
+        every row and applied epoch."""
+        for _ in range(2):
+            sid = self.current_snapshot_id()
+            if sid is None:
+                return None, None
+            m = self.manifest(sid)
+            if m is not None:
+                return sid, m
+        raise ValueError(f"{self.root}: head snapshot {sid!r} has no manifest")
+
     def _manifest_at(self, snapshot_id: str | None) -> dict | None:
         """``manifest(snapshot_id)`` for a read: None only for the head of
-        an empty table; an explicit id with no manifest raises."""
+        an empty table; an explicit id with no manifest, or a dangling
+        head, raises."""
+        if snapshot_id is None:
+            return self._head()[1]
         m = self.manifest(snapshot_id)
-        if m is None and snapshot_id is not None:
+        if m is None:
             raise ValueError(f"unknown snapshot {snapshot_id!r}")
         return m
 
@@ -490,7 +504,6 @@ class ManifestTable:
         include_tombstones: bool = False,
         buckets: list[int] | None = None,
         range_filters: dict | None = None,
-        eq_filters: dict | None = None,
     ) -> DataFrame:
         """Snapshot read. Missing columns in old files come back as null
         (explicit manifest schema -> parquet clipping = free column-add).
@@ -507,83 +520,50 @@ class ManifestTable:
         time-scoped read (e.g. "commits since seq N") opens only the
         files whose zone overlaps — I/O ∝ matching data, not table size;
         parquet row-group pruning then resumes inside each kept file.
-
-        ``eq_filters={col: value}`` adds equality predicates that prune
-        through BOTH stats layers: the zone maps (as a degenerate
-        [v, v] range) and, when :func:`sinks.bloom.build_bloom` has
-        covered the files, the per-file Bloom sidecar — the path that
-        skips files for high-cardinality probes (content hashes, alias
-        strings) whose per-file min/max spans everything. Files without
-        Bloom coverage are conservatively kept.
+        An equality probe is the point range ``(v, v)``.
 
         Merge-on-read tables: buckets with outstanding log files are
         resolved per key (base ∪ logs, same LWW total order the COW merge
         uses) before any tombstone filtering. File-level pruning inside a
-        logged bucket uses KEY-column predicates only — a non-key zone /
-        Bloom skip could drop the file holding a key's winner while
-        keeping a stale in-range version, silently resurrecting it; key
-        predicates are safe because every version of a key shares its key
-        values. Non-key predicates still apply row-level after
-        resolution, and log-free buckets keep full pruning."""
+        logged bucket uses KEY-column predicates only — a non-key zone
+        skip could drop the file holding a key's winner while keeping a
+        stale in-range version, silently resurrecting it; key predicates
+        are safe because every version of a key shares its key values.
+        Non-key predicates still apply row-level after resolution, and
+        log-free buckets keep full pruning."""
         m = self._manifest_at(snapshot_id)
         schema = T.StructType.fromJson(m["schema"]) if m else None
-        if eq_filters:
-            range_filters = dict(range_filters or {})
-            for c, v in eq_filters.items():
-                # zone-map pruning as a point range (unless the caller
-                # already ranges this column)
-                if v is not None and c not in range_filters:
-                    range_filters[c] = (v, v)
         logged = self._logged_buckets(m, buckets) if m else []
 
-        def _prune(files, rf, eq_cols):
-            """Zone-map + Bloom file skipping, restricted to ``rf`` /
-            ``eq_cols`` (the caller scopes these to key columns for
-            logged buckets)."""
-            if rf and files:
-                enc = self._enc_filters(rf)
-                fm = m.get("file_meta", {})
-                root_abs = os.path.abspath(self.root)
-                files = [
-                    f_
-                    for f_ in files
-                    if self._file_overlaps(
-                        fm.get(os.path.relpath(f_, root_abs)), enc
-                    )
-                ]
-            if eq_filters and files:
-                from .bloom import bloom_excluded_rels
+        def _prune(files, rf):
+            """Zone-map file skipping by the range filters ``rf`` (the
+            caller scopes these to key columns for logged buckets)."""
+            if not (rf and files):
+                return files
+            enc = self._enc_filters(rf)
+            fm = m.get("file_meta", {})
+            root_abs = os.path.abspath(self.root)
+            return [
+                f_
+                for f_ in files
+                if self._file_overlaps(
+                    fm.get(os.path.relpath(f_, root_abs)), enc
+                )
+            ]
 
-                root_abs = os.path.abspath(self.root)
-                for c, v in eq_filters.items():
-                    if c not in eq_cols:
-                        continue
-                    excl = bloom_excluded_rels(self, c, v)
-                    if excl:
-                        files = [
-                            f_
-                            for f_ in files
-                            if os.path.relpath(f_, root_abs) not in excl
-                        ]
-                    if not files:
-                        break
-            return files
-
-        all_cols = set((range_filters or {})) | set((eq_filters or {}))
         base_files = (
             self._files_for(m, buckets, exclude=set(logged)) if m else []
         )
-        base_files = _prune(base_files, range_filters or {}, all_cols)
+        base_files = _prune(base_files, range_filters)
         log_side: list[DataFrame] = []
         if logged:
-            key_set = set(self.key_cols)
             rf_key = {
                 c: v
                 for c, v in (range_filters or {}).items()
-                if c in key_set
+                if c in self.key_cols
             }
             log_side = self._arrival_scans(
-                m, logged, prune=lambda fs: _prune(fs, rf_key, key_set)
+                m, logged, prune=lambda fs: _prune(fs, rf_key)
             )
 
         parts = []
@@ -619,11 +599,6 @@ class ManifestTable:
                     df = df.filter(F.col(c) >= F.lit(lo))
                 if hi is not None:
                     df = df.filter(F.col(c) <= F.lit(hi))
-        if eq_filters:
-            for c, v in eq_filters.items():
-                df = df.filter(
-                    F.col(c).isNull() if v is None else F.col(c) == F.lit(v)
-                )
         return df
 
     def lookup(self, key_values, snapshot_id: str | None = None) -> DataFrame:
@@ -751,7 +726,7 @@ class ManifestTable:
         (column-add/widen safe); a value change is detected via
         null-safe struct equality on the target schema's value columns.
         """
-        m_to = self.manifest(to_snapshot_id)
+        m_to = self._manifest_at(to_snapshot_id)
         if m_to is None:
             raise ValueError("read_changes: target snapshot does not exist")
         m_from = (
@@ -919,8 +894,7 @@ class ManifestTable:
         use_mor = (self.merge_mode == "mor") if mor is None else bool(mor)
         if partial_update:
             use_mor = False
-        parent = self.current_snapshot_id()
-        parent_m = self.manifest(parent) if parent else None
+        parent, parent_m = self._head()
         self._sync_layout(parent_m)
         epoch_key = f"{checkpoint_id}:{batch_id}"
         applied = set(parent_m["applied_epochs"]) if parent_m else set()
@@ -967,8 +941,7 @@ class ManifestTable:
                         "against the new current snapshot",
                         epoch_key, attempt, max_commit_retries,
                     )
-                    parent = self.current_snapshot_id()
-                    parent_m = self.manifest(parent) if parent else None
+                    parent, parent_m = self._head()
                     n0 = self.n_buckets
                     self._sync_layout(parent_m)
                     applied = (
@@ -1763,39 +1736,18 @@ class ManifestTable:
         consumers (stats, resume checks) key on (checkpoint_id, batch_id),
         for which duplicates are idempotent.
         """
-        return self._compact_small_files(
-            "_lineage",
-            dedup_subset=["snapshot_id", "checkpoint_id", "batch_id",
-                          "bucket"],
-            sort_keys=["snapshot_id", "bucket"],
-            max_files=max_files,
-        )
-
-    def _compact_small_files(
-        self,
-        subdir: str,
-        dedup_subset: list[str],
-        sort_keys: list[str],
-        max_files: int,
-        string_cols: tuple[str, ...] = (),
-    ) -> dict:
         import pandas as pd
 
-        ldir = os.path.join(self.root, subdir)
+        ldir = os.path.join(self.root, "_lineage")
         files = sorted(glob.glob(os.path.join(ldir, "*.parquet")))
         if len(files) <= max_files:
             return {"compacted": 0, "files_before": len(files),
                     "files_after": len(files)}
         merged = pd.concat([pd.read_parquet(f) for f in files],
                            ignore_index=True)
-        merged = merged.drop_duplicates(subset=dedup_subset).sort_values(
-            sort_keys
-        )
-        for c in string_cols:
-            # an all-null string column (or one absent from older files)
-            # must not let pyarrow re-infer a non-string physical type
-            if c in merged.columns:
-                merged[c] = merged[c].astype("string")
+        merged = merged.drop_duplicates(
+            subset=["snapshot_id", "checkpoint_id", "batch_id", "bucket"]
+        ).sort_values(["snapshot_id", "bucket"])
         out = os.path.join(
             ldir, f"compacted-{int(time.time() * 1000):013d}.parquet"
         )
@@ -1804,52 +1756,11 @@ class ManifestTable:
         for f in files:
             os.remove(f)
         logger.info(
-            "compact %s: %d files -> 1 (%d rows)",
-            subdir, len(files), len(merged),
+            "compact _lineage: %d files -> 1 (%d rows)",
+            len(files), len(merged),
         )
         return {"compacted": len(files), "files_before": len(files),
                 "files_after": 1, "rows": int(len(merged))}
-
-    # ---------- export-run tracking ----------
-
-    def record_export(self, record: dict) -> dict:
-        """Record an export run next to the merge lineage (reference
-        ``exports`` table: migrations/001_initial_schema.up.sql:95-108,
-        written by internal/jobs/server.go:544-588 — id, type, status,
-        file path/size, record count, timestamps). One tiny parquet per
-        run under ``_exports/``, tmp+rename like ``_append_lineage``;
-        ``compact_exports`` bounds the file count."""
-        import pandas as pd
-
-        edir = os.path.join(self.root, "_exports")
-        os.makedirs(edir, exist_ok=True)
-        export_id = f"exp-{int(time.time() * 1000):013d}-{os.getpid()}"
-        row = {
-            "export_id": export_id,
-            "format": record.get("format"),
-            "compression": bool(record.get("compression")),
-            "rows": int(record.get("rows") or 0),
-            "file_bytes": int(record.get("file_bytes") or 0),
-            "snapshot_id": record.get("snapshot_id"),
-            "path": record.get("path"),
-            "status": record.get("status", "completed"),
-            "exported_at": record.get("exported_at")
-            or time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "mode": record.get("mode", "full"),
-            "base_snapshot_id": record.get("base_snapshot_id"),
-        }
-        out = os.path.join(edir, f"{export_id}.parquet")
-        pdf = pd.DataFrame([row])
-        # all-None columns (base_snapshot_id on a full export) must not
-        # let pyarrow infer a non-string physical type
-        for c in (
-            "export_id", "format", "snapshot_id", "path", "status",
-            "exported_at", "mode", "base_snapshot_id",
-        ):
-            pdf[c] = pdf[c].astype("string")
-        pdf.to_parquet(out + ".tmp", index=False)
-        os.replace(out + ".tmp", out)
-        return row
 
     # ---------- change-feed consumers ----------
 
@@ -1869,7 +1780,7 @@ class ManifestTable:
     ) -> dict | None:
         """Deliver the row-level change feed accumulated since this
         consumer's cursor (the subscriber half of :meth:`read_changes` —
-        how a downstream index/export job tails the table), then advance
+        how a downstream index or sync job tails the table), then advance
         the per-consumer cursor under ``_feeds/``.
 
         ``handler(feed_df, from_sid, to_sid)`` runs BEFORE the cursor
@@ -1921,30 +1832,6 @@ class ManifestTable:
             os.path.join(fdir, f"{consumer_id}.json"), json.dumps(rec)
         )
         return rec
-
-    def read_exports(self) -> DataFrame:
-        edir = os.path.join(self.root, "_exports")
-        if not glob.glob(os.path.join(edir, "*.parquet")):
-            return self.spark.createDataFrame(
-                [], T.StructType.fromDDL(EXPORT_DDL)
-            )
-        # explicit schema: rows written before a column existed (e.g.
-        # mode/base_snapshot_id) clip to null instead of breaking the union
-        return self.spark.read.schema(
-            T.StructType.fromDDL(EXPORT_DDL)
-        ).parquet(edir)
-
-    def compact_exports(self, max_files: int = 64) -> dict:
-        return self._compact_small_files(
-            "_exports",
-            dedup_subset=["export_id"],
-            sort_keys=["export_id"],
-            max_files=max_files,
-            string_cols=(
-                "export_id", "format", "snapshot_id", "path", "status",
-                "exported_at", "mode", "base_snapshot_id",
-            ),
-        )
 
     def expire_lineage(self, older_than: str) -> dict:
         """Drop lineage rows with ``committed_at`` before ``older_than``
@@ -2220,7 +2107,6 @@ class ManifestTable:
         cluster_sort: tuple[str, ...] | None = None,
         overlap_threshold: float = 0.25,
         keep_snapshots: int = 3,
-        sidecar_max_files: int = 64,
         max_bucket_logs: int = 8,
     ) -> dict:
         """One stat-driven maintenance pass (the table doctor). EVERY
@@ -2239,7 +2125,8 @@ class ManifestTable:
           overlapping sort-column ranges (fresh clustered files are
           disjoint by construction, so overlap = interleaving = lost
           pruning power);
-        * snapshot expiry and lineage / export sidecar compaction.
+        * snapshot expiry and ``_lineage/`` compaction (more than 64
+          files fold into one; see ``compact_lineage``).
 
         Returns a report of what ran and why. Reference analog: the
         scheduled cleanup job, /root/reference/internal/jobs/
@@ -2329,28 +2216,7 @@ class ManifestTable:
 
         self.expire_snapshots(keep=keep_snapshots)
         report["snapshots"] = len(self.snapshots())
-        report["lineage_compact"] = self.compact_lineage(sidecar_max_files)
-        report["exports_compact"] = self.compact_exports(sidecar_max_files)
-        # Bloom sidecar upkeep: once a table has opted in (a sidecar
-        # exists), keep it current for the SAME columns — build the
-        # delta for files written since, and fold small parts
-        if os.path.isdir(os.path.join(self.root, "_blooms")):
-            from .bloom import _read_sidecar, build_bloom, compact_bloom
-
-            side = _read_sidecar(self)
-            if side is not None:
-                cur_cols = {f.name for f in (self.schema() or T.StructType())}
-                bcols = [
-                    r["col"]
-                    for r in side.select("col").distinct().collect()
-                    # a rollback past a column add drops it from the schema
-                    if r["col"] in cur_cols
-                ]
-                if bcols:
-                    report["bloom"] = build_bloom(self, sorted(bcols))
-                    report["bloom"]["compact"] = compact_bloom(
-                        self, max_files=16
-                    )
+        report["lineage_compact"] = self.compact_lineage()
         return report
 
     def expire_snapshots(self, keep: int = 3, older_than=None):
@@ -2466,8 +2332,11 @@ class ManifestTable:
         ``bucket_expr`` to confirm it lives in the bucket directory it
         was filed under (``misrouted`` — a wrong-modulus write would
         make merges silently miss it). Returns ``{"ok": bool, ...}``;
-        scan cost ∝ table key columns, metadata cost ∝ manifest JSON."""
-        m = self.manifest(snapshot_id)
+        scan cost ∝ table key columns, metadata cost ∝ manifest JSON.
+
+        An unknown ``snapshot_id`` raises ``ValueError``, as ``read``
+        does. A head that names a missing manifest is reported in
+        ``broken_chain``."""
         out: dict = {
             "ok": True,
             "missing_files": [],
@@ -2478,6 +2347,14 @@ class ManifestTable:
             "misrouted": 0,
             "files_checked": 0,
         }
+        try:
+            m = self._manifest_at(snapshot_id)
+        except ValueError:
+            if snapshot_id is not None:
+                raise
+            out["broken_chain"].append(self.current_snapshot_id())
+            out["ok"] = False
+            return out
         if m is None:
             return out
         fm = m.get("file_meta", {})

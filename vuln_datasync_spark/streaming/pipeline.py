@@ -260,7 +260,6 @@ def run_stream(
     dlq_dir: str | None = None,
     contract_rules: list[dict] | None = None,
     contract_mode: str = "reject",
-    pool: str | None = None,
     envelope_format: str | None = None,
     envelope_dlq_dir: str | None = None,
 ):
@@ -284,13 +283,6 @@ def run_stream(
 
     ``on_batch(batch_id, lineage)`` is a test hook (e.g. simulate a crash
     between sink commit and checkpoint commit).
-
-    ``pool``: route this stream's micro-batch jobs to a weighted FAIR
-    scheduler pool (full/incremental/export, weights 6/3/1 — the
-    reference's Asynq queue priorities, internal/jobs/server.go:64-79).
-    The session must be built with ``get_spark(fair_pools=True)``; each
-    foreachBatch invocation re-asserts the pool on its own thread, since
-    Spark resolves pools from a thread-local property.
     """
     if os.path.exists(os.path.join(table_root, "_table.json")):
         table = ManifestTable(spark, table_root)
@@ -316,10 +308,6 @@ def run_stream(
         stream = reader.parquet(changelog_dir)
 
     def process(batch_df: DataFrame, batch_id: int):
-        if pool is not None:
-            from ..session import set_job_pool
-
-            set_job_pool(spark, pool)
         if envelope_format is not None:
             from ..sources.debezium import parse_debezium, parse_maxwell
 
